@@ -1,11 +1,11 @@
-"""Single-evaluation threshold gates for expensive expressions.
+"""Plan-shape gates: single-evaluation filters and codegen'd pair joins.
 
-The optimizer duplicates a deterministic expression that is both
-PROJECTED and FILTERED on: ``.select(e.alias("x")).filter("x >= t")``
-becomes a Filter(e >= t) *below* the Project(e) — two evaluations per
-surviving row — and when ``e`` references both sides of a join the
-pushed predicate lands in the join condition, so every candidate pair
-pays one evaluation and every survivor pays two (guide §4.4 describes
+``filter_once`` — the optimizer duplicates a deterministic expression
+that is both PROJECTED and FILTERED on:
+``.select(e.alias("x")).filter("x >= t")`` becomes a Filter(e >= t)
+*below* the Project(e) — two evaluations per surviving row — and when
+``e`` references both sides of a join the pushed predicate lands in
+the join condition, so every candidate pair pays one evaluation and every survivor pays two (guide §4.4 describes
 the UDF case; interpreted HOF folds and array_intersect hit the same
 rule — CLAUDE.md rule 18c). Spark offers no optimizer barrier short
 of materialization, and checkpointing a wide pair stream costs more
@@ -32,6 +32,10 @@ emits a NULL row and the IS NOT NULL filter removes it.
 Rule-10 note (HOF lambdas): the lambda here is a trivial comparison
 over a 1-element array; every current caller is oracle-checked, so a
 recurrence of the HOF-corruption class would surface as a red row.
+
+``pair_join`` — the cross product of a stream with a multi-row
+broadcast side, kept inside whole-stage codegen (its docstring has
+the reason).
 """
 
 from __future__ import annotations
@@ -40,47 +44,6 @@ from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def const_join_key(col_name: str) -> Column:
-    """A constant-0 join key DERIVED from an attribute:
-    ``pmod(xxhash64(col), 1)``.
-
-    The rule-23 constant-key pair join (``lit(1)`` on both sides)
-    no longer plans as a BroadcastHashJoin: FoldablePropagation
-    substitutes the literal into the equi-condition, ConstantFolding
-    collapses ``1 = 1`` to ``true``, and the join degrades to a
-    BroadcastNestedLoopJoin whose pair generation runs interpreted
-    (measured r11: every lit-key site in the repo planned BNLJ).
-    An attribute-DERIVED constant is not foldable, so the key
-    survives and pair generation stays inside whole-stage codegen.
-    xxhash64 never returns NULL (null inputs hash to the seed), so
-    the key is 0 for every row — the join is exactly the cross
-    product, rows with NULL ids included.
-    """
-    return F.pmod(F.xxhash64(col_name), F.lit(1))
-
-
-def project_once(
-    df: DataFrame, expr: Column, alias: str
-) -> DataFrame:
-    """Expose ``expr`` as column ``alias`` behind a Generate
-    barrier, exactly one output row per input row.
-
-    ``explode_outer(array(expr))`` emits the value (a 1-element
-    array is never empty; a NULL value rides as [NULL] → one NULL
-    row, so NULLs are preserved). Downstream predicates on the
-    column reference a generator OUTPUT attribute, which no
-    pushdown rule can rewrite in terms of the input — so a consumer
-    ``.filter(col >= t)`` can no longer be pushed below the
-    projection into a join condition, re-evaluating ``expr`` per
-    candidate (the rule-18c class ``filter_once`` removes when the
-    threshold is known here; this is the producer-side variant for
-    operators whose CALLERS choose the threshold).
-    """
-    return df.select(
-        "*", F.explode_outer(F.array(expr)).alias(alias)
-    )
 
 
 def filter_once(
@@ -101,3 +64,42 @@ def filter_once(
         F.explode_outer(F.filter(F.array(expr), pred)).alias(alias),
     )
     return gated.filter(F.col(alias).isNotNull())
+
+
+def pair_join(
+    stream: DataFrame, build: DataFrame, spread: int | None = None
+) -> DataFrame:
+    """Every (stream row, build row) pair — the cross product — as a
+    codegen'd BroadcastHashJoin with ``build`` broadcast. Output
+    columns are the stream's followed by the build's.
+
+    Why not ``crossJoin`` (CLAUDE.md rule 23): with a multi-row
+    build side it plans a BroadcastNestedLoopJoin, which whole-stage
+    codegen excludes, so pair generation and every per-pair
+    expression above it run interpreted (measured 8.1s vs 1.1s for
+    the same cosine fold over 3.2M pairs). Why not a ``lit(1)`` key
+    on both sides: FoldablePropagation substitutes the literal into
+    the equi-condition, ConstantFolding collapses ``1 = 1`` to
+    ``true``, and the join degrades to the same BNLJ (measured r11:
+    every lit-key site in the repo planned BNLJ). The private key
+    here is ``pmod(xxhash64(c), 1)`` over each side's first column:
+    DERIVED from an attribute, so not foldable, and 0 for every row
+    because xxhash64 never returns NULL (null inputs hash to the
+    seed) — the join is exactly the cross product, rows with NULL
+    ids included.
+
+    ``spread`` round-robins the keyed stream into that many
+    partitions before the join: the expansion multiplies rows
+    without re-splitting them, and AQE sizes the stage from the
+    pre-expansion bytes (rule 3).
+    """
+
+    def keyed(df: DataFrame) -> DataFrame:
+        return df.withColumn(
+            "__k", F.pmod(F.xxhash64(df.columns[0]), F.lit(1))
+        )
+
+    left = keyed(stream)
+    if spread is not None:
+        left = left.repartition(spread)
+    return left.join(F.broadcast(keyed(build)), "__k").drop("__k")

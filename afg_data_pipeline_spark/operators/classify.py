@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from afg_data_pipeline_spark.functions.gate import pair_join
+
 GRID = 1_000_000_000  # rule-1c ln() quantization grid (1e9)
 
 # NB/AUC integer accumulations use DECIMAL(38,0) explicitly — NOT
@@ -179,30 +181,12 @@ def _scored_pairs(
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     vocab = token_model.select("token").distinct()
-    # Constant-key BroadcastHashJoin, NOT crossJoin: BNLJ is
-    # excluded from whole-stage codegen, so the doc-token x class
-    # pair stream (corpus-token-sized x |classes|) would evaluate
-    # every downstream decimal expression interpreted (the
-    # brute_force_topk_streamed lesson, measured 8x there).
-    # The key must be attribute-DERIVED (const_join_key, r11): the
-    # original lit(1) key was constant-folded out of the
-    # equi-condition and the join silently degraded back to BNLJ.
-    from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
-    )
-
+    # doc-token x class fan-out (corpus-token-sized x |classes|)
     per_class = (
-        doc_tokens.join(F.broadcast(vocab), "token", "left_semi")
-        .withColumn("__k", const_join_key("token"))
-        .join(
-            F.broadcast(
-                class_model.select(
-                    "cls", "floor_q"
-                ).withColumn("__k", const_join_key("cls"))
-            ),
-            "__k",
+        pair_join(
+            doc_tokens.join(F.broadcast(vocab), "token", "left_semi"),
+            class_model.select("cls", "floor_q"),
         )
-        .drop("__k")
         .join(F.broadcast(token_model), ["token", "cls"], "left")
         .select(
             "_id",

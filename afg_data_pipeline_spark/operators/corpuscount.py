@@ -49,16 +49,18 @@ Knobs (env):
 The probe runs eagerly at plan-construction time (two small jobs:
 the sampled count and, on the hot path, the checkpoint) — the same
 contract as ``ngram_jaccard_dups``'s tier probe; engaging the hot
-path is announced on stdout, never silent.
+path is announced on the package logger (stderr, never stdout;
+``functions/tier.announce``), never silent.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+from afg_data_pipeline_spark.functions.tier import announce, budget
 
 __all__ = ["corpus_key_count"]
 
@@ -117,14 +119,10 @@ def corpus_key_count(
     ``build_stream`` must be a pure function of its input frame —
     it is invoked on the sample and on the full frame.
     """
-    if hot_rows is None:
-        hot_rows = int(
-            os.environ.get("AFG_CORPUS_COUNT_HOT_ROWS", str(2_000_000))
-        )
-    if probe_fraction is None:
-        probe_fraction = float(
-            os.environ.get("AFG_CORPUS_COUNT_PROBE_FRACTION", "0.02")
-        )
+    hot_rows = budget("CORPUS_COUNT_HOT_ROWS", 2_000_000, hot_rows)
+    probe_fraction = budget(
+        "CORPUS_COUNT_PROBE_FRACTION", 0.02, probe_fraction
+    )
 
     plain_window = F.count(F.lit(1)).over(Window.partitionBy(key_col))
 
@@ -162,10 +160,11 @@ def corpus_key_count(
     if not hot_keys:
         return build_stream(base).withColumn(out_col, plain_window)
 
-    print(
-        f"corpus_key_count: hot-key gate engaged for {len(hot_keys)} "
-        f"candidate key(s) over threshold ~{hot_rows} rows "
-        "(counts via broadcast join; cold keys stay on the window)"
+    announce(
+        "corpus_key_count: hot-key gate engaged (counts via "
+        "broadcast join; cold keys stay on the window)",
+        candidate_keys=len(hot_keys),
+        AFG_CORPUS_COUNT_HOT_ROWS=hot_rows,
     )
     spark = base.sparkSession
     stream = build_stream(base).localCheckpoint(eager=True)

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from afg_data_pipeline_spark.functions.tier import announce, gate
 from afg_data_pipeline_spark.operators.text import shingle_expr, tokens
 
 
@@ -49,6 +50,17 @@ def exact_dedup(
             F.min(id_col).alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
+    )
+
+
+def _pair_count(df: DataFrame, key) -> DataFrame:
+    """1-row Σ_key C(n, 2) in exact decimal: the pairs a self-join
+    on ``key`` would generate."""
+    n = F.col("__n").cast("decimal(38,0)")
+    return (
+        df.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .agg(F.sum((n * (n - 1)) / 2).alias("p"))
     )
 
 
@@ -224,7 +236,7 @@ def minhash_lsh_candidates(
         "doc_id_b",
     )
     # Shape note (measured, r11): a producer-side Generate barrier
-    # here (project_once of the intersection size, so consumer
+    # here (explode_outer(array(intersection size)), so consumer
     # thresholds can't push into the verify join) was tried and
     # REVERTED — it taxes the non-filtering consumers for the
     # filtering ones' benefit (minhash_near_dup 1.49 -> 1.84s,
@@ -277,7 +289,8 @@ def ngram_jaccard_pairs(
     Before the self-join, the per-group pair count is computed with
     one cheap aggregate; if it exceeds ``max_pairs`` (default env
     ``AFG_NGRAM_JACCARD_MAX_PAIRS``, 20M), the operator announces
-    the tier switch (never silent) and delegates candidate
+    the tier switch on the package logger (stderr, never stdout;
+    ``functions/tier.announce``) and delegates candidate
     generation to banded MinHash LSH (same n-gram shingles, same
     exact-Jaccard verification on the banded collisions, restricted
     to same-group pairs) — a high-probability-recall SUBSET of the
@@ -296,35 +309,16 @@ def ngram_jaccard_pairs(
     oracle run at a scale that crosses the budget red-rows on the
     tier value itself, not on silently missing pairs.
     """
-    import os
-
-    if max_pairs is None:
-        max_pairs = int(
-            os.environ.get("AFG_NGRAM_JACCARD_MAX_PAIRS", "20000000")
-        )
-    n_pairs_row = (
-        df.groupBy(F.col(group_col))
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .agg(
-            F.sum(
-                (
-                    F.col("__n").cast("decimal(38,0)")
-                    * (F.col("__n").cast("decimal(38,0)") - 1)
-                )
-                / 2
-            ).alias("p")
-        )
-        .collect()[0]
-    )
-    n_pairs = int(n_pairs_row["p"] or 0)
-    if n_pairs > max_pairs:
-        print(
-            f"ngram_jaccard_pairs: {n_pairs} exact candidate pairs "
-            f"exceed the AFG_NGRAM_JACCARD_MAX_PAIRS budget "
-            f"({max_pairs}); falling back to banded MinHash "
-            f"candidates (same shingles, exact Jaccard on banded "
-            f"collisions, same-group only) — a high-recall subset"
-        )
+    if gate(
+        "NGRAM_JACCARD_MAX_PAIRS",
+        _pair_count(df, F.col(group_col)),
+        20_000_000,
+        max_pairs,
+        event="ngram_jaccard_pairs: exact candidate pairs exceed "
+        "the budget; falling back to banded MinHash candidates "
+        "(same shingles, exact Jaccard on banded collisions, "
+        "same-group only) — a high-recall subset",
+    ).over:
         cand = minhash_lsh_candidates(
             df,
             id_col=id_col,
@@ -1062,8 +1056,9 @@ def winnow_candidate_pairs(
     enumeration. ``max_fp_docs`` caps the join width of ubiquitous
     fingerprints (boilerplate: a fingerprint in b docs costs b²
     pairs) exactly like minhash_lsh_candidates' bucket cap —
-    excluded fingerprints are announced via the cheap count
-    aggregate the cap already requires, never silently at scale
+    excluded fingerprints are announced on the package logger
+    (stderr) via the cheap count aggregate the cap already
+    requires, never silently at scale
     (callers pre-strip exact dups, which collide on EVERY
     fingerprint by construction).
 
@@ -1084,11 +1079,13 @@ def winnow_candidate_pairs(
             cnts.filter(F.col("__n") > max_fp_docs).count()
         )
         if n_excluded:
-            print(
-                "winnow_candidate_pairs: excluded "
-                f"{n_excluded} fingerprints shared by more than "
-                f"{max_fp_docs} docs (boilerplate cap; pairs from "
-                "those fingerprints are not enumerated)"
+            announce(
+                "winnow_candidate_pairs: excluded fingerprints "
+                "shared by more than max_fp_docs docs (boilerplate "
+                "cap; pairs from those fingerprints are not "
+                "enumerated)",
+                fingerprints=n_excluded,
+                max_fp_docs=max_fp_docs,
             )
         ok = cnts.filter(F.col("__n") <= max_fp_docs).select("fp")
         fps = fps.join(ok, "fp", "left_semi")
@@ -1409,8 +1406,9 @@ def prefix_filter_jaccard_pairs(
     (env AFG_PREFIX_JACCARD_MAX_CAND, default 2M — measured: a
     12.8M-candidate exact pass costs 76s at sf0.1 while the LSH
     tier answers in seconds) the operator
-    ANNOUNCES the switch to banded-MinHash candidates with the
-    same exact count verification. The active tier is in the
+    ANNOUNCES the switch on the package logger (stderr) and moves
+    to banded-MinHash candidates with the same exact count
+    verification. The active tier is in the
     output schema (``tier``: 'exact' | 'lsh_subset') — the oracle
     pins 'exact', so a budget-crossing run red-rows on the tier
     value, never on silently missing pairs. The probe is EAGER
@@ -1477,37 +1475,16 @@ def prefix_filter_jaccard_pairs(
         F.col("rn") <= F.col("sz") - ceil_t_sz + 1
     ).select("id", "sz", "s")
 
-    import os
-
-    if max_cand is None:
-        max_cand = int(
-            os.environ.get(
-                "AFG_PREFIX_JACCARD_MAX_CAND", "2000000"
-            )
-        )
-    bound_row = (
-        prefix.groupBy("s")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .agg(
-            F.sum(
-                (
-                    F.col("__n").cast("decimal(38,0)")
-                    * (F.col("__n").cast("decimal(38,0)") - 1)
-                )
-                / 2
-            ).alias("p")
-        )
-        .collect()[0]
-    )
-    bound = int(bound_row["p"] or 0)
-    if bound > max_cand:
-        print(
-            f"prefix_filter_jaccard_pairs: prefix candidate bound "
-            f"{bound} exceeds AFG_PREFIX_JACCARD_MAX_CAND "
-            f"({max_cand}); falling back to banded MinHash "
-            f"candidates with the same exact count verification "
-            f"— a high-recall subset (tier='lsh_subset')"
-        )
+    if gate(
+        "PREFIX_JACCARD_MAX_CAND",
+        _pair_count(prefix, "s"),
+        2_000_000,
+        max_cand,
+        event="prefix_filter_jaccard_pairs: prefix candidate bound "
+        "exceeds the budget; falling back to banded MinHash "
+        "candidates with the same exact count verification — a "
+        "high-recall subset (tier='lsh_subset')",
+    ).over:
         lsh = minhash_lsh_candidates(
             docs,
             id_col=id_col,
@@ -1728,15 +1705,14 @@ def containment_pairs(
     TIERED CONTRACT (the prefix_jaccard pattern): the candidate
     bound Σ_s prefix_count(s)·df(s) is probed with one cheap
     aggregate; above ``max_cand`` (env AFG_CONTAINMENT_MAX_CAND,
-    default 2M) the operator ANNOUNCES a switch to joining only on
+    default 5M) the operator ANNOUNCES, on the package logger
+    (stderr), a switch to joining only on
     prefix shingles below an ADAPTIVE global-df cap — the largest
     log2(df) bucket boundary whose cumulative candidate mass fits
     the budget (lowest bucket always kept). Every emitted pair
     stays exactly verified, but recall becomes a documented subset
     (tier='rare_gram_subset'); the oracle pins tier='exact', so a
     budget crossing red-rows rather than silently losing pairs."""
-    import os
-
     from pyspark.sql import Window
 
     from afg_data_pipeline_spark.operators.text import (
@@ -1796,11 +1772,7 @@ def containment_pairs(
         & (F.col("rn") <= F.col("sz") - ceil_t_sz + 1)
     ).select("id", "sz", "s", "df")
 
-    if max_cand is None:
-        max_cand = int(
-            os.environ.get("AFG_CONTAINMENT_MAX_CAND", "5000000")
-        )
-    bound_row = (
+    bound = (
         prefix.groupBy("s")
         .agg(
             F.count(F.lit(1)).alias("__n"),
@@ -1812,11 +1784,19 @@ def containment_pairs(
                 * F.col("__df").cast("decimal(38,0)")
             ).alias("p")
         )
-        .collect()[0]
     )
-    bound = int(bound_row["p"] or 0)
+    probe = gate(
+        "CONTAINMENT_MAX_CAND",
+        bound,
+        5_000_000,
+        max_cand,
+        event="containment_pairs: candidate bound exceeds the "
+        "budget; joining only rare prefix shingles — pairs stay "
+        "exactly verified, recall is a documented subset "
+        "(tier='rare_gram_subset')",
+    )
     tier = "exact"
-    if bound > max_cand:
+    if probe.over:
         # ADAPTIVE df cap: per-log2(df)-bucket candidate mass
         # (<= 64 rows collected), then keep ascending buckets while
         # the cumulative candidate count fits the budget — the cap
@@ -1841,18 +1821,15 @@ def containment_pairs(
         cum = 0
         cap_b = None
         for r in sorted(hist, key=lambda r: r["b"]):
-            if cap_b is not None and cum + int(r["w"]) > max_cand:
+            if cap_b is not None and cum + int(r["w"]) > probe.budget:
                 break
             cum += int(r["w"])
             cap_b = r["b"]
         df_cap = 2 ** (cap_b + 1) - 1
-        print(
-            f"containment_pairs: candidate bound {bound} exceeds "
-            f"AFG_CONTAINMENT_MAX_CAND ({max_cand}); joining only "
-            f"prefix shingles with df <= {df_cap} "
-            f"(~{cum} candidates) — pairs stay exactly verified, "
-            f"recall is a documented subset "
-            f"(tier='rare_gram_subset')"
+        announce(
+            "containment_pairs: rare-gram df cap chosen",
+            df_cap=df_cap,
+            candidates=cum,
         )
         prefix = prefix.filter(F.col("df") <= df_cap)
         tier = "rare_gram_subset"

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from afg_data_pipeline_spark.functions.gate import pair_join
+
 _DEC = "decimal(18,6)"
 
 
@@ -54,27 +56,7 @@ def gravity_flows(
         F.col(lat_col).alias("lat_d"),
         F.col(lon_col).alias("lon_d"),
     )
-    # Constant-key BroadcastHashJoin, NOT crossJoin (rule 23): a
-    # multi-row broadcast build plans a BroadcastNestedLoopJoin
-    # whose zone² pair generation is interpreted; the
-    # attribute-derived key (const_join_key — lit(1) keys
-    # constant-fold back to a BNLJ) keeps the distance/flow
-    # expressions inside whole-stage codegen.
-    from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
-    )
-
-    pairs = (
-        o.withColumn("__k", const_join_key("origin"))
-        .join(
-            F.broadcast(
-                d.withColumn("__k", const_join_key("dest"))
-            ),
-            "__k",
-        )
-        .drop("__k")
-        .filter(F.col("origin") != F.col("dest"))
-    )
+    pairs = pair_join(o, d).filter(F.col("origin") != F.col("dest"))
     # J5/F10: euclidean distance on centroid coords (the reference
     # uses scipy distance_matrix on lat/lon pairs, nb:323).
     dist = F.sqrt(

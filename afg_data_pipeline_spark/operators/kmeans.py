@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from afg_data_pipeline_spark.functions.tier import gate
+
 #: fixed-point grid for coordinates (1e-6 — matches tfidf.QUANT)
 QUANT = 1_000_000
 #: non-negativity shift for floor-division portability; must exceed
@@ -125,12 +127,7 @@ def kmeans_assign(
         cid: list(row["qarr"]) for cid, row in enumerate(seeds)
     }
 
-    import os
-
-    literal_max_k = int(
-        os.environ.get("AFG_KMEANS_LITERAL_MAX_K", "64")
-    )
-    use_numpy = k > literal_max_k
+    use_numpy = gate("KMEANS_LITERAL_MAX_K", k, 64).over
 
     def with_cluster(cents_now: dict[int, list[int]]):
         """(frame + d_<cid> columns + cluster + dist_q) — each

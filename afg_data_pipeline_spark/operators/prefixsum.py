@@ -36,6 +36,8 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from afg_data_pipeline_spark.functions.tier import gate
+
 __all__ = ["sharded_cumsum"]
 
 
@@ -88,8 +90,6 @@ def sharded_cumsum(
     are bit-identical — this is a physical-plan choice from
     measured stats, the AQE idea applied where AQE can't see.
     """
-    import os
-
     parts = list(partition_cols)
     if materialize_input:
         df = df.localCheckpoint(eager=True)
@@ -103,13 +103,11 @@ def sharded_cumsum(
         F.max(okey).alias("__max_k"),
         F.count(F.lit(1)).alias("__cnt"),
     ).localCheckpoint(eager=True)
-    max_group = bounds.agg(F.max("__cnt")).collect()[0][0] or 0
-    plain_cap = int(
-        os.environ.get(
-            "AFG_CUMSUM_PLAIN_MAX_GROUP_ROWS", str(8_000_000)
-        )
-    )
-    if max_group <= plain_cap:
+    if not gate(
+        "CUMSUM_PLAIN_MAX_GROUP_ROWS",
+        bounds.agg(F.max("__cnt")),
+        8_000_000,
+    ).over:
         w = (
             Window.partitionBy(*parts)
             .orderBy(order_col)

@@ -24,6 +24,9 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from afg_data_pipeline_spark.functions.gate import pair_join
+from afg_data_pipeline_spark.functions.tier import gate
+
 # Left-to-right double fold: float*float products are exact in
 # double, and the sequential fold order is part of the operator's
 # contract — DuckDB's list_aggregate(..., 'sum') evaluates the same
@@ -62,39 +65,17 @@ def brute_force_topk(
     # Norms computed ONCE per vector before the pair expansion —
     # inside it each candidate row would re-run both 64-term norm
     # folds (the dot is the only per-pair work left).
-    # Constant-key BroadcastHashJoin, NOT crossJoin: BNLJ is
-    # excluded from whole-stage codegen, so the fold over the
-    # pair stream would evaluate interpreted (measured 8.1s vs
-    # 1.1s over 3.2M pairs — see brute_force_topk_streamed).
-    # The key must be attribute-DERIVED (const_join_key, r11): the
-    # original lit(1) key was constant-folded out of the
-    # equi-condition and the join silently degraded back to BNLJ.
-    from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
-    )
-
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-        )
-        .withColumn("qn", norm_decimal("qv"))
-        .withColumn("__k", const_join_key("query_id"))
-    )
-    c = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
-        )
-        .withColumn("cn", norm_decimal("cv"))
-        .withColumn("__k", const_join_key("neighbor_id"))
-    )
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+    ).withColumn("qn", norm_decimal("qv"))
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("cv"),
+    ).withColumn("cn", norm_decimal("cv"))
     par = q.sparkSession.sparkContext.defaultParallelism
-    pairs = (
-        q.repartition(par)
-        .join(F.broadcast(c), "__k")
-        .drop("__k")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
+    pairs = pair_join(q, c, spread=par).filter(
+        F.col("query_id") != F.col("neighbor_id")
     )
     cosine = dot_decimal("qv", "cv") / (
         F.col("qn") * F.col("cn")
@@ -435,28 +416,12 @@ def ivf_assign(
     row_number — centroid counts are small by construction (IVF
     nlist << corpus), so this is a map-side-only pass.
     """
-    # Constant-key BroadcastHashJoin, NOT crossJoin (rule 23):
-    # BNLJ is excluded from whole-stage codegen, so the per-pair
-    # squared-L2 fold over the corpus x centroid stream — the
-    # index-build hot pass — would evaluate interpreted. The key
-    # must be attribute-DERIVED (const_join_key, r11): the original
-    # lit(1) key was constant-folded out of the equi-condition and
-    # the join silently degraded back to BNLJ.
-    from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
-    )
-
     c = centroids.select(
         F.col("centroid_id"), F.col("centroid").alias("cv")
-    ).withColumn("__k", const_join_key("centroid_id"))
-    par = df.sparkSession.sparkContext.defaultParallelism
-    pairs = (
-        df.select(F.col(id_col), F.col(vec_col).alias("v"))
-        .repartition(par)
-        .withColumn("__k", const_join_key(id_col))
-        .join(F.broadcast(c), "__k")
-        .drop("__k")
     )
+    par = df.sparkSession.sparkContext.defaultParallelism
+    stream = df.select(F.col(id_col), F.col(vec_col).alias("v"))
+    pairs = pair_join(stream.repartition(par), c)
     # squared L2 = |v|^2 - 2 v.c + |c|^2; the fold computes it
     # directly as sum of squared diffs (deterministic double fold).
     d2 = F.expr(
@@ -641,27 +606,17 @@ def binary_hamming_topk(
     funnel is hamming-topk (cheap, recall<1) then exact-cosine
     re-rank of the survivors (brute_force_topk on the candidate
     set)."""
-    # Constant-key BroadcastHashJoin, NOT crossJoin (rule 23) —
-    # keeps the XOR+bit_count stream inside whole-stage codegen.
-    # Key derived from an attribute (const_join_key, r11): lit(1)
-    # keys constant-fold back to a BNLJ.
-    from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
-    )
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         binarize_code(vec_col, dim).alias("qc"),
-    ).withColumn("__k", const_join_key("query_id"))
+    )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         binarize_code(vec_col, dim).alias("cc"),
-    ).withColumn("__k", const_join_key("neighbor_id"))
+    )
     par = q.sparkSession.sparkContext.defaultParallelism
     pairs = (
-        q.repartition(par)
-        .join(F.broadcast(c), "__k")
-        .drop("__k")
+        pair_join(q, c, spread=par)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "hamming",
@@ -781,15 +736,10 @@ def exact_rerank_topk(
 
     The corpus never self-joins on either path: cost is
     |candidates|, not |corpus|² (the whole point of the funnel)."""
-    import os
-
     cand = candidates.select(
         "query_id", "neighbor_id"
     ).localCheckpoint(eager=True)
-    lean_cap = int(
-        os.environ.get("AFG_RERANK_LEAN_MAX_CAND", str(100_000))
-    )
-    if cand.count() <= lean_cap:
+    if not gate("RERANK_LEAN_MAX_CAND", cand.count(), 100_000).over:
         vecs = vectors.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("v"),
@@ -907,28 +857,16 @@ def brute_force_topk_streamed(
     Output and values are BIT-IDENTICAL to brute_force_topk (same
     fold order, same tie-break) — only the physical plan differs.
     """
-    from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
-    )
-
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("qv"),
-        )
-        .withColumn("qn", norm_decimal("qv"))
-        .withColumn("__k", const_join_key("query_id"))
-    )
-    c = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("cv"),
-        )
-        .withColumn("cn", norm_decimal("cv"))
-        .withColumn("__k", const_join_key("neighbor_id"))
-    )
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("qv"),
+    ).withColumn("qn", norm_decimal("qv"))
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("cv"),
+    ).withColumn("cn", norm_decimal("cv"))
     scored = (
-        c.join(F.broadcast(q), "__k")
+        pair_join(c, q)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",

@@ -22,6 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from afg_data_pipeline_spark.functions.gate import pair_join
+from afg_data_pipeline_spark.functions.tier import gate
+
 
 def nearest_neighbor_assign(
     left: DataFrame,
@@ -47,17 +50,12 @@ def nearest_neighbor_assign(
     ``nearest_neighbor_bucketed`` / ``nearest_neighbor_grid2d``,
     which share this output contract.
     """
-    import os
-
-    limit = int(
-        os.environ.get("AFG_NN_BRUTE_MAX_RIGHT_ROWS", "100000")
-    )
-    n_right = right.count()
-    if n_right > limit:
+    guard = gate("NN_BRUTE_MAX_RIGHT_ROWS", right.count(), 100_000)
+    if guard.over:
         raise ValueError(
             f"nearest_neighbor_assign is a broadcast cross join: "
-            f"right side has {n_right} rows, over the "
-            f"AFG_NN_BRUTE_MAX_RIGHT_ROWS guard ({limit}); use "
+            f"right side has {guard.stat} rows, over the "
+            f"AFG_NN_BRUTE_MAX_RIGHT_ROWS guard ({guard.budget}); use "
             "nearest_neighbor_grid2d (2-D), nearest_neighbor_1d / "
             "nearest_neighbor_bucketed (1-D) for right sides at scale"
         )
@@ -66,28 +64,8 @@ def nearest_neighbor_assign(
     # cross join multiplies rows without re-splitting them. A cheap
     # round-robin of the *input* rows parallelizes the O(L×R)
     # distance evaluation across all cores/executors.
-    # Constant-key BroadcastHashJoin, NOT crossJoin (rule 23):
-    # BNLJ is excluded from whole-stage codegen, so the per-pair
-    # distance expression would evaluate interpreted. The key must
-    # be attribute-DERIVED (const_join_key, r11): a lit(1) key is
-    # constant-folded out of the equi-condition and the join
-    # silently degrades back to BNLJ.
-    from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
-    )
-
     par = left.sparkSession.sparkContext.defaultParallelism
-    pairs = (
-        left.repartition(par)
-        .withColumn("__k", const_join_key(left_key))
-        .join(
-            F.broadcast(
-                right.withColumn("__k", const_join_key(right_key))
-            ),
-            "__k",
-        )
-        .drop("__k")
-    )
+    pairs = pair_join(left.repartition(par), right)
     d = distance.alias("__dist")
     ordkey = F.struct(distance.alias("d"), F.col(right_key).alias("k"))
     aggs = [

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from afg_data_pipeline_spark.functions.gate import pair_join
+
 QUANT = 10**6  # the repo-wide 1e-6 component grid
 CODE_MAX = 255
 
@@ -121,27 +123,9 @@ def sq8_topk(
         q = sq8_codes(
             queries, bounds, id_col, vec_col, "query_id"
         ).withColumnRenamed("codes", "qcodes")
-    # Constant-key BroadcastHashJoin, NOT crossJoin (rule 23): the
-    # multi-row query broadcast planned a BroadcastNestedLoopJoin
-    # whose pair generation is interpreted; the attribute-derived
-    # key (const_join_key, r11 — lit(1) keys constant-fold back to
-    # a BNLJ) keeps the zip_with distance stream inside whole-stage
-    # codegen.
-    from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
-    )
-
     par = corpus.sparkSession.sparkContext.defaultParallelism
     pairs = (
-        c.withColumn("__k", const_join_key("neighbor_id"))
-        .repartition(par)
-        .join(
-            F.broadcast(
-                q.withColumn("__k", const_join_key("query_id"))
-            ),
-            "__k",
-        )
-        .drop("__k")
+        pair_join(c, q, spread=par)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",

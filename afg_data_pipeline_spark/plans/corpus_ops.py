@@ -4500,26 +4500,10 @@ def ks_two_sample_drift(
         .withColumn("cum_g", F.sum("cv").over(wg).cast("bigint"))
         .select("v", "cum_g")
     )
-    # sources x distinct-values completion: constant-key equi-join
-    # (BroadcastHashJoin, codegen'd) — a multi-row-build crossJoin
-    # would plan an interpreted BroadcastNestedLoopJoin over the
-    # value-distinct stream (rule 23). Key derived from an
-    # attribute (const_join_key, r11): lit(1) keys constant-fold
-    # back to a BNLJ.
-    from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
-    )
+    # sources x distinct-values completion
+    from afg_data_pipeline_spark.functions.gate import pair_join
 
-    grid = (
-        vals.withColumn("__k", const_join_key("v"))
-        .join(
-            F.broadcast(
-                ns.withColumn("__k", const_join_key("source"))
-            ),
-            "__k",
-        )
-        .drop("__k")
-    )
+    grid = pair_join(vals, ns)
     ws = (
         Window.partitionBy("source")
         .orderBy(F.col("v").asc())

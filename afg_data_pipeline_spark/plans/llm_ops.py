@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from afg_data_pipeline_spark.functions.tier import budget, gate
 from afg_data_pipeline_spark.io import read_star_table
 from afg_data_pipeline_spark.operators import text as TX
 from afg_data_pipeline_spark.operators.dedup import (
@@ -1379,30 +1380,21 @@ def lsh_recall_audit(
         F.col("doc_id").alias("doc_id_b"),
         F.col("s").alias("sb"),
     )
-    # Constant-key BHJ + single-evaluation gate (r11): the plain
+    # pair_join + single-evaluation gate (r11): the plain
     # non-equi join planned a BNLJ with the pushed j-filter in its
     # condition — 4 interpreted array_intersect evaluations per
     # pair (2 in the condition's ratio, 2 more in the projection).
-    # The equi-join keeps pair generation codegen'd; the gate
-    # carries the intersection SIZE (the ratio textually embeds it
-    # twice) and rebuilds j with identical int arithmetic + double
-    # division, so values are bit-equal.
+    # The gate carries the intersection SIZE (the ratio textually
+    # embeds it twice) and rebuilds j with identical int arithmetic
+    # + double division, so values are bit-equal.
     from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
         filter_once,
+        pair_join,
     )
 
     inter = F.size(F.array_intersect("sa", "sb"))
-    pairs = (
-        a.withColumn("__k", const_join_key("doc_id_a"))
-        .join(
-            F.broadcast(
-                b.withColumn("__k", const_join_key("doc_id_b"))
-            ),
-            "__k",
-        )
-        .drop("__k")
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
+    pairs = pair_join(a, b).filter(
+        F.col("doc_id_a") < F.col("doc_id_b")
     )
 
     def j_of(i):
@@ -3933,57 +3925,37 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     past that, use the LSH path and keep this as its sampled
     recall anchor.
     """
-    import os
-
+    from afg_data_pipeline_spark.functions.gate import pair_join
     from afg_data_pipeline_spark.operators.similarity import (
         dot_decimal,
         norm_decimal,
     )
 
     emb = read_star_table(spark, "embeddings", sf_dir)
-    limit = int(os.environ.get("AFG_BRUTE_PAIRS_MAX_ROWS", "100000"))
-    n = emb.count()
-    if n > limit:
+    guard = gate("BRUTE_PAIRS_MAX_ROWS", emb.count(), 100_000)
+    if guard.over:
         raise ValueError(
-            f"embedding_near_dup is all-pairs: {n} rows exceeds the "
-            f"AFG_BRUTE_PAIRS_MAX_ROWS guard ({limit}); use "
-            "embedding_near_dup_lsh for corpora at scale"
+            f"embedding_near_dup is all-pairs: {guard.stat} rows "
+            f"exceeds the AFG_BRUTE_PAIRS_MAX_ROWS guard "
+            f"({guard.budget}); use embedding_near_dup_lsh for "
+            "corpora at scale"
         )
     par = spark.sparkContext.defaultParallelism
-    # norms once per vector, not per O(n²) pair
-    from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
-    )
-
-    # Constant-key BroadcastHashJoin, NOT crossJoin (rule 23): BNLJ
-    # generates pairs interpreted (per-pair JoinedRow + condition
-    # eval outside codegen) and its pushed join condition carried
-    # the full dot fold — interpreted once per O(n²) pair and again
-    # in the projection. The key must be attribute-DERIVED
-    # (const_join_key): a lit(1) key gets constant-folded and the
-    # join degrades back to BNLJ. Measured at sf0.1 (2k vectors,
-    # 2M pairs): 1.41s orig BNLJ → 1.18s BHJ+gate, values exact.
-    a = (
-        emb.select(
-            F.col("vec_id").alias("id_a"),
-            F.col("embedding").alias("va"),
-        )
-        .withColumn("na", norm_decimal("va"))
-        .withColumn("__k", const_join_key("id_a"))
-        .repartition(par)
-    )
-    b = (
-        emb.select(
-            F.col("vec_id").alias("id_b"),
-            F.col("embedding").alias("vb"),
-        )
-        .withColumn("nb", norm_decimal("vb"))
-        .withColumn("__k", const_join_key("id_b"))
-    )
-    pairs = (
-        a.join(F.broadcast(b), "__k")
-        .drop("__k")
-        .filter(F.col("id_a") < F.col("id_b"))
+    # norms once per vector, not per O(n²) pair. pair_join instead
+    # of crossJoin: the BNLJ's pushed join condition also carried
+    # the full dot fold, interpreted once per O(n²) pair and again
+    # in the projection. Measured at sf0.1 (2k vectors, 2M pairs):
+    # 1.41s orig BNLJ → 1.18s BHJ+gate, values exact.
+    a = emb.select(
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("va"),
+    ).withColumn("na", norm_decimal("va"))
+    b = emb.select(
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vb"),
+    ).withColumn("nb", norm_decimal("vb"))
+    pairs = pair_join(a, b, spread=par).filter(
+        F.col("id_a") < F.col("id_b")
     )
     cosine = dot_decimal("va", "vb") / (
         F.col("na") * F.col("nb")
@@ -4849,8 +4821,8 @@ def containment_recall_audit_q(
     # single-evaluation gate (functions/gate.py) on the sh
     # ATTRIBUTE cannot be rewritten below the join's projection.
     from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
         filter_once,
+        pair_join,
     )
 
     a = filter_once(
@@ -4869,27 +4841,20 @@ def containment_recall_audit_q(
         F.col("__z").alias("sza"),
     )
     par = spark.sparkContext.defaultParallelism
-    # Constant-key BHJ + i-gate (the lsh_recall_audit r11 shape):
-    # the crossJoin planned a BNLJ whose pushed containment test
+    # pair_join + i-gate (the lsh_recall_audit r11 shape): the
+    # crossJoin planned a BNLJ whose pushed containment test
     # evaluated the interpreted array_intersect per (corpus × 128)
     # pair in the join condition AND per survivor in the
-    # projection; the equi-join keeps pair generation codegen'd
-    # and the gate intersects exactly once per pair.
+    # projection; the gate intersects exactly once per pair.
     truth = filter_once(
-        sh.select(
-            F.col("doc_id").alias("id_b"),
-            F.col("sh").alias("sh_b"),
-        )
-        .withColumn("__k", const_join_key("id_b"))
-        .repartition(par)
-        .join(
-            F.broadcast(
-                a.withColumn("__k", const_join_key("id_a"))
+        pair_join(
+            sh.select(
+                F.col("doc_id").alias("id_b"),
+                F.col("sh").alias("sh_b"),
             ),
-            "__k",
-        )
-        .drop("__k")
-        .filter(F.col("id_a") != F.col("id_b")),
+            a,
+            spread=par,
+        ).filter(F.col("id_a") != F.col("id_b")),
         F.size(F.array_intersect("sh_a", "sh_b")),
         lambda i: i * 5 >= F.col("sza") * 4,
         "i",
@@ -5756,11 +5721,7 @@ _LSH_PLAN_BANDINGS = ((16, 1), (8, 2), (4, 4), (2, 8))
 # Corpora at or under the cap are unchanged (rank <= cap is the
 # identity there); the sample size rides every output row as
 # sample_docs so the tier is announced, never silent.
-import os as _os
-
-_LSH_PLAN_MAX_DOCS = int(
-    _os.environ.get("AFG_LSH_PLAN_MAX_DOCS", "4096")
-)
+_LSH_PLAN_MAX_DOCS = budget("LSH_PLAN_MAX_DOCS", 4096)
 
 
 def _lsh_band_plan_oracle() -> str:

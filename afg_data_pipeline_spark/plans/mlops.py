@@ -2449,26 +2449,11 @@ def mi_feature_rank(
     nt = joint.groupBy("t").agg(
         F.sum("c1").cast("bigint").alias("n_t")
     )
-    # vocab x classes completion: constant-key equi-join, NOT
-    # crossJoin — a multi-row broadcast build plans a
-    # BroadcastNestedLoopJoin whose pair generation is interpreted
-    # (~2.4 us/pair over a vocabulary-sized stream, rule 23);
-    # the __k BroadcastHashJoin is codegen'd with identical
-    # semantics. Key derived from an attribute (const_join_key,
-    # r11): lit(1) keys constant-fold back to a BNLJ.
-    from afg_data_pipeline_spark.functions.gate import (
-        const_join_key,
-    )
+    # vocab x classes completion
+    from afg_data_pipeline_spark.functions.gate import pair_join
 
     grid = (
-        nt.withColumn("__k", const_join_key("t"))
-        .join(
-            F.broadcast(
-                nydoc.withColumn("__k", const_join_key("lang"))
-            ),
-            "__k",
-        )
-        .drop("__k")
+        pair_join(nt, nydoc)
         .join(joint, ["t", "lang"], "left")
         .select(
             "t",

@@ -61,7 +61,7 @@ class TestCorpusKeyCount:
         )
         assert _rows(got) == _rows(_plain(docs))
 
-    def test_gate_engages_and_is_bit_identical(self, docs, capsys):
+    def test_gate_engages_and_is_bit_identical(self, docs, caplog):
         # hot_rows=100, full probe: "HOT" (300 rows) must be routed
         # off the window; output identical to the plain form.
         got = corpus_key_count(
@@ -72,13 +72,12 @@ class TestCorpusKeyCount:
             hot_rows=100,
             probe_fraction=1.0,
         )
-        out = capsys.readouterr().out
-        assert "hot-key gate engaged" in out
+        assert "hot-key gate engaged" in caplog.text
         plan = got._jdf.queryExecution().executedPlan().toString()
         assert "Union" in plan
         assert _rows(got) == _rows(_plain(docs))
 
-    def test_sampled_probe_detects_spread_hot_key(self, docs, capsys):
+    def test_sampled_probe_detects_spread_hot_key(self, docs, caplog):
         # The at-scale shape: a 0.3 sample of 60 docs still sees
         # ~90 "HOT" rows, clearing the conservative cut
         # (100 * 0.3 * 0.25 = 7.5 -> 7); uniques never qualify.
@@ -90,7 +89,7 @@ class TestCorpusKeyCount:
             hot_rows=100,
             probe_fraction=0.3,
         )
-        assert "hot-key gate engaged" in capsys.readouterr().out
+        assert "hot-key gate engaged" in caplog.text
         assert _rows(got) == _rows(_plain(docs))
 
     def test_probe_disabled_forces_plain_window(self, docs):

@@ -71,6 +71,56 @@ def test_collect_boundary_lint():
     assert lint() == []
 
 
+def _env_key(node):
+    """The key node of an ``*.environ.get(k)`` / ``*.environ[k]`` /
+    ``getenv(k)`` read, else None."""
+    import ast
+
+    if isinstance(node, ast.Subscript):
+        if ast.unparse(node.value).endswith("environ"):
+            return node.slice
+    elif isinstance(node, ast.Call) and node.args:
+        if ast.unparse(node.func).endswith(("environ.get", "getenv")):
+            return node.args[0]
+    return None
+
+
+def test_no_print_and_budgets_only_via_tier():
+    """No ``print(`` in the package (stdout is the bench/driver result
+    channel; announcements go through functions/tier.announce), and no
+    ``AFG_*`` environment read outside functions/tier.py (budgets go
+    through gate/budget). sinks/jdbc.py's ``AFG_DB_*`` credentials are
+    deployment settings, not budgets, and are exempt."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "afg_data_pipeline_spark"
+    errors = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            where = f"{rel}:{getattr(node, 'lineno', '?')}"
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "print"
+            ):
+                errors.append(f"{where}: print(")
+            key = _env_key(node)
+            if key is None or rel == "functions/tier.py":
+                continue
+            if rel == "sinks/jdbc.py":
+                literal = isinstance(key, ast.Constant)
+                if not literal or key.value.startswith("AFG_DB_"):
+                    continue
+            if not isinstance(key, ast.Constant):
+                errors.append(f"{where}: env read of a computed name")
+            elif str(key.value).startswith("AFG_"):
+                errors.append(f"{where}: {key.value} read outside tier")
+    assert errors == []
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

@@ -1,4 +1,5 @@
-"""functions/gate.filter_once — the r11 single-evaluation threshold
+"""functions/gate: ``pair_join`` is the exact cross product as a hash
+join, and ``filter_once`` is the r11 single-evaluation threshold
 gate: row-set equivalence with the naive select+filter form (incl.
 NULL and NaN inputs, Spark's NaN-largest comparison semantics), and
 the plan property it exists for (the gated expression appears ONCE,
@@ -94,11 +95,9 @@ class TestFilterOnce:
         assert ra == rb
 
 
-class TestConstJoinKey:
+class TestPairJoin:
     def test_cross_product_including_null_ids(self, spark):
-        from afg_data_pipeline_spark.functions.gate import (
-            const_join_key,
-        )
+        from afg_data_pipeline_spark.functions.gate import pair_join
 
         left = spark.createDataFrame(
             [(1,), (2,), (None,)], "id long"
@@ -106,16 +105,8 @@ class TestConstJoinKey:
         right = spark.createDataFrame(
             [(10,), (None,)], "rid long"
         )
-        joined = (
-            left.withColumn("__k", const_join_key("id"))
-            .join(
-                F.broadcast(
-                    right.withColumn("__k", const_join_key("rid"))
-                ),
-                "__k",
-            )
-            .drop("__k")
-        )
+        joined = pair_join(left, right, spread=2)
+        assert joined.columns == ["id", "rid"]
         got = sorted(
             ((r["id"], r["rid"]) for r in joined.collect()),
             key=str,

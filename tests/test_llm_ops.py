@@ -920,7 +920,7 @@ class TestNgramJaccardTiering:
         )
 
     def test_fallback_is_subset_and_keeps_planted_dups(
-        self, spark, capsys
+        self, spark, caplog
     ):
         from afg_data_pipeline_spark.operators.dedup import (
             ngram_jaccard_pairs,
@@ -939,8 +939,7 @@ class TestNgramJaccardTiering:
             docs, group_col="lang", threshold=0.5, max_pairs=10
         ).collect()
         fb = {(r.id_a, r.id_b): r.jaccard for r in fb_rows}
-        out = capsys.readouterr().out
-        assert "falling back to banded MinHash" in out
+        assert "falling back to banded MinHash" in caplog.text
         # The tier is part of the schema: subset mode is marked.
         assert {r.tier for r in fb_rows} == {"lsh_subset"}
         # subset with identical jaccard values
@@ -950,7 +949,7 @@ class TestNgramJaccardTiering:
         assert (1, 2) in fb
         assert (1, 3) in fb
 
-    def test_under_budget_is_exact_and_silent(self, spark, capsys):
+    def test_under_budget_is_exact_and_silent(self, spark, caplog):
         from afg_data_pipeline_spark.operators.dedup import (
             ngram_jaccard_pairs,
         )
@@ -959,7 +958,7 @@ class TestNgramJaccardTiering:
         out = ngram_jaccard_pairs(
             docs, group_col="lang", threshold=0.5, max_pairs=10**6
         ).collect()
-        assert "falling back" not in capsys.readouterr().out
+        assert "falling back" not in caplog.text
         assert {(r.id_a, r.id_b) for r in out} >= {(1, 2), (1, 3)}
         assert {r.tier for r in out} == {"exact"}
 

@@ -25,6 +25,39 @@ def plan_of(df) -> str:
     )
 
 
+def multi_row_bnljs(df) -> list[str]:
+    """BroadcastNestedLoopJoins in the executed plan whose broadcast
+    side is not provably <= 1 row — the interpreted pair generation
+    CLAUDE.md rule 23 forbids. The proof is the ``maxRows`` of the
+    first node below the broadcast that links back to a logical
+    plan (a keyless aggregate proves 1 row; a pair_join build side
+    proves nothing, so a BNLJ there fails)."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.executedPlan()
+
+    def kids(node):
+        cs = node.children()
+        return [cs.apply(i) for i in range(cs.size())]
+
+    bad, todo = [], [root]
+    while todo:
+        node = todo.pop()
+        todo.extend(kids(node))
+        if node.nodeName() != "BroadcastNestedLoopJoin":
+            continue
+        right = node.buildSide().toString() == "BuildRight"
+        build = node.right() if right else node.left()
+        link = build.logicalLink()
+        while not link.isDefined() and len(kids(build)) == 1:
+            build = kids(build)[0]
+            link = build.logicalLink()
+        rows = link.get().maxRows() if link.isDefined() else None
+        if rows is None or not rows.isDefined() or rows.get() > 1:
+            bad.append(node.toString().splitlines()[0])
+    return bad
+
+
 class TestPushdownAndPruning:
     def test_flagship_pushes_filters_to_scan(self, spark):
         df = REGISTRY["flagship_filter_project"].fn(spark, SF_DIR)
@@ -354,15 +387,16 @@ class TestRound4PlanShapes:
 
 class TestContinuation4Shapes:
     def test_nb_score_joins_are_broadcast(self, spark):
-        plan = plan_of(
-            REGISTRY["nb_classify_lang"].fn(spark, SF_DIR)
-        )
+        df = REGISTRY["nb_classify_lang"].fn(spark, SF_DIR)
+        plan = plan_of(df)
         # the vocabulary semi-join, class fan-out and term join all
         # broadcast the vocabulary-sized model — the corpus side
-        # never shuffles for them; no cartesian anywhere
+        # never shuffles for them; no cartesian anywhere; the class
+        # fan-out is a pair_join, so the only BNLJs left broadcast
+        # keyless 1-row aggregates
         assert "CartesianProduct" not in plan
         assert plan.count("BroadcastHashJoin") >= 2
-        assert "BroadcastNestedLoopJoin" in plan  # |classes| fan-out
+        assert multi_row_bnljs(df) == []
 
     def test_pareto_window_runs_on_distinct_prices(self, spark):
         plan = plan_of(
@@ -403,3 +437,63 @@ class TestContinuation4Shapes:
         # broadcast — corpus rows never shuffle for either
         assert plan.count("BroadcastHashJoin") >= 2
         assert "CartesianProduct" not in plan
+
+
+class TestPairJoinsStayHashJoins:
+    """Guard for functions/gate.pair_join: if Spark ever folds the
+    derived key ``pmod(xxhash64(c), 1)`` the way it folds ``lit(1)``,
+    these pair expansions fall back to multi-row BNLJs."""
+
+    # one registered query behind each pair_join caller
+    @pytest.mark.parametrize(
+        "name",
+        [
+            "ann_cosine_topk",  # similarity.brute_force_topk
+            "ann_ivf_topk",  # similarity.ivf_assign
+            "hamming_topk",  # similarity.binary_hamming_topk
+            "ann_sq8_topk",  # sq.sq8_topk
+            "gravity_flows",  # gravity.gravity_flows
+            "lsh_recall_audit",
+            "embedding_near_dup",
+            "containment_recall_audit",
+            "mi_feature_rank",
+            "ks_two_sample_drift",
+        ],
+    )
+    def test_registered_pair_joins(self, spark, name):
+        df = REGISTRY[name].fn(spark, SF_DIR)
+        assert "BroadcastHashJoin" in plan_of(df)
+        assert multi_row_bnljs(df) == []
+
+    def test_unregistered_callers(self, spark):
+        # brute_force_topk_streamed's only query (mmr) checkpoints
+        # its output; nearest_neighbor_assign has no query
+        from afg_data_pipeline_spark.io import read_star_table
+        from afg_data_pipeline_spark.operators.similarity import (
+            brute_force_topk_streamed,
+        )
+        from afg_data_pipeline_spark.operators.spatial import (
+            nearest_neighbor_assign,
+        )
+
+        emb = read_star_table(spark, "embeddings", SF_DIR)
+        left = spark.range(5).select(F.col("id").alias("lid"))
+        right = spark.range(3).select(F.col("id").alias("rid"))
+        for df in (
+            brute_force_topk_streamed(
+                emb.filter(F.col("vec_id") < 4), emb, k=3
+            ),
+            nearest_neighbor_assign(
+                left, right, "lid", "rid", F.col("lid") - F.col("rid")
+            ),
+        ):
+            assert "BroadcastHashJoin" in plan_of(df)
+            assert multi_row_bnljs(df) == []
+
+    def test_helper_flags_multi_row_build_only(self, spark):
+        left = spark.range(10)
+        many = spark.range(3).select(F.col("id").alias("b"))
+        one = spark.range(3).agg(F.count(F.lit(1)).alias("n"))
+        flagged = multi_row_bnljs(left.crossJoin(F.broadcast(many)))
+        assert len(flagged) == 1
+        assert multi_row_bnljs(left.crossJoin(F.broadcast(one))) == []
