@@ -253,21 +253,14 @@ def _coverage_order(names: list[str]) -> list[str]:
         "gravity_flows": 11,
         "mmr_diversified_topk": 11,
         "prefix_jaccard_pairs": 11,
-        # r11 batch 3: minhash verify producer-side Generate
-        # barrier (intersection size computed once; consumer
-        # thresholds can no longer push into the verify join) —
-        # values bit-identical, plans changed:
+        # r11 batch 3 — values bit-identical, plans changed:
+        # incremental_near_dup verifies through the filter_once gate
+        # in streaming/incremental_dedup.py; corpus_minhash_similarity
+        # calls minhash_lsh_candidates, whose signature changed
+        # (threshold=):
         "incremental_near_dup": 11,
         "corpus_minhash_similarity": 11,
     }
-
-    # (r10) The r7-era force_first override is retired: it existed
-    # to guarantee that round's FIXED red rows re-entered the
-    # window, which happened in r7/r8; keeping it pinned two
-    # by-design rows-only queries into 3 of the 50 slots every
-    # round. The ordering heuristic below already leads with
-    # never-checked queries (raw == 0 sorts first).
-    force_first: list[str] = []
 
     seen: dict[str, list[int]] = {n: [] for n in names}
     raw: dict[str, int] = {n: 0 for n in names}
@@ -296,8 +289,6 @@ def _coverage_order(names: list[str]) -> list[str]:
     return sorted(
         names,
         key=lambda n: (
-            n not in force_first,
-            force_first.index(n) if n in force_first else 0,
             len(seen[n]),
             raw[n],
             max(seen[n], default=0),

@@ -35,12 +35,11 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from afg_data_pipeline_spark.plans import REGISTRY  # noqa: E402
-from afg_data_pipeline_spark.session import get_session  # noqa: E402
+from tools.measure import REPS, best_of, session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -293,22 +292,13 @@ def _new_session():
     # JSON lines in a captured stdout tail — PERF_r10's per-query map
     # came back empty because of it. Quiet the bar; timing methodology
     # is unchanged (the bar is a driver-side render thread).
-    spark = get_session(
+    return session(
         "afg-bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    # Warm the JVM/codegen once so the first measured query doesn't
-    # pay session startup (min-of-N absorbs most of it anyway).
-    spark.range(1000).count()
-    return spark
 
 
 def main() -> None:
     names = [n for n in HEADLINE if n in REGISTRY]
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    # Sub-second plans are the most contention-sensitive (BENCH_r04
-    # inflated untouched classics 1.4-8x); give them extra chances.
-    fast_reps = int(os.environ.get("SPARK_GRAFT_BENCH_FAST_REPS", "5"))
     group = int(os.environ.get("SPARK_GRAFT_BENCH_GROUP", "20"))
 
     spark = _new_session()
@@ -321,30 +311,7 @@ def main() -> None:
             spark.stop()
             spark = _new_session()
         q = REGISTRY[name]
-        # Min of N: the first execution of a plan pays whole-stage
-        # codegen JIT (~0.5-2s); the minimum measures the plan.
-        # Convergence reps (r7->r8): multi-job iterative plans
-        # (ANN ladders, fixpoint graph ops) JIT dozens of codegen
-        # units, so their minimum keeps DESCENDING past 3 reps —
-        # measured ann_pq_topk rep curve 8.84/3.30/3.00/2.75/2.56s;
-        # min-of-3 landed anywhere in 2.6-4.3s across sessions and
-        # produced the r7 "+13% drift" red herring. Keep repping
-        # (up to fast_reps) while the best improves >5%.
-        best = float("inf")
-        runs = 0
-        improved = True
-        while (
-            runs < reps
-            or (best < 1.0 and runs < fast_reps)
-            or (improved and runs < fast_reps)
-        ):
-            t0 = time.time()
-            df = q.fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            improved = dt < best * 0.95
-            best = min(best, dt)
-            runs += 1
+        best, _ = best_of(lambda: q.fn(spark, SF_DIR), REPS)
         timings[name] = round(best, 3)
         spark.catalog.clearCache()
         print(json.dumps({"q": name, "s": timings[name]}), flush=True)

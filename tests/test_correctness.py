@@ -121,6 +121,83 @@ def test_no_print_and_budgets_only_via_tier():
     assert errors == []
 
 
+def test_one_timing_loop():
+    """bench.py and tools/*.py time queries only through
+    tools/measure.py: elsewhere no ``"noop"`` sink literal and no
+    time.time/time.perf_counter call inside a loop body
+    (check_correctness.py's per-query progress timer takes no minimum
+    and is allowed by name). And no ``sys.path.insert`` of a string
+    literal: a tool imports the checkout it sits in, so an A/B run
+    from a second tree times that tree's code."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    loops = (
+        ast.For,
+        ast.AsyncFor,
+        ast.While,
+        ast.ListComp,
+        ast.SetComp,
+        ast.DictComp,
+        ast.GeneratorExp,
+    )
+    clocks = {"time.time", "time.perf_counter", "perf_counter"}
+    errors = []
+    for path in [root / "bench.py", *sorted(root.glob("tools/*.py"))]:
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        in_loop = {
+            id(n)
+            for loop in ast.walk(tree)
+            if isinstance(loop, loops)
+            for n in ast.walk(loop)
+        }
+        for node in ast.walk(tree):
+            where = f"{rel}:{getattr(node, 'lineno', '?')}"
+            if rel != "tools/measure.py":
+                if isinstance(node, ast.Constant) and node.value == "noop":
+                    errors.append(f"{where}: noop sink outside measure")
+                if (
+                    isinstance(node, ast.Call)
+                    and id(node) in in_loop
+                    and ast.unparse(node.func) in clocks
+                    and rel != "tools/check_correctness.py"
+                ):
+                    errors.append(f"{where}: timing loop outside measure")
+            if (
+                isinstance(node, ast.Call)
+                and ast.unparse(node.func) == "sys.path.insert"
+                and any(isinstance(a, ast.Constant) for a in node.args[1:])
+            ):
+                errors.append(f"{where}: sys.path.insert of a literal")
+    assert errors == []
+
+
+def test_coverage_order_leads_with_never_checked():
+    """queries() lists every registered name once, and a name with no
+    CORRECTNESS_r*.json row (never driver-checked) sorts ahead of
+    every checked one."""
+    import json
+    import pathlib
+
+    import __spark_entry__ as e
+
+    root = pathlib.Path(e.__file__).resolve().parent
+    checked = set()
+    for path in root.glob("CORRECTNESS_r*.json"):
+        checked |= set(json.loads(path.read_text()))
+    order = e._coverage_order(list(REGISTRY))
+    assert sorted(order) == sorted(REGISTRY)
+    assert list(e.queries()) == order
+    # "zz_" names sort last by name, so leading proves the rule
+    fresh = ["zz_never_checked_a", "zz_never_checked_b"]
+    order = e._coverage_order(list(REGISTRY) + fresh)
+    assert order[:2] == fresh
+    flags = [n in checked for n in order]
+    assert flags == sorted(flags)
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

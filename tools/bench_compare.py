@@ -6,41 +6,25 @@ scheduling overhead per query, so at sf0.1 the ratio is dominated
 by constants for sub-second queries — the per-query table tells us
 where real plan work (vs overhead) is needed.
 
+Reps and the DuckDB consume policy are tools/measure.compare's.
+
 Usage: python tools/bench_compare.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
-import json
+import os
 import sys
-import time
 
-import duckdb
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-sys.path.insert(0, "/root/repo")
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from afg_data_pipeline_spark.plans import REGISTRY  # noqa: E402
+from tools.measure import compare, duck, session  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     only = set(sys.argv[2:])
-
-    from afg_data_pipeline_spark.plans import REGISTRY
-    from afg_data_pipeline_spark.session import get_session
-
-    spark = get_session("bench-compare")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).count()  # JVM warm-up
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
 
     # Oracles whose DuckDB side is the quadratic form the Spark
     # operator exists to avoid - correctness still runs at sf0.01
@@ -55,50 +39,15 @@ def main() -> None:
         "containment_near_dup",
         "containment_dedup_keep",
     }
-    rows = []
-    for name, q in sorted(REGISTRY.items()):
-        if only and name not in only:
-            continue
-        if q.oracle is None or name in skip_oracle:
-            continue
-        # min of 3 after a warm-up: first execution pays whole-stage
-        # codegen JIT (observed 5s cold vs 0.5s warm on identical
-        # plans); min isolates the steady-state plan cost.
-        spark_s = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            q.fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            spark_s = min(spark_s, time.time() - t0)
-        duck_s = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            con.execute(q.oracle).fetchall()
-            duck_s = min(duck_s, time.time() - t0)
-        rows.append(
-            {
-                "query": name,
-                "spark_s": round(spark_s, 3),
-                "duck_s": round(duck_s, 3),
-                "ratio": round(spark_s / duck_s, 2)
-                if duck_s > 0
-                else None,
-            }
-        )
-        print(json.dumps(rows[-1]), flush=True)
-
-    tot_s = sum(r["spark_s"] for r in rows)
-    tot_d = sum(r["duck_s"] for r in rows)
-    print(
-        json.dumps(
-            {
-                "total_spark_s": round(tot_s, 2),
-                "total_duck_s": round(tot_d, 2),
-                "total_ratio": round(tot_s / tot_d, 2),
-            }
-        )
-    )
+    entries = [
+        (name, q.fn, q.oracle)
+        for name, q in sorted(REGISTRY.items())
+        if (not only or name in only)
+        and q.oracle is not None
+        and name not in skip_oracle
+    ]
+    spark = session("bench-compare")
+    compare(spark, duck(sf_dir), entries, sf_dir)
     spark.stop()
 
 

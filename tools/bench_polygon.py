@@ -34,10 +34,9 @@ Scenarios:
              unmodified operator (the grid prune IS its index).
 
 Usage: python tools/bench_polygon.py [N] [scenario ...]
-Env: SPARK_GRAFT_POLY_REPS (spark reps, default 3),
-     AFG_POLY_MANY_K (many-scenario layer size KxK, default 30),
-     SPARK_GRAFT_POLY_DUCK_REPS (duck reps, default 2),
+Env: AFG_POLY_MANY_K (many-scenario layer size KxK, default 30),
      AFG_POLY_DIR (parquet dir, default /tmp/afg_polygon).
+Reps are tools/measure.best_of's.
 Prints one JSON row per scenario and appends to
 $AFG_POLY_DIR/results.jsonl.
 """
@@ -47,11 +46,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-
-import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.measure import REPS, best_of, duck, session  # noqa: E402
 
 SCENARIOS = ("uniform", "boundary", "many")
 
@@ -285,19 +283,10 @@ def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000_000
     scenarios = sys.argv[2:] or list(SCENARIOS)
     outdir = os.environ.get("AFG_POLY_DIR", "/tmp/afg_polygon")
-    s_reps = int(os.environ.get("SPARK_GRAFT_POLY_REPS", "3"))
-    d_reps = int(os.environ.get("SPARK_GRAFT_POLY_DUCK_REPS", "2"))
     os.makedirs(outdir, exist_ok=True)
 
-    from afg_data_pipeline_spark.session import get_session
-
-    spark = get_session("bench-polygon")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    os.makedirs("/tmp/duck_spill", exist_ok=True)
-    con.execute("SET temp_directory='/tmp/duck_spill'")
-    con.execute("SET memory_limit='90GB'")
+    spark = session("bench-polygon")
+    con = duck(outdir, spill=True)
 
     out = []
     for scen in scenarios:
@@ -307,21 +296,13 @@ def main() -> None:
         path = os.path.join(outdir, f"points_{tag}_{n}.parquet")
         build_points(spark, scen, n, path)
 
-        spark_s, spark_rows = float("inf"), None
-        for _ in range(s_reps):
-            t0 = time.time()
-            rows = spark_rollup(spark, scen, path)
-            spark_s = min(spark_s, time.time() - t0)
-            spark_rows = sorted(tuple(r) for r in rows)
-
-        duck_s, duck_rows = float("inf"), None
+        spark_s, rows = best_of(
+            lambda: spark_rollup(spark, scen, path), REPS
+        )
+        spark_rows = sorted(tuple(r) for r in rows)
         q = duck_sql(scen, path)
-        for _ in range(d_reps):
-            t0 = time.time()
-            duck_rows = sorted(
-                tuple(r) for r in con.execute(q).fetchall()
-            )
-            duck_s = min(duck_s, time.time() - t0)
+        duck_s, rows = best_of(lambda: con.execute(q).fetchall(), 1)
+        duck_rows = sorted(tuple(r) for r in rows)
 
         # the grade is only honest if the values agree exactly
         # (zero-point polygons absent from BOTH reps' maps here —

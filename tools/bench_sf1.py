@@ -37,28 +37,24 @@ recall to ~0.76 — the familiar LSH recall/cost curve, documented
 rather than hidden.)
 
 Usage: python tools/bench_sf1.py [outdir] [query ...]
-Env: SPARK_GRAFT_SF1_REPS (spark reps, default 2),
-     SPARK_GRAFT_SF1_DUCK_REPS (duckdb reps, default 1 — the sf1
-     oracles run minutes, min-of-1 is the honest affordable point),
-     SPARK_GRAFT_SFN (target scale factor, default 1: shards =
+Env: SPARK_GRAFT_SFN (target scale factor, default 1: shards =
      10·sfn copies of sf0.1 — sfn=3 and sfn=10 exist to ratio-grade
      the queries whose sf1 gap is scheduling-floor-dominated at a
      scale where DuckDB itself does >=1s of work per query; round-4
      verdict item 3).
-Writes parquet under outdir (default /tmp/afg_sf{sfn}), prints one
-JSON row per query and a total row.
+Writes parquet under outdir (default /tmp/afg_sf{sfn}); timing,
+the printed rows and the outdir/sf1_results.jsonl log are
+tools/measure.compare's.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
-import duckdb
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-sys.path.insert(0, "/root/repo")
+from tools.measure import compare, duck, session  # noqa: E402
 
 HEAVY = [  # cheap-first so partial sweeps still bank results
     "pack_token_stream",
@@ -419,52 +415,13 @@ def main() -> None:
     only = set(sys.argv[2:]) or set(HEAVY)
     src_dir = "/root/testdata/sf0.1"
     os.makedirs(out_dir, exist_ok=True)
-    s_reps = int(os.environ.get("SPARK_GRAFT_SF1_REPS", "2"))
-    d_reps = int(os.environ.get("SPARK_GRAFT_SF1_DUCK_REPS", "1"))
 
     from afg_data_pipeline_spark.plans import REGISTRY
-    from afg_data_pipeline_spark.session import get_session
 
-    results_path = os.path.join(out_dir, "sf1_results.jsonl")
-    # One run-delimiter line per invocation: the file accumulates
-    # across runs (append mode), so consumers group records by the
-    # preceding run_start stamp instead of double-counting.
-    with open(results_path, "a") as fh:
-        fh.write(
-            json.dumps(
-                {
-                    "run_start": time.strftime(
-                        "%Y-%m-%dT%H:%M:%S", time.gmtime()
-                    ),
-                    "sf": SFN,
-                    "queries": sorted(only & set(HEAVY)),
-                }
-            )
-            + "\n"
-        )
-    spark = get_session("bench-sf1")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("bench-sf1")
     build_sf1(spark, src_dir, out_dir)
 
-    con = duckdb.connect()
-    # sf1 oracles build multi-GB intermediates: cap memory below
-    # the Spark JVM's share and give DuckDB an out-of-core spill
-    # path instead of a bad_alloc death.
-    os.makedirs("/tmp/duck_spill", exist_ok=True)
-    con.execute("SET temp_directory='/tmp/duck_spill'")
-    con.execute("SET memory_limit='90GB'")
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        path = f"{out_dir}/{t}.parquet"
-        if os.path.isdir(path) and not os.path.islink(path):
-            path = f"{path}/*.parquet"
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{path}'"
-        )
-
-    rows = []
+    entries = []
     for name in HEAVY:
         if name not in only:
             continue
@@ -474,83 +431,13 @@ def main() -> None:
             fn, oracle = REGISTRY[name].fn, REGISTRY[name].oracle
         else:
             continue
-        spark_s = float("inf")
-        for _ in range(s_reps):
-            t0 = time.time()
-            fn(spark, out_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            spark_s = min(spark_s, time.time() - t0)
-        print(
-            json.dumps({"query": name, "spark_s": round(spark_s, 3)}),
-            flush=True,
-        )
-        # Tagged partial: the Spark timing is banked immediately so
-        # a sweep killed mid-oracle still records it, but consumers
-        # filtering `not r.get("partial")` never double-count
-        # against the final record below.
-        with open(results_path, "a") as fh:
-            fh.write(
-                json.dumps(
-                    {
-                        "query": name,
-                        "spark_s": round(spark_s, 3),
-                        "partial": True,
-                    }
-                )
-                + "\n"
-            )
-        duck_s = float("inf")
-        if oracle is not None and name not in ORACLE_SKIP:
-            # md5-consume wrapper: evaluates EVERY output column
-            # (count(*) would let DuckDB prune projection/window
-            # work that doesn't change cardinality — measured: the
-            # pack_token_stream oracle dropped to 0.38s because
-            # the windows were optimized away) while skipping the
-            # materialization of millions of rows into Python —
-            # the moral twin of Spark's noop sink.
-            wrapped = (
-                "SELECT min(md5(CAST(COLUMNS(*) AS VARCHAR))) "
-                f"FROM ({oracle}) __q"
-            )
-            for _ in range(d_reps):
-                t0 = time.time()
-                con.execute(wrapped).fetchall()
-                duck_s = min(duck_s, time.time() - t0)
-        with open(results_path, "a") as fh:
-            fh.write(json.dumps({
-                "query": name,
-                "spark_s": round(spark_s, 3),
-                "duck_s": round(duck_s, 3)
-                if duck_s != float("inf") else None,
-            }) + "\n")
-        rows.append(
-            {
-                "query": name,
-                "spark_s": round(spark_s, 3),
-                "duck_s": round(duck_s, 3)
-                if duck_s != float("inf")
-                else None,
-                "ratio": round(spark_s / duck_s, 2)
-                if 0 < duck_s != float("inf")
-                else None,
-            }
-        )
-        print(json.dumps(rows[-1]), flush=True)
-
-    tot_s = sum(r["spark_s"] for r in rows)
-    tot_d = sum(r["duck_s"] or 0 for r in rows)
-    print(
-        json.dumps(
-            {
-                "sf": SFN,
-                "total_spark_s": round(tot_s, 2),
-                "total_duck_s": round(tot_d, 2),
-                "total_ratio": round(tot_s / tot_d, 2)
-                if tot_d
-                else None,
-            }
-        )
+        entries.append((name, fn, None if name in ORACLE_SKIP else oracle))
+    compare(
+        spark,
+        duck(out_dir, spill=True),
+        entries,
+        out_dir,
+        log=os.path.join(out_dir, "sf1_results.jsonl"),
     )
     spark.stop()
 

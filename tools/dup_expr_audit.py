@@ -26,7 +26,7 @@ import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from afg_data_pipeline_spark.plans import REGISTRY  # noqa: E402
 from afg_data_pipeline_spark.session import get_session  # noqa: E402

@@ -1,8 +1,8 @@
 """Per-stage profiler for registered queries (optimization rounds).
 
 For each query name given:
-  * runs it through the noop sink ``reps`` times (min wall reported,
-    same methodology as bench.py),
+  * times it through tools/measure.best_of (min wall reported, same
+    methodology as bench.py),
   * writes ``plans/r10/<name>_before.txt`` (or ``_after.txt`` with
     AFG_PLAN_SUFFIX=after) with the ``explain("formatted")`` output,
   * pulls per-job / per-stage wall, shuffle bytes and task counts
@@ -19,14 +19,13 @@ import io
 import json
 import os
 import sys
-import time
 import urllib.request
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from afg_data_pipeline_spark.plans import REGISTRY  # noqa: E402
-from afg_data_pipeline_spark.session import get_session  # noqa: E402
+from tools.measure import REPS, best_of, session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PLAN_DIR = os.path.join(
@@ -48,13 +47,11 @@ def main() -> None:
     if unknown:
         print(f"unknown queries skipped: {unknown}")
     os.makedirs(PLAN_DIR, exist_ok=True)
-    reps = int(os.environ.get("AFG_PROFILE_REPS", "3"))
 
-    spark = get_session("afg-profile")
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).count()
-    ui = spark.sparkContext.uiWebUrl  # e.g. http://host:4040
-    app_id = spark.sparkContext.applicationId
+    spark = session("afg-profile")
+    sc = spark.sparkContext
+    ui = sc.uiWebUrl  # e.g. http://host:4040
+    app_id = sc.applicationId
     base = f"{ui}/api/v1/applications/{app_id}"
 
     for name in names:
@@ -69,25 +66,22 @@ def main() -> None:
         ) as f:
             f.write(buf.getvalue())
 
-        best = float("inf")
-        last_run_jobs: set[int] = set()
-        for _ in range(reps):
-            run_start = {j["jobId"] for j in _api(base, "/jobs")}
-            spark.sparkContext.setJobDescription(f"profile:{name}")
-            t0 = time.time()
-            df = q.fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            spark.sparkContext.setJobDescription(None)
-            best = min(best, dt)
-            last_run_jobs = {
-                j["jobId"] for j in _api(base, "/jobs")
-            } - run_start
+        # Each rep tags its jobs with its own description, so the
+        # report below can pick out the LAST (warm) rep's jobs.
+        tags: list[str] = []
+
+        def run():
+            tags.append(f"profile:{name}:{len(tags)}")
+            sc.setJobDescription(tags[-1])
+            return q.fn(spark, SF_DIR)
+
+        best, _ = best_of(run, REPS)
+        sc.setJobDescription(None)
         spark.catalog.clearCache()
 
         # Per-job + per-stage report for the LAST (warm) repetition.
         jobs = [
-            j for j in _api(base, "/jobs") if j["jobId"] in last_run_jobs
+            j for j in _api(base, "/jobs") if j.get("description") == tags[-1]
         ]
         jobs.sort(key=lambda j: j["jobId"])
         print(f"\n=== {name}: min {best:.3f}s, {len(jobs)} jobs ===")
