@@ -57,7 +57,10 @@ def filter_once(
 
     Equivalent to ``df.withColumn(alias, expr).filter(pred(col))``
     minus the optimizer's duplicate evaluation of ``expr`` (see
-    module docstring). All existing columns are preserved.
+    module docstring), PROVIDED ``pred(NULL)`` is never TRUE (true of
+    every comparison). A predicate such as ``isNull`` diverges: the
+    gate drops a row whose ``expr`` is NULL, the naive filter keeps
+    it. All existing columns are preserved.
     """
     gated = df.select(
         "*",

@@ -1,36 +1,72 @@
-"""Connected components over an edge list — the cluster-resolution
-step of near-duplicate detection (pair list -> duplicate groups ->
-one canonical doc per group).
+"""Graph operators over edge lists: connected components (the
+cluster-resolution step of near-duplicate detection: pair list ->
+duplicate groups -> one canonical doc per group), the node/edge
+tables of the GNN graph-table contract (radius edges, degrees,
+triangles), and iterative analytics (pagerank, hits, BFS, weighted
+shortest paths, label propagation, k-core).
 
-Iterative min-label propagation: every vertex starts labeled with
-itself; each round, every vertex takes the minimum label in its
-closed neighborhood; fixpoint = components labeled by their minimum
-vertex id. Rounds needed = graph diameter, and near-dup graphs are
-shallow (clusters, not paths), so convergence is fast in practice;
-``max_iter`` bounds the pathological chain.
+Shared discipline of the iterative operators:
+- ``_undirected`` materializes the symmetrized edge list once: it
+  feeds every round's join, and without truncation each round would
+  re-run the upstream edge pipeline (MinHash candidate generation,
+  the grid-bucketed radius join) from scratch.
+- ``_iterate`` runs the rounds. It localCheckpoint()s the state on a
+  fixed cadence (its docstring has the measured reason) and, for
+  fixpoint loops, runs a cheap scalar probe after each checkpoint,
+  stopping at the first repeat. Each probe is monotone in the state
+  or a checksum of it, so early exit returns what the full unroll
+  would (min-label components states its checksum caveat).
 
-Scale notes:
-- Each round is one equi-join on vertex id + one min-aggregate —
-  both shuffle on the same key, so AQE reuses the partitioning.
-- The label frame is localCheckpoint()ed every round: iterative
-  plans otherwise stack joins into an ever-deeper lineage that
-  grows the optimizer's work quadratically and breaks past ~20
-  rounds.
-- Convergence is detected from a per-round CHECKSUM probe — two
-  independently-seeded xxhash64 label sums in one scalar
-  aggregate — not an expensive frame-vs-frame anti-join. The probe
-  is type-agnostic (numeric AND string vertex ids). It is a
-  checksum, not a proof: a cross-round collision (BOTH hash sums
-  equal while labels changed, ~2^-128) would terminate a round
-  early with unmerged components — negligible but nonzero, stated
-  honestly (a count(distinct) alternative was measured to cost an
-  extra shuffle per fixpoint round: ~0.9s/query, r7 bench).
+Each round is a handful of equi-joins and aggregates that all
+shuffle on vertex id, so AQE reuses the partitioning; nothing sorts
+globally.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _undirected(edges, src, dst, *carry, s="s", d="d"):
+    """Both directions of every edge as (``s``, ``d``, *carry),
+    localCheckpoint()ed once."""
+    return edges.select(
+        F.col(src).alias(s), F.col(dst).alias(d), *carry
+    ).unionByName(
+        edges.select(F.col(dst).alias(s), F.col(src).alias(d), *carry)
+    ).localCheckpoint()
+
+
+def _iterate(state, step, rounds, every=2, probe=None):
+    """Run ``state = step(state)`` up to ``rounds`` times; return the
+    final state.
+
+    The state is localCheckpoint()ed after every ``every``-th round
+    and after the last one. Each checkpoint costs a full job, but
+    un-truncated lineage makes re-planning superlinear — measured on
+    pagerank at sf0.1 / 10 iterations: every=1 9.0s, every=2 6.2s,
+    every=3 7.4s, every=5 14.3s. The output is bit-identical at any
+    cadence.
+
+    ``probe(state)`` runs right after each checkpoint, where the
+    frame is already materialized and the scalar job is nearly free;
+    two equal probes in a row end the loop. Fixpoint loops whose
+    round costs ~10x a probe pass ``every=1``: a sparser probe delays
+    detection by extra rounds (star components at sf0.1: probing
+    every round 5.91s vs every other round 8.52s).
+    """
+    prev = object()
+    for it in range(rounds):
+        state = step(state)
+        if (it + 1) % every == 0 or it == rounds - 1:
+            state = state.localCheckpoint()
+            if probe is not None:
+                cur = probe(state)
+                if cur == prev:
+                    break
+                prev = cur
+    return state
 
 
 def connected_components(
@@ -45,64 +81,66 @@ def connected_components(
     vertex id reachable from ``vertex``. Vertices are whatever ids
     appear in the edge list; isolated vertices (no edges) are the
     caller's concern — they are their own component trivially.
+
+    Iterative min-label propagation: every vertex starts labeled
+    with itself; each round, every vertex takes the minimum label in
+    its closed neighborhood; fixpoint = components labeled by their
+    minimum vertex id. Rounds needed = graph diameter, and near-dup
+    graphs are shallow (clusters, not paths), so convergence is fast
+    in practice; ``max_iter`` bounds the pathological chain.
+
+    Convergence is detected from a CHECKSUM probe — two
+    independently-seeded xxhash64 label sums in one scalar
+    aggregate — not an expensive frame-vs-frame anti-join. The probe
+    is type-agnostic (numeric AND string vertex ids). It is a
+    checksum, not a proof: a cross-round collision (BOTH hash sums
+    equal while labels changed, ~2^-128) would terminate a round
+    early with unmerged components — negligible but nonzero, stated
+    honestly (a count(distinct) alternative was measured to cost an
+    extra shuffle per fixpoint round: ~0.9s/query, r7 bench).
     """
-    # Materialize the symmetrized edge list ONCE: it feeds every
-    # round's join, and without truncation each iteration would
-    # re-run the upstream edge pipeline (e.g. the full MinHash
-    # candidate generation) from scratch.
-    sym = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).localCheckpoint()
+    sym = _undirected(edges, src, dst, s="a", d="b")
     labels = (
         sym.select(F.col("a").alias("vertex"))
         .distinct()
         .withColumn("component", F.col("vertex"))
         .localCheckpoint()
     )
-    prev_sum = None
-    for _ in range(max_iter):
+
+    def step(labels):
         msgs = sym.join(
             labels, sym.a == labels.vertex
         ).select(F.col("b").alias("vertex"), "component")
-        labels = (
+        return (
             labels.unionByName(msgs)
             .groupBy("vertex")
             .agg(F.min("component").alias("component"))
-            .localCheckpoint()
         )
-        # Type-agnostic fixpoint probe: sum of xxhash64(component)
-        # — works for numeric AND string vertex ids (entity
-        # resolution components are canonical NAMES). DECIMAL(38,0)
-        # accumulation: xxhash64 is uniform over ±2^63, a BIGINT
-        # sum overflows almost surely and the driver's ANSI-on
-        # session makes that a hard ARITHMETIC_OVERFLOW
-        # (CLAUDE.md rule 11) — never a bare long sum.
-        probe_row = labels.agg(
-            F.sum(
-                F.xxhash64("component").cast("decimal(38,0)")
-            ).alias("s"),
-            # cheap hardening of the checksum: a SECOND,
-            # independently-seeded hash sum in the same aggregate
-            # pass (xxhash64 of (component, 1) — different input,
-            # independent value). A terminating collision must now
-            # hit both sums simultaneously (~2^-128). Unlike a
-            # count_distinct, this adds NO extra shuffle — the r7
-            # bench measured count_distinct costing ~0.9s/query on
-            # the components family (one distinct aggregate per
-            # fixpoint round).
-            F.sum(
-                F.xxhash64("component", F.lit(1)).cast(
-                    "decimal(38,0)"
-                )
-            ).alias("s2"),
-        ).collect()[0]
-        cur_sum = (probe_row["s"], probe_row["s2"])
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
+
+    def probe(labels):
+        # Type-agnostic: sum of xxhash64(component) works for numeric
+        # AND string vertex ids (entity resolution components are
+        # canonical NAMES). DECIMAL(38,0) accumulation: xxhash64 is
+        # uniform over ±2^63, a BIGINT sum overflows almost surely
+        # and the driver's ANSI-on session makes that a hard
+        # ARITHMETIC_OVERFLOW (CLAUDE.md rule 11). The second,
+        # independently-seeded sum (xxhash64 of (component, 1))
+        # rides the same aggregate pass, so a terminating collision
+        # must hit both (~2^-128) at no extra shuffle.
+        return tuple(
+            labels.agg(
+                F.sum(
+                    F.xxhash64("component").cast("decimal(38,0)")
+                ).alias("s"),
+                F.sum(
+                    F.xxhash64("component", F.lit(1)).cast(
+                        "decimal(38,0)"
+                    )
+                ).alias("s2"),
+            ).collect()[0]
+        )
+
+    return _iterate(labels, step, max_iter, every=1, probe=probe)
 
 
 def _edge_checksum(edges: DataFrame) -> tuple:
@@ -129,7 +167,6 @@ def connected_components_star(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    probe_every: int = 1,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and
@@ -156,23 +193,7 @@ def connected_components_star(
     minima. Convergence is detected from an order-independent edge
     checksum (count + sum of xxhash64), matching the scalar-probe
     pattern of the min-label variant.
-
-    ``probe_every``: the checksum probe is a full Spark job on the
-    checkpointed edge frame, so it CAN run every N rounds; the
-    output is bit-identical at any frequency (the potential
-    function strictly decreases at every non-fixpoint step, so the
-    edge set never revisits a state — two equal probes N apart
-    imply every intervening round was already at the fixpoint, and
-    iterating at the fixpoint is the identity). Default 1, unlike
-    PageRank's checkpoint_every=2: PageRank runs a FIXED iteration
-    count, so sparser checkpoints only remove jobs, while here
-    sparser probes DELAY convergence detection by up to
-    2(N-1) extra star rounds — and a round (two shuffled
-    aggregates + join + distinct + checkpoint) costs ~10x a probe.
-    Measured at sf0.1 (min-of-3): probe_every=1 5.91s,
-    probe_every=2 8.52s.
     """
-    probe_every = max(1, int(probe_every))
     # Self-loop-free undirected edge set, canonicalized u < v.
     base = (
         edges.select(
@@ -188,9 +209,8 @@ def connected_components_star(
         .distinct()
         .localCheckpoint()
     )
-    e = base.localCheckpoint()
-    prev = None
-    for it in range(max_iter):
+
+    def step(e):
         # --- large-star ---------------------------------------
         sym = e.unionByName(
             e.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -210,7 +230,7 @@ def connected_components_star(
             F.least(F.col("u"), F.col("v")).alias("v"),
         )
         mins = oriented.groupBy("u").agg(F.min("v").alias("__m"))
-        e = (
+        return (
             oriented.join(mins, "u")
             .select(F.col("v").alias("u"), F.col("__m").alias("v"))
             .unionByName(
@@ -220,13 +240,12 @@ def connected_components_star(
             )
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint()
         )
-        if (it + 1) % probe_every == 0 or it == max_iter - 1:
-            cur = _edge_checksum(e)
-            if cur == prev:
-                break
-            prev = cur
+
+    e = _iterate(
+        base.localCheckpoint(), step, max_iter, every=1,
+        probe=_edge_checksum,
+    )
     # Fixpoint edges point every non-root vertex at its component
     # minimum; roots (the minima) carry no outgoing edge.
     pointed = e.select(
@@ -368,7 +387,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 10,
     scale: int = 10**12,
-    checkpoint_every: int = 2,
     symmetrize: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank with damping 0.85, computed in EXACT
@@ -395,9 +413,7 @@ def pagerank(
     Scale shape: each iteration is one equi-join of the edge list
     with the rank frame on src (AQE reuses the partitioning — same
     key every round) + one partial-aggregated groupBy(dst); the
-    dangling mass is a 1-row broadcast, never a collect; the rank
-    frame is localCheckpoint()ed per round to truncate lineage
-    (same discipline as connected_components above). Total work
+    dangling mass is a 1-row broadcast, never a collect. Total work
     O(iterations · |E|) with no global sort anywhere.
     """
     n = nodes.count()
@@ -407,22 +423,14 @@ def pagerank(
     # UNDIRECTED — each input edge contributes both directions,
     # matching the radius-graph use case where (id_a, id_b) is a
     # canonicalized undirected pair. Pass False for a genuinely
-    # directed graph (src -> dst only).
-    dedges = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    )
+    # directed graph (src -> dst only). Either way the edge list and
+    # degree table are materialized ONCE: they feed every iteration.
     if symmetrize:
-        dedges = dedges.unionByName(
-            edges.select(
-                F.col(dst).alias("s"), F.col(src).alias("d")
-            )
-        )
-    # Materialize the directed edge list and degree table ONCE:
-    # they feed every iteration, and without truncation each
-    # iteration's action would re-run the upstream graph
-    # construction (e.g. the grid-bucketed radius join) from
-    # scratch.
-    dedges = dedges.localCheckpoint()
+        dedges = _undirected(edges, src, dst)
+    else:
+        dedges = edges.select(
+            F.col(src).alias("s"), F.col(dst).alias("d")
+        ).localCheckpoint()
     outdeg = dedges.groupBy("s").agg(
         F.count(F.lit(1)).alias("od")
     ).localCheckpoint()
@@ -433,7 +441,8 @@ def pagerank(
     ranks = vertices.withColumn(
         "rank", F.lit(scale // n).cast("bigint")
     ).localCheckpoint()
-    for it in range(iterations):
+
+    def step(ranks):
         with_od = ranks.join(
             outdeg, ranks.vertex == outdeg.s, "left"
         )
@@ -452,7 +461,7 @@ def pagerank(
                 ).alias("contrib")
             )
         )
-        ranks = (
+        return (
             vertices
             .join(
                 contribs,
@@ -471,14 +480,8 @@ def pagerank(
                 .alias("rank"),
             )
         )
-        # truncate lineage every OTHER round: each eager
-        # localCheckpoint costs a full job, but un-truncated
-        # lineage makes re-planning superlinear — measured at
-        # sf0.1 / 10 iterations: every=1 9.0s, every=2 6.2s,
-        # every=3 7.4s, every=5 14.3s. Output is bit-identical at
-        # any frequency.
-        if (it + 1) % checkpoint_every == 0 or it == iterations - 1:
-            ranks = ranks.localCheckpoint()
+
+    ranks = _iterate(ranks, step, iterations)
     return ranks.select(
         "vertex",
         F.col("rank").alias("rank_scaled"),
@@ -508,7 +511,6 @@ def hits(
     dst: str = "dst",
     iterations: int = 5,
     scale: int = 10**12,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Kleinberg HITS (hubs & authorities) over a DIRECTED edge
     list, computed in EXACT integer arithmetic on a 1/``scale``
@@ -535,9 +537,7 @@ def hits(
     Scale shape: each half-iteration is one equi-join of the edge
     list with the score frame + one partial-aggregated groupBy; the
     normalizing total is a 1-row broadcast crossJoin, never a
-    collect. Lineage localCheckpoint()ed every ``checkpoint_every``
-    rounds (the pagerank discipline). O(iterations · |E|), no
-    global sort.
+    collect. O(iterations · |E|), no global sort.
 
     Empty-graph semantics: a zero (or absent) normalizing total —
     no edges at all, or all remaining mass stranded on sink nodes —
@@ -651,15 +651,16 @@ def hits(
                 .alias("score"),
             )
         )
-        # Mid-loop, checkpointing HUB alone truncates the whole
-        # lineage (auth feeds hub within the iteration); auth is
-        # materialized only at the end, where the final select
-        # needs both frames. Each skipped checkpoint is one saved
-        # job on the per-round scheduling floor.
+        # Not ``_iterate``: the state is two frames. Mid-loop,
+        # checkpointing HUB alone (every other round, _iterate's
+        # cadence) truncates the whole lineage, since auth feeds hub
+        # within the iteration; auth is materialized only at the
+        # end, where the final select needs both frames. Each
+        # skipped checkpoint is one saved job.
         if it == iterations - 1:
             auth = auth.localCheckpoint()
             hub = hub.localCheckpoint()
-        elif (it + 1) % checkpoint_every == 0:
+        elif (it + 1) % 2 == 0:
             hub = hub.localCheckpoint()
     return (
         auth.select(
@@ -797,6 +798,63 @@ def triangle_counts(
     )
 
 
+def _min_plus(
+    nodes, edges, source_cond, id_col, src, dst, max_iter, inc, out,
+    *carry,
+):
+    """The shared body of bfs_hop_distances and
+    weighted_shortest_paths: multi-source min-plus relaxation where
+    each edge adds ``inc`` (a Column over the edge row and ``dist``),
+    returning (vertex, ``out``) with -1 for unreached vertices.
+    ``carry`` columns ride along on the symmetrized edge list.
+
+    Each round is one frontier equi-join + one min-aggregate, both
+    shuffling on vertex id. Distances only ever decrease, so
+    (count(non-null), Σdist) is a fixpoint probe: early exit changes
+    nothing vs running all ``max_iter`` rounds, which keeps the
+    fixed-unroll DuckDB oracle bit-identical. The probe sum rides
+    DECIMAL(38,0): Σ(path weights) has no provable 2^63 bound
+    (rule 11).
+    """
+    sym = _undirected(edges, src, dst, *carry)
+    dist = nodes.select(
+        F.col(id_col).alias("vertex"),
+        F.when(source_cond, F.lit(0).cast("bigint")).alias("dist"),
+    ).localCheckpoint()
+
+    def step(dist):
+        msgs = sym.join(
+            dist.filter(F.col("dist").isNotNull()),
+            sym.s == F.col("vertex"),
+        ).select(
+            F.col("d").alias("vertex"),
+            (F.col("dist") + inc).alias("dist"),
+        )
+        return (
+            dist.unionByName(msgs)
+            .groupBy("vertex")
+            .agg(F.min("dist").alias("dist"))
+        )
+
+    def probe(dist):
+        return tuple(
+            dist.agg(
+                F.count("dist").alias("n"),
+                F.sum(
+                    F.col("dist").cast("decimal(38,0)")
+                ).alias("s"),
+            ).collect()[0]
+        )
+
+    dist = _iterate(dist, step, max_iter, probe=probe)
+    return dist.select(
+        "vertex",
+        F.coalesce(F.col("dist"), F.lit(-1).cast("bigint")).alias(
+            out
+        ),
+    )
+
+
 def bfs_hop_distances(
     nodes: DataFrame,
     edges: DataFrame,
@@ -805,68 +863,18 @@ def bfs_hop_distances(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 10,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Multi-source unweighted BFS: (vertex, hops) where hops is
     the hop count to the NEAREST vertex satisfying ``source_cond``
     (a boolean Column over ``nodes``), or -1 if unreached within
     ``max_iter`` rounds — the "distance to nearest facility /
     seed" primitive (hops-from-labeled-seed features, blast-radius
-    queries, coverage audits).
-
-    Integer-exact and engine-replayable like pagerank: each round
-    is one equi-join (frontier → neighbors, dist+1) + one
-    min-aggregate — both shuffle on vertex id, so AQE reuses the
-    partitioning. Distances only ever decrease, so
-    (count(non-null), Σdist) is a fixpoint probe (the
-    connected_components convergence idea): early exit changes
-    nothing vs running all ``max_iter`` rounds, which is what
-    keeps the fixed-unroll DuckDB oracle bit-identical. Lineage is
-    localCheckpoint-truncated every ``checkpoint_every`` rounds
-    (pagerank's measured cadence).
+    queries, coverage audits). Integer-exact and engine-replayable
+    like pagerank.
     """
-    sym = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    ).unionByName(
-        edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))
-    ).localCheckpoint()
-    dist = nodes.select(
-        F.col(id_col).alias("vertex"),
-        F.when(source_cond, F.lit(0).cast("bigint")).alias("dist"),
-    ).localCheckpoint()
-    prev_probe = None
-    for it in range(max_iter):
-        msgs = sym.join(
-            dist.filter(F.col("dist").isNotNull()),
-            sym.s == F.col("vertex"),
-        ).select(
-            F.col("d").alias("vertex"),
-            (F.col("dist") + F.lit(1)).alias("dist"),
-        )
-        dist = (
-            dist.unionByName(msgs)
-            .groupBy("vertex")
-            .agg(F.min("dist").alias("dist"))
-        )
-        if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-            dist = dist.localCheckpoint()
-            # probe only at checkpoint rounds: the frame is already
-            # materialized, so the scalar aggregate is nearly free.
-            # Hop counts are bounded by max_iter (≤ a few dozen), so
-            # the BIGINT sum is provable: n · max_iter << 2^63.
-            row = dist.agg(
-                F.count("dist").alias("n"),
-                F.sum("dist").alias("s"),
-            ).collect()[0]
-            probe = (row["n"], row["s"])
-            if probe == prev_probe:
-                break
-            prev_probe = probe
-    return dist.select(
-        "vertex",
-        F.coalesce(F.col("dist"), F.lit(-1).cast("bigint")).alias(
-            "hops"
-        ),
+    return _min_plus(
+        nodes, edges, source_cond, id_col, src, dst, max_iter,
+        F.lit(1), "hops",
     )
 
 
@@ -879,7 +887,6 @@ def weighted_shortest_paths(
     dst: str = "id_b",
     wt: str = "wt",
     max_iter: int = 10,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Multi-source WEIGHTED shortest paths (distributed
     Bellman-Ford): (vertex, dist) where dist is the minimum total
@@ -890,62 +897,11 @@ def weighted_shortest_paths(
 
     Weights MUST be exact integers (quantize irrational costs once
     per rule 1b — sqrt distances are IEEE-correctly-rounded, so
-    round(dist·10^k) is engine-portable). Each round is one
-    frontier equi-join + one min-aggregate on the vertex key (AQE
-    reuses the partitioning); distances only decrease, so the
-    (count, Σdist) pair is a fixpoint probe and early exit is
-    bit-identical to the full unroll. The probe sum rides
-    DECIMAL(38,0): unlike hop counts, Σ(path weights) has no
-    provable 2^63 bound (rule 11).
+    round(dist·10^k) is engine-portable).
     """
-    sym = edges.select(
-        F.col(src).alias("s"),
-        F.col(dst).alias("d"),
-        F.col(wt).cast("bigint").alias("w"),
-    ).unionByName(
-        edges.select(
-            F.col(dst).alias("s"),
-            F.col(src).alias("d"),
-            F.col(wt).cast("bigint").alias("w"),
-        )
-    ).localCheckpoint()
-    dist = nodes.select(
-        F.col(id_col).alias("vertex"),
-        F.when(source_cond, F.lit(0).cast("bigint")).alias(
-            "dist"
-        ),
-    ).localCheckpoint()
-    prev_probe = None
-    for it in range(max_iter):
-        msgs = sym.join(
-            dist.filter(F.col("dist").isNotNull()),
-            sym.s == F.col("vertex"),
-        ).select(
-            F.col("d").alias("vertex"),
-            (F.col("dist") + F.col("w")).alias("dist"),
-        )
-        dist = (
-            dist.unionByName(msgs)
-            .groupBy("vertex")
-            .agg(F.min("dist").alias("dist"))
-        )
-        if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-            dist = dist.localCheckpoint()
-            row = dist.agg(
-                F.count("dist").alias("n"),
-                F.sum(
-                    F.col("dist").cast("decimal(38,0)")
-                ).alias("s"),
-            ).collect()[0]
-            probe = (row["n"], row["s"])
-            if probe == prev_probe:
-                break
-            prev_probe = probe
-    return dist.select(
-        "vertex",
-        F.coalesce(F.col("dist"), F.lit(-1).cast("bigint")).alias(
-            "dist"
-        ),
+    return _min_plus(
+        nodes, edges, source_cond, id_col, src, dst, max_iter,
+        F.col("w"), "dist", F.col(wt).cast("bigint").alias("w"),
     )
 
 
@@ -956,7 +912,6 @@ def label_propagation(
     src: str = "id_a",
     dst: str = "id_b",
     rounds: int = 4,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan
     et al. 2007, deterministic variant): every vertex starts as its
@@ -973,19 +928,15 @@ def label_propagation(
     min(struct(-cnt, label)) gives the deterministic argmax with no
     window (rule 19: partial aggregation; never min_by, whose
     tie-break is arbitrary). All shuffles key on vertex id, so AQE
-    reuses the partitioning; lineage localCheckpoints every
-    ``checkpoint_every`` rounds like pagerank.
+    reuses the partitioning.
     """
-    sym = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    ).unionByName(
-        edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))
-    ).localCheckpoint()
+    sym = _undirected(edges, src, dst)
     labels = nodes.select(
         F.col(id_col).alias("vertex"),
         F.col(id_col).cast("bigint").alias("label"),
     ).localCheckpoint()
-    for it in range(rounds):
+
+    def step(labels):
         votes = (
             sym.join(
                 labels, sym.s == F.col("vertex")
@@ -1005,7 +956,7 @@ def label_propagation(
             )
             .select("v", F.col("b.label").alias("new_label"))
         )
-        labels = labels.join(
+        return labels.join(
             best, labels.vertex == best.v, "left"
         ).select(
             "vertex",
@@ -1013,9 +964,8 @@ def label_propagation(
                 "label"
             ),
         )
-        if (it + 1) % checkpoint_every == 0 or it == rounds - 1:
-            labels = labels.localCheckpoint()
-    return labels
+
+    return _iterate(labels, step, rounds)
 
 
 def kcore_membership(
@@ -1024,7 +974,6 @@ def kcore_membership(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 30,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Vertices of the k-core: the maximal subgraph where every
     vertex has degree >= k INSIDE the subgraph (Seidman 1983) —
@@ -1044,19 +993,13 @@ def kcore_membership(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    sym = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    ).unionByName(
-        edges.select(F.col(dst).alias("s"), F.col(src).alias("d"))
-    ).localCheckpoint()
-    live = sym
-    prev_n = None
-    for it in range(max_iter):
+
+    def step(live):
         deg = live.groupBy(F.col("s").alias("vertex")).agg(
             F.count(F.lit(1)).alias("degree")
         )
         keep = deg.filter(F.col("degree") >= k).select("vertex")
-        live = (
+        return (
             live.join(
                 keep.withColumnRenamed("vertex", "s"), "s",
                 "left_semi",
@@ -1066,12 +1009,11 @@ def kcore_membership(
                 "left_semi",
             )
         )
-        if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
-            live = live.localCheckpoint()
-            n = live.count()
-            if n == prev_n:
-                break
-            prev_n = n
+
+    live = _iterate(
+        _undirected(edges, src, dst), step, max_iter,
+        probe=DataFrame.count,
+    )
     return live.groupBy(F.col("s").alias("vertex")).agg(
         F.count(F.lit(1)).alias("degree")
     ).filter(F.col("degree") >= k)

@@ -174,6 +174,37 @@ def test_one_timing_loop():
     assert errors == []
 
 
+def test_one_fixpoint_loop():
+    """operators/graph.py truncates lineage inside a loop only in
+    ``_iterate``, the one fixpoint loop of the graph family, and in
+    ``hits``, whose two-frame state does not fit it (allowed by
+    name): no other top-level function may call localCheckpoint
+    inside a for/while body."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    path = root / "afg_data_pipeline_spark" / "operators" / "graph.py"
+    errors = []
+    for fn in ast.parse(path.read_text()).body:
+        if not isinstance(fn, ast.FunctionDef) or fn.name in (
+            "_iterate",
+            "hits",
+        ):
+            continue
+        for loop in ast.walk(fn):
+            if not isinstance(loop, (ast.For, ast.AsyncFor, ast.While)):
+                continue
+            for node in ast.walk(loop):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"
+                ):
+                    errors.append(f"{fn.name}:{node.lineno}")
+    assert errors == []
+
+
 def test_coverage_order_leads_with_never_checked():
     """queries() lists every registered name once, and a name with no
     CORRECTNESS_r*.json row (never driver-checked) sorts ahead of

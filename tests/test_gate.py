@@ -73,6 +73,16 @@ class TestFilterOnce:
         assert plan_of(naive).count("aggregate(") == 2
         assert plan_of(gated).count("aggregate(") == 1
 
+    def test_null_true_predicate_diverges_from_naive_filter(self, spark):
+        # the documented precondition: when pred(NULL) is TRUE the
+        # gate drops the NULL row (its IS NOT NULL filter) while the
+        # naive filter keeps it
+        df = _frame(spark)
+        naive = df.withColumn("y", F.col("x")).filter(F.col("y").isNull())
+        gated = filter_once(df, F.col("x"), lambda y: y.isNull(), "y")
+        assert [r["id"] for r in naive.collect()] == [4]
+        assert gated.collect() == []
+
     def test_quality_score_of_matches_quality_score(self, spark):
         from afg_data_pipeline_spark.operators.text import (
             quality_score,

@@ -337,36 +337,6 @@ class TestAnsiProofConvergenceProbes:
         assert a == b
         assert len(a) == len({v for e in edges for v in e})
 
-    def test_star_probe_frequency_is_bit_identical(self, spark):
-        """The every-N-rounds checksum probe (a full job per probe)
-        must not change the output: the potential function strictly
-        decreases, so the edge set never revisits a state, and
-        iterating at the fixpoint is the identity."""
-        import hashlib
-
-        from afg_data_pipeline_spark.operators.graph import (
-            connected_components_star,
-        )
-
-        edges = []
-        for i in range(120):
-            h = hashlib.md5(f"pe|{i}".encode()).digest()
-            a = int.from_bytes(h[:4], "big") % 60
-            b = int.from_bytes(h[4:8], "big") % 60
-            if a != b:
-                edges.append((a, b))
-        df = spark.createDataFrame(edges, "src long, dst long")
-        outs = [
-            sorted(
-                (r.vertex, r.component)
-                for r in connected_components_star(
-                    df, probe_every=k
-                ).collect()
-            )
-            for k in (1, 3)
-        ]
-        assert outs[0] == outs[1]
-
 
 class TestPagerankSymmetrize:
     def test_directed_differs_from_undirected(self, spark):
@@ -757,3 +727,79 @@ class TestKCore:
                     changed = True
         exp = {v: len(us) for v, us in adj.items()}
         assert self._run(spark, edges, k) == exp
+
+    def test_early_exit_equals_full_run(self, spark):
+        # 5-ring with a 4-edge tail at k=2: the tail peels one vertex
+        # per round, so the survivor count settles after round 4 and
+        # the count probe ends the max_iter=30 run early
+        ring = [(i, (i + 1) % 5) for i in range(5)]
+        tail = [(4, 5), (5, 6), (6, 7), (7, 8)]
+        short = self._run(spark, ring + tail, 2, max_iter=2)
+        a = self._run(spark, ring + tail, 2, max_iter=4)
+        b = self._run(spark, ring + tail, 2, max_iter=30)
+        assert a == b == {i: 2 for i in range(5)}
+        assert short != a
+
+
+class _Frame:
+    """Spark-free stand-in for a DataFrame state: ``rnd`` counts the
+    steps applied, and localCheckpoint() logs the round it ran at."""
+
+    def __init__(self, rnd, log, checkpointed=False):
+        self.rnd, self.log, self.checkpointed = rnd, log, checkpointed
+
+    def localCheckpoint(self):
+        self.log.append(("ckpt", self.rnd))
+        return _Frame(self.rnd, self.log, checkpointed=True)
+
+
+class TestIterate:
+    """``_iterate``'s cadence and early exit, on a fake frame."""
+
+    def _run(self, rounds, every, script=None):
+        from afg_data_pipeline_spark.operators.graph import _iterate
+
+        log = []
+        values = iter(script or ())
+
+        def probe(f):
+            log.append(("probe", f.rnd))
+            return next(values)
+
+        out = _iterate(
+            _Frame(0, log),
+            lambda f: _Frame(f.rnd + 1, log),
+            rounds,
+            every=every,
+            probe=None if script is None else probe,
+        )
+        return out, log
+
+    def test_every_two_checkpoints_even_rounds_and_last(self):
+        out, log = self._run(5, 2)
+        assert log == [("ckpt", 2), ("ckpt", 4), ("ckpt", 5)]
+        assert out.rnd == 5 and out.checkpointed
+
+    def test_probe_runs_only_after_a_checkpoint(self):
+        _, log = self._run(5, 2, script=[1, 2, 3])
+        assert log == [
+            ("ckpt", 2), ("probe", 2),
+            ("ckpt", 4), ("probe", 4),
+            ("ckpt", 5), ("probe", 5),
+        ]
+
+    def test_two_equal_probes_stop_on_checkpointed_state(self):
+        out, log = self._run(10, 1, script=[3, 2, 2, 9, 9])
+        assert log[-1] == ("probe", 3)
+        assert out.rnd == 3 and out.checkpointed
+
+    def test_every_one_checkpoints_and_probes_every_round(self):
+        _, log = self._run(4, 1, script=[1, 2, 3, 4])
+        assert log == [
+            (kind, r) for r in range(1, 5) for kind in ("ckpt", "probe")
+        ]
+
+    def test_no_probe_never_exits_early(self):
+        out, log = self._run(6, 1)
+        assert out.rnd == 6
+        assert log == [("ckpt", r) for r in range(1, 7)]
