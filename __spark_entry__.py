@@ -74,7 +74,10 @@ def _coverage_order(names: list[str]) -> list[str]:
         "train_val_test_split": 4,
         "bigram_lm_score": 4,
         "trigram_lm_score": 4,
-        "pagerank_centrality": 4,
+        # (r12: pagerank now runs small graphs in the driver-side
+        # int64 kernel of operators/graph.py — edited in place per
+        # the single-occurrence invariant; bfs / sssp / kcore below)
+        "pagerank_centrality": 12,
         # round-4 perf reworks (oracle-verified locally; pre-change
         # driver rows don't certify current code):
         "pricing_summary": 4,
@@ -260,6 +263,13 @@ def _coverage_order(names: list[str]) -> list[str]:
         # (threshold=):
         "incremental_near_dup": 11,
         "corpus_minhash_similarity": 11,
+        # r12: small graphs iterate in the driver-side int64 numpy
+        # kernels of operators/graph.py (bounded edge-list collect,
+        # createDataFrame result) — values bit-identical to the
+        # distributed path, result path changed:
+        "bfs_hop_distances": 12,
+        "weighted_sssp_dist": 12,
+        "kcore_vertices": 12,
     }
 
     seen: dict[str, list[int]] = {n: [] for n in names}

@@ -16,6 +16,15 @@ Shared discipline of the iterative operators:
   stopping at the first repeat. Each probe is monotone in the state
   or a checksum of it, so early exit returns what the full unroll
   would (min-label components states its checksum caveat).
+- Small graphs run on the driver. The checkpoint job of the edge
+  list also counts its rows. When pagerank, bfs / weighted shortest
+  paths or k-core see at most ``_LOCAL_MAX_EDGES`` of them, they
+  collect the list once through ``_local_columns`` and, given
+  non-null integer ids, run every round in exact int64 numpy with the
+  same integer formulas; the result comes back through
+  ``createDataFrame``. Larger graphs take the distributed ``_iterate``
+  path without collecting anything, and so do ineligible small ones;
+  both paths give the same rows and schema.
 
 Each round is a handful of equi-joins and aggregates that all
 shuffle on vertex id, so AQE reuses the partitioning; nothing sorts
@@ -24,18 +33,51 @@ globally.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+#: Symmetrized edge rows (two per input edge) up to which pagerank,
+#: bfs / weighted sssp and k-core iterate on the driver. A constant,
+#: not a budget: one value is in use and both paths return the same
+#: rows (tests monkeypatch it). Kernel vs distributed, 10 rounds on
+#: random graphs with rows/8 vertices, local[2] on a 4-vCPU host,
+#: collect and result frame included (pagerank / bfs / kcore): 2^14
+#: rows 0.6 / 0.5 / 0.2 s vs 4.2 / 1.5 / 1.1 s; 2^20 rows 1.9 / 2.5 /
+#: 1.7 s vs 15.0 / 10.8 / 6.6 s; 2^22 rows 8.3 / 8.5 / 7.7 s vs 53.7 /
+#: 47.7 / 54.2 s. The kernel still wins at the largest size measured,
+#: so that size is the bound. Supplier radius graphs, in these rows:
+#: sf0.1 (1,000 suppliers) 7,534 at r=500 (pagerank, bfs, sssp) and
+#: 14,846 at r=800 (k-core); 10,000 suppliers drawn like TPC-H sf1
+#: 769,252 and 1,498,934, so sf1 runs on the driver. Rows grow with
+#: the square of the supplier count: sf10 (~75M / ~150M) runs
+#: distributed.
+_LOCAL_MAX_EDGES = 1 << 22
+
+
+def _checkpoint(df):
+    """``df`` localCheckpoint()ed, and its row count. The checkpoint
+    job observes the count as it writes the blocks, so knowing the
+    size costs no job of its own."""
+    rows = Observation()
+    df = df.observe(rows, F.count(F.lit(1)).alias("n")).localCheckpoint()
+    return df, rows.get["n"]
 
 
 def _undirected(edges, src, dst, *carry, s="s", d="d"):
     """Both directions of every edge as (``s``, ``d``, *carry),
-    localCheckpoint()ed once."""
-    return edges.select(
-        F.col(src).alias(s), F.col(dst).alias(d), *carry
-    ).unionByName(
-        edges.select(F.col(dst).alias(s), F.col(src).alias(d), *carry)
-    ).localCheckpoint()
+    localCheckpoint()ed once, and its row count."""
+    return _checkpoint(
+        edges.select(
+            F.col(src).alias(s), F.col(dst).alias(d), *carry
+        ).unionByName(
+            edges.select(
+                F.col(dst).alias(s), F.col(src).alias(d), *carry
+            )
+        )
+    )
 
 
 def _iterate(state, step, rounds, every=2, probe=None):
@@ -69,6 +111,32 @@ def _iterate(state, step, rounds, every=2, probe=None):
     return state
 
 
+def _local_columns(df, *cols):
+    """``cols`` of ``df`` as int64 numpy arrays from one
+    ``limit(_LOCAL_MAX_EDGES + 1)`` collect, or None when the frame
+    holds more than ``_LOCAL_MAX_EDGES`` rows or a column is not a
+    null-free integer (Arrow hands a null-bearing integer column over
+    as float64). The kernels call it only after the edge count has
+    passed the bound; it bounds their vertex-side collect as well."""
+    pdf = df.select(*cols).limit(_LOCAL_MAX_EDGES + 1).toPandas()
+    if len(pdf) > _LOCAL_MAX_EDGES or any(
+        t.kind != "i" for t in pdf.dtypes
+    ):
+        return None
+    return [
+        pdf.iloc[:, i].to_numpy(np.int64) for i in range(len(cols))
+    ]
+
+
+def _local_frame(spark, fields, *cols):
+    """The kernels' result: ``cols`` under ``fields``, the distributed
+    path's output fields."""
+    return spark.createDataFrame(
+        pd.DataFrame({f.name: c for f, c in zip(fields, cols)}),
+        StructType(fields),
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -99,7 +167,7 @@ def connected_components(
     honestly (a count(distinct) alternative was measured to cost an
     extra shuffle per fixpoint round: ~0.9s/query, r7 bench).
     """
-    sym = _undirected(edges, src, dst, s="a", d="b")
+    sym, _ = _undirected(edges, src, dst, s="a", d="b")
     labels = (
         sym.select(F.col("a").alias("vertex"))
         .distinct()
@@ -414,11 +482,9 @@ def pagerank(
     with the rank frame on src (AQE reuses the partitioning — same
     key every round) + one partial-aggregated groupBy(dst); the
     dangling mass is a 1-row broadcast, never a collect. Total work
-    O(iterations · |E|) with no global sort anywhere.
+    O(iterations · |E|) with no global sort anywhere. Small graphs
+    take ``_pagerank_local`` instead (module docstring).
     """
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank over an empty node set")
     # ``symmetrize`` (default True) treats the edge list as
     # UNDIRECTED — each input edge contributes both directions,
     # matching the radius-graph use case where (id_a, id_b) is a
@@ -426,11 +492,19 @@ def pagerank(
     # directed graph (src -> dst only). Either way the edge list and
     # degree table are materialized ONCE: they feed every iteration.
     if symmetrize:
-        dedges = _undirected(edges, src, dst)
+        dedges, rows = _undirected(edges, src, dst)
     else:
-        dedges = edges.select(
-            F.col(src).alias("s"), F.col(dst).alias("d")
-        ).localCheckpoint()
+        dedges, rows = _checkpoint(
+            edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+        )
+    ranks = _pagerank_local(
+        nodes, dedges, rows, id_col, iterations, scale
+    )
+    if ranks is not None:
+        return _ranked(ranks, scale)
+    n = nodes.count()
+    if n == 0:
+        raise ValueError("pagerank over an empty node set")
     outdeg = dedges.groupBy("s").agg(
         F.count(F.lit(1)).alias("od")
     ).localCheckpoint()
@@ -481,13 +555,79 @@ def pagerank(
             )
         )
 
-    ranks = _iterate(ranks, step, iterations)
+    return _ranked(_iterate(ranks, step, iterations), scale)
+
+
+def _ranked(ranks, scale):
+    """pagerank's output columns from a (vertex, rank) frame."""
     return ranks.select(
         "vertex",
         F.col("rank").alias("rank_scaled"),
         (F.col("rank").cast("double") / F.lit(float(scale))).alias(
             "rank"
         ),
+    )
+
+
+def _pagerank_local(nodes, dedges, rows, id_col, iterations, scale):
+    """pagerank's rounds in int64 numpy: the (vertex, rank) frame, or
+    None when the ``rows`` edges are over the bound, the node ids are
+    empty, null or duplicated, or ``85 · scale`` reaches 2^63. The
+    node ids are collected and checked before the edges, so no
+    fallback pays for an edge collect.
+
+    The formulas are the docstring's, term for term; ``//`` on
+    non-negative int64 is Spark's ``div``. int64 is exact under the
+    scale guard: Σr₀ = n·(scale div n) ≤ scale, and a round keeps
+    Σr' ≤ 0.15·scale + 0.85·Σr (teleport ≤ 0.15·scale/n per vertex;
+    the dangling share and the contributions pass on at most 0.85 of
+    each rank, edges into vertices outside ``nodes`` drop theirs), so
+    every rank stays ≤ scale and the largest intermediate, 85·r_u,
+    stays < 2^63. Above the guard the distributed path keeps Spark's
+    overflow semantics (an error under ANSI).
+
+    As on the distributed path, out-degree counts every edge leaving
+    a vertex (also self-loops, duplicates and edges into vertices
+    outside ``nodes``), and edges whose source is not a vertex carry
+    no rank.
+    """
+    if 85 * scale >= 1 << 63 or rows > _LOCAL_MAX_EDGES:
+        return None
+    vertex = nodes.select(F.col(id_col).alias("vertex"))
+    vs = _local_columns(vertex, "vertex")
+    if vs is None or not len(vs[0]) or len(np.unique(vs[0])) < len(vs[0]):
+        return None
+    es = _local_columns(dedges, "s", "d")
+    if es is None:
+        return None
+    (v,), (s, d) = vs, es
+    n = len(v)
+    order = np.argsort(v)
+    sv = v[order]
+
+    def pos(x):
+        # index of each id of ``x`` in ``v``, -1 when absent
+        i = order[np.searchsorted(sv, x).clip(max=n - 1)]
+        return np.where(v[i] == x, i, -1)
+
+    si, di = pos(s), pos(d)
+    od = np.bincount(si[si >= 0], minlength=n)
+    live = (si >= 0) & (di >= 0)
+    us, ud = si[live], di[live]
+    den = 100 * od[us]
+    dangling = od == 0
+    teleport = (15 * scale) // (100 * n)
+    r = np.full(n, scale // n, dtype=np.int64)
+    for _ in range(iterations):
+        dm = ((85 * r[dangling]) // 100).sum()
+        contrib = np.zeros(n, dtype=np.int64)
+        np.add.at(contrib, ud, (85 * r[us]) // den)
+        r = teleport + dm // n + contrib
+    return _local_frame(
+        nodes.sparkSession,
+        [vertex.schema[0], StructField("rank", LongType())],
+        v,
+        r,
     )
 
 
@@ -799,14 +939,12 @@ def triangle_counts(
 
 
 def _min_plus(
-    nodes, edges, source_cond, id_col, src, dst, max_iter, inc, out,
-    *carry,
+    nodes, edges, source_cond, id_col, src, dst, max_iter, out, wt=None
 ):
     """The shared body of bfs_hop_distances and
     weighted_shortest_paths: multi-source min-plus relaxation where
-    each edge adds ``inc`` (a Column over the edge row and ``dist``),
+    each edge adds 1, or its BIGINT weight ``wt`` when given,
     returning (vertex, ``out``) with -1 for unreached vertices.
-    ``carry`` columns ride along on the symmetrized edge list.
 
     Each round is one frontier equi-join + one min-aggregate, both
     shuffling on vertex id. Distances only ever decrease, so
@@ -814,13 +952,16 @@ def _min_plus(
     nothing vs running all ``max_iter`` rounds, which keeps the
     fixed-unroll DuckDB oracle bit-identical. The probe sum rides
     DECIMAL(38,0): Σ(path weights) has no provable 2^63 bound
-    (rule 11).
+    (rule 11). Small graphs take ``_min_plus_local`` instead (module
+    docstring).
     """
-    sym = _undirected(edges, src, dst, *carry)
-    dist = nodes.select(
+    carry = [F.col(wt).cast("bigint").alias("w")] if wt else []
+    inc = F.col("w") if wt else F.lit(1)
+    sym, rows = _undirected(edges, src, dst, *carry)
+    dist0 = nodes.select(
         F.col(id_col).alias("vertex"),
         F.when(source_cond, F.lit(0).cast("bigint")).alias("dist"),
-    ).localCheckpoint()
+    )
 
     def step(dist):
         msgs = sym.join(
@@ -846,13 +987,75 @@ def _min_plus(
             ).collect()[0]
         )
 
-    dist = _iterate(dist, step, max_iter, probe=probe)
-    return dist.select(
-        "vertex",
-        F.coalesce(F.col("dist"), F.lit(-1).cast("bigint")).alias(
-            out
-        ),
+    def result(dist):
+        return dist.select(
+            "vertex",
+            F.coalesce(F.col("dist"), F.lit(-1).cast("bigint")).alias(
+                out
+            ),
+        )
+
+    local = _min_plus_local(sym, rows, dist0, max_iter, bool(carry))
+    if local is not None:
+        # the distributed output's fields, analysed but not run
+        shape = result(step(dist0) if max_iter > 0 else dist0)
+        return _local_frame(
+            nodes.sparkSession, shape.schema.fields, *local
+        )
+    return result(
+        _iterate(dist0.localCheckpoint(), step, max_iter, probe=probe)
     )
+
+
+def _min_plus_local(sym, rows, dist0, max_iter, weighted):
+    """_min_plus's rounds in int64 numpy: (vertex ids, distances with
+    -1 for unreached), or None when the ``rows`` edges are over the
+    bound, the node ids are null or duplicated, or ``max|w| ·
+    (max_iter + 1)`` reaches 2^63 (a distance after t rounds is at
+    most t·max|w| in magnitude, so under that guard int64 never wraps
+    and no distance meets the int64-max "unreached" sentinel; above
+    it the distributed path keeps Spark's overflow semantics). The
+    weight guard needs the edge collect; every other fallback comes
+    before it.
+
+    A round relaxes every edge out of a reached vertex with
+    ``np.minimum.at``; it stops early once a round changes nothing,
+    which equals the full unroll because distances only fall. As in
+    the distributed ``groupBy``, endpoints missing from ``nodes``
+    that get reached are part of the output, and duplicate edges and
+    self-loops relax like any other edge.
+    """
+    if rows > _LOCAL_MAX_EDGES:
+        return None
+    vs = _local_columns(
+        dist0, "vertex", F.col("dist").isNotNull().cast("int")
+    )
+    if vs is None or len(np.unique(vs[0])) < len(vs[0]):
+        return None
+    v, seed = vs
+    es = _local_columns(sym, "s", "d", *(["w"] if weighted else []))
+    if es is None:
+        return None
+    s, d = es[:2]
+    w = es[2] if weighted else np.ones(len(s), dtype=np.int64)
+    big = max(int(w.max()), -int(w.min())) if len(w) else 0
+    if big * (max_iter + 1) >= 1 << 63:
+        return None
+    ids = np.unique(np.concatenate([v, s, d]))
+    si, di = np.searchsorted(ids, s), np.searchsorted(ids, d)
+    unreached = np.iinfo(np.int64).max
+    dist = np.full(len(ids), unreached, dtype=np.int64)
+    dist[np.searchsorted(ids, v[seed == 1])] = 0
+    for _ in range(max_iter):
+        act = dist[si] != unreached
+        nxt = dist.copy()
+        np.minimum.at(nxt, di[act], dist[si[act]] + w[act])
+        if np.array_equal(nxt, dist):
+            break
+        dist = nxt
+    keep = dist != unreached
+    keep[np.searchsorted(ids, v)] = True
+    return ids[keep], np.where(dist == unreached, -1, dist)[keep]
 
 
 def bfs_hop_distances(
@@ -873,8 +1076,7 @@ def bfs_hop_distances(
     like pagerank.
     """
     return _min_plus(
-        nodes, edges, source_cond, id_col, src, dst, max_iter,
-        F.lit(1), "hops",
+        nodes, edges, source_cond, id_col, src, dst, max_iter, "hops"
     )
 
 
@@ -900,8 +1102,8 @@ def weighted_shortest_paths(
     round(dist·10^k) is engine-portable).
     """
     return _min_plus(
-        nodes, edges, source_cond, id_col, src, dst, max_iter,
-        F.col("w"), "dist", F.col(wt).cast("bigint").alias("w"),
+        nodes, edges, source_cond, id_col, src, dst, max_iter, "dist",
+        wt,
     )
 
 
@@ -930,7 +1132,7 @@ def label_propagation(
     tie-break is arbitrary). All shuffles key on vertex id, so AQE
     reuses the partitioning.
     """
-    sym = _undirected(edges, src, dst)
+    sym, _ = _undirected(edges, src, dst)
     labels = nodes.select(
         F.col(id_col).alias("vertex"),
         F.col(id_col).cast("bigint").alias("label"),
@@ -993,6 +1195,17 @@ def kcore_membership(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
+    sym, rows = _undirected(edges, src, dst)
+
+    def result(live):
+        return live.groupBy(F.col("s").alias("vertex")).agg(
+            F.count(F.lit(1)).alias("degree")
+        ).filter(F.col("degree") >= k)
+
+    local = _kcore_local(sym, rows, k, max_iter)
+    if local is not None:
+        fields = result(sym).schema.fields
+        return _local_frame(sym.sparkSession, fields, *local)
 
     def step(live):
         deg = live.groupBy(F.col("s").alias("vertex")).agg(
@@ -1010,10 +1223,31 @@ def kcore_membership(
             )
         )
 
-    live = _iterate(
-        _undirected(edges, src, dst), step, max_iter,
-        probe=DataFrame.count,
-    )
-    return live.groupBy(F.col("s").alias("vertex")).agg(
-        F.count(F.lit(1)).alias("degree")
-    ).filter(F.col("degree") >= k)
+    return result(_iterate(sym, step, max_iter, probe=DataFrame.count))
+
+
+def _kcore_local(sym, rows, k, max_iter):
+    """kcore_membership's peel in numpy over a live-edge mask: (vertex
+    ids, within-core degrees), or None when the ``rows`` edges are over
+    the bound. A round keeps the edges whose endpoints both have live
+    degree >= k (``bincount`` over the live sources; the edge list is
+    symmetric, so that is the degree). It stops early once a round
+    removes nothing, which equals the full unroll because peeling only
+    removes. Self-loops and duplicate edges count toward the degree as
+    in Spark's ``count``."""
+    if rows > _LOCAL_MAX_EDGES:
+        return None
+    es = _local_columns(sym, "s", "d")
+    if es is None:
+        return None
+    ids, si = np.unique(es[0], return_inverse=True)
+    di = np.searchsorted(ids, es[1])
+    live = np.ones(len(si), dtype=bool)
+    for _ in range(max_iter):
+        keep = np.bincount(si[live], minlength=len(ids)) >= k
+        nxt = live & keep[si] & keep[di]
+        if np.array_equal(nxt, live):
+            break
+        live = nxt
+    degree = np.bincount(si[live], minlength=len(ids))
+    return ids[degree >= k], degree[degree >= k]

@@ -631,9 +631,11 @@ def pagerank_centrality(
     iterative-algorithm showcase: ranks live on a 1/1e12 integer
     grid so every contribution sum is associative BIGINT
     arithmetic, bit-identical in the unrolled-CTE DuckDB replica
-    (operators/graph.pagerank: per-iteration equi-join + partial
-    agg, localCheckpoint lineage truncation, broadcast dangling
-    mass — no collect, no global sort)."""
+    (operators/graph.pagerank: small graphs iterate in its int64
+    driver kernel after one bounded edge-list collect; larger ones
+    run a per-iteration equi-join + partial agg with
+    localCheckpoint lineage truncation and a broadcast dangling
+    mass — no global sort)."""
     from afg_data_pipeline_spark.operators.graph import (
         pagerank,
         radius_edges_grid2d,

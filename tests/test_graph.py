@@ -5,13 +5,24 @@ oracle-less — this is its correctness pin)."""
 from __future__ import annotations
 
 import hashlib
+import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from afg_data_pipeline_spark.operators import graph
 from afg_data_pipeline_spark.operators.graph import (
     canonical_per_component,
     connected_components,
 )
+
+
+@pytest.fixture
+def distributed(monkeypatch):
+    """Route pagerank, bfs / weighted sssp and k-core through the
+    distributed path: every fixture below holds at least one edge or
+    node, so a bound of 0 sends them all past the driver kernels."""
+    monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 0)
 
 
 def _components_of(spark, edges):
@@ -803,3 +814,247 @@ class TestIterate:
         out, log = self._run(6, 1)
         assert out.rnd == 6
         assert log == [("ckpt", r) for r in range(1, 7)]
+
+
+# The classes above run the driver kernels (their fixtures are small);
+# each subclass reruns every inherited test on the distributed path.
+
+
+@pytest.mark.usefixtures("distributed")
+class TestPagerankDistributed(TestPagerank):
+    pass
+
+
+@pytest.mark.usefixtures("distributed")
+class TestPagerankSymmetrizeDistributed(TestPagerankSymmetrize):
+    pass
+
+
+@pytest.mark.usefixtures("distributed")
+class TestBfsHopDistancesDistributed(TestBfsHopDistances):
+    pass
+
+
+@pytest.mark.usefixtures("distributed")
+class TestWeightedShortestPathsDistributed(TestWeightedShortestPaths):
+    pass
+
+
+@pytest.mark.usefixtures("distributed")
+class TestKCoreDistributed(TestKCore):
+    pass
+
+
+def _random_graph(seed, n=12, span=15, m=40):
+    """Seeded (src, dst, wt) edges over ids 0..span-1 with duplicate
+    edges and self-loops; ids n..span-1 are missing from the node set
+    of ``TestLocalKernels``."""
+    rng = random.Random(seed)
+    edges = [
+        (rng.randrange(span), rng.randrange(span), rng.randrange(10))
+        for _ in range(m)
+    ]
+    edges += edges[:4] + [(3, 3, 2), (n + 1, n + 1, 1)]
+    return edges
+
+
+_OPS = {
+    "pagerank": lambda nodes, edges, it: graph.pagerank(
+        nodes, edges, iterations=it
+    ),
+    "pagerank_directed": lambda nodes, edges, it: graph.pagerank(
+        nodes, edges, iterations=it, symmetrize=False
+    ),
+    "bfs": lambda nodes, edges, it: graph.bfs_hop_distances(
+        nodes, edges, F.col("id") % 5 == 0, src="src", dst="dst",
+        max_iter=it,
+    ),
+    "sssp": lambda nodes, edges, it: graph.weighted_shortest_paths(
+        nodes, edges, F.col("id").isin(0, 7), src="src", dst="dst",
+        max_iter=it,
+    ),
+    "kcore": lambda nodes, edges, it: graph.kcore_membership(
+        edges, k=3, src="src", dst="dst", max_iter=it
+    ),
+}
+
+
+class TestLocalKernels:
+    """The driver kernels against the distributed path: same rows,
+    same schema, and each path is the one that really ran (spied on
+    ``_local_frame``, which only the kernels call). Nodes 20 and 21 are
+    isolated."""
+
+    def _frames(self, spark, edges, nodes=(*range(12), 20, 21)):
+        return (
+            spark.createDataFrame([(v,) for v in nodes], "id long"),
+            spark.createDataFrame(edges, "src long, dst long, wt long"),
+        )
+
+    def _spy(self, monkeypatch):
+        calls = []
+        real = graph._local_frame
+
+        def spy(*args):
+            calls.append(1)
+            return real(*args)
+
+        monkeypatch.setattr(graph, "_local_frame", spy)
+        return calls
+
+    def _got(self, df):
+        return sorted(df.collect()), df.schema.simpleString()
+
+    @pytest.mark.parametrize("op", sorted(_OPS))
+    @pytest.mark.parametrize(
+        "edges,it",
+        [
+            (_random_graph(1), 0),
+            (_random_graph(2), 2),
+            (_random_graph(3), 30),
+            ([], 5),
+        ],
+        ids=["seed1-iter0", "seed2-iter2", "seed3-iter30", "no-edges"],
+    )
+    def test_kernel_equals_distributed(
+        self, spark, monkeypatch, op, edges, it
+    ):
+        nodes, e = self._frames(spark, edges)
+        calls = self._spy(monkeypatch)
+        kernel = self._got(_OPS[op](nodes, e, it))
+        assert calls == [1]
+        # -1, not 0: an empty edge list must leave the kernel too
+        monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", -1)
+        dist = self._got(_OPS[op](nodes, e, it))
+        assert calls == [1]
+        assert kernel == dist
+
+    def _takes_distributed(self, monkeypatch, build):
+        calls = self._spy(monkeypatch)
+        rows = build().collect()
+        assert calls == []
+        return rows
+
+    def test_null_node_id_falls_back(self, spark, monkeypatch):
+        nodes, e = self._frames(spark, _random_graph(4), [0, 1, None])
+        rows = self._takes_distributed(
+            monkeypatch, lambda: _OPS["bfs"](nodes, e, 3)
+        )
+        assert any(r.vertex is None for r in rows)
+
+    def test_null_edge_endpoint_falls_back(self, spark, monkeypatch):
+        nodes, e = self._frames(spark, [(0, 1, 1), (1, None, 1)])
+        self._takes_distributed(
+            monkeypatch, lambda: _OPS["kcore"](nodes, e, 3)
+        )
+
+    def test_duplicate_node_id_falls_back(self, spark, monkeypatch):
+        nodes, e = self._frames(spark, _random_graph(5), [0, 1, 1, 2])
+        rows = self._takes_distributed(
+            monkeypatch, lambda: _OPS["pagerank"](nodes, e, 3)
+        )
+        assert len(rows) == 4
+
+    def test_scale_past_int64_guard_falls_back(self, spark, monkeypatch):
+        # 85 * 2**60 >= 2**63; on a 16-ring every rank stays near
+        # 2**60 / 16, so the distributed BIGINT path does not overflow
+        scale = 2**60
+        ring = [(i, (i + 1) % 16, 1) for i in range(16)]
+        nodes, e = self._frames(spark, ring, range(16))
+        rows = self._takes_distributed(
+            monkeypatch,
+            lambda: graph.pagerank(nodes, e, iterations=3, scale=scale),
+        )
+        r = scale // 16
+        for _ in range(3):
+            r = (15 * scale) // 1600 + 2 * ((85 * r) // 200)
+        assert {row.rank_scaled for row in rows} == {r}
+
+    def test_weight_past_int64_guard_falls_back(self, spark, monkeypatch):
+        nodes, e = self._frames(spark, [(0, 1, 2**61), (1, 2, 1)])
+        rows = self._takes_distributed(
+            monkeypatch, lambda: _OPS["sssp"](nodes, e, 3)
+        )
+        assert {(r.vertex, r.dist) for r in rows if r.vertex < 3} == {
+            (0, 0), (1, 2**61), (2, 2**61 + 1)
+        }
+
+    def _spy_collects(self, monkeypatch):
+        cols = []
+        real = graph._local_columns
+
+        def spy(df, *c):
+            cols.append(len(c))
+            return real(df, *c)
+
+        monkeypatch.setattr(graph, "_local_columns", spy)
+        return cols
+
+    @pytest.mark.parametrize("op", sorted(_OPS))
+    def test_over_bound_collects_nothing(
+        self, spark, monkeypatch, distributed, op
+    ):
+        # the checkpoint's row count decides; no edge or vertex collect
+        nodes, e = self._frames(spark, _random_graph(7))
+        collects = self._spy_collects(monkeypatch)
+        self._takes_distributed(
+            monkeypatch, lambda: _OPS[op](nodes, e, 3)
+        )
+        assert collects == []
+
+    def test_bad_node_ids_skip_the_edge_collect(self, spark, monkeypatch):
+        nodes, e = self._frames(spark, _random_graph(5), [0, 1, 1, 2])
+        collects = self._spy_collects(monkeypatch)
+        self._takes_distributed(
+            monkeypatch, lambda: _OPS["pagerank"](nodes, e, 3)
+        )
+        assert collects == [1]
+
+    def test_edge_bound_is_inclusive(self, spark, monkeypatch):
+        # kcore's symmetrized list holds 2 rows per input edge
+        edges = _random_graph(6)
+        nodes, e = self._frames(spark, edges)
+        calls = self._spy(monkeypatch)
+        monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 2 * len(edges))
+        kernel = _OPS["kcore"](nodes, e, 10).collect()
+        assert calls == [1]
+        monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 2 * len(edges) - 1)
+        dist = _OPS["kcore"](nodes, e, 10).collect()
+        assert calls == [1]
+        assert sorted(kernel) == sorted(dist)
+
+
+def _builder_jobs(spark, build):
+    """Spark jobs launched by ``build()``, counted through a job group
+    (the status tracker sees a job once the listener bus delivers it)."""
+    sc = spark.sparkContext
+    group = f"graph-builder-{random.getrandbits(32)}"
+    sc.setJobGroup(group, "graph builder jobs")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestBuilderJobs:
+    """Pins the gate: pagerank on a 10-node graph is a few collects on
+    the kernel path and a per-round job chain without it, so a gate
+    that silently stops firing turns this red."""
+
+    def _build(self, spark):
+        nodes = spark.createDataFrame(
+            [(i,) for i in range(10)], "id long"
+        )
+        edges = spark.createDataFrame(
+            [(i, (i + 1) % 10) for i in range(10)], "src long, dst long"
+        )
+        return lambda: graph.pagerank(nodes, edges, iterations=10)
+
+    def test_kernel_launches_at_most_five_jobs(self, spark):
+        assert _builder_jobs(spark, self._build(spark)) <= 5
+
+    def test_distributed_launches_a_job_chain(self, spark, distributed):
+        assert _builder_jobs(spark, self._build(spark)) > 20

@@ -35,7 +35,7 @@ COSTS = {
     # packer gives it a shard of its own
     "test_correctness.py": 400,
     "test_streaming.py": 50,
-    "test_graph.py": 48,
+    "test_graph.py": 94,
     "test_bpe.py": 35,
     "test_pq.py": 31,
     "test_streaming_ann_index.py": 29,
