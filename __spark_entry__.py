@@ -196,7 +196,7 @@ def _coverage_order(names: list[str]) -> list[str]:
         # (lsh_band_plan / conformal_filter_threshold /
         # mi_feature_rank already re-enter at 10 above.)
         "triangle_clustering": 10,
-        "contrastive_pairs": 11,
+        "contrastive_pairs": 12,
         "uncertainty_sample": 11,
         "label_noise_report": 11,
         "score_calibration_bins": 11,
@@ -221,25 +221,25 @@ def _coverage_order(names: list[str]) -> list[str]:
         "chunk_dedup_profile": 10,
         # r10 optimization batch 4: minhash pair-dedup width pin
         # (dedup.minhash_lsh_candidates) — consumers re-certify:
-        "minhash_near_dup": 11,
-        "dedup_threshold_sweep": 11,
-        "near_dup_components": 11,
-        "near_dup_components_star": 11,
+        "minhash_near_dup": 12,
+        "dedup_threshold_sweep": 12,
+        "near_dup_components": 12,
+        "near_dup_components_star": 12,
         # (r11: quality_score refactored through quality_score_of —
         # identical expression tree, module changed; re-certify)
-        "corpus_after_dedup": 11,
-        "dedup_keep_best": 11,
-        "dedup_cluster_stats": 11,
-        "cross_source_dup_matrix": 11,
-        "lsh_recall_audit": 11,
-        "split_leakage_report": 11,
+        "corpus_after_dedup": 12,
+        "dedup_keep_best": 12,
+        "dedup_cluster_stats": 12,
+        "cross_source_dup_matrix": 12,
+        "lsh_recall_audit": 12,
+        "split_leakage_report": 12,
         # r11 OPTIMIZATION round: single-evaluation Generate gates
         # (functions/gate.py) on the survivor-heavy pair verifies
         # and the pushed quality/length filters; size-bound
         # prefilter on the ngram verify; brute pair stream rebuilt
         # as a constant-key BHJ (rule 23) — values bit-identical
         # (re-verified both canon modes), plans changed:
-        "ngram_jaccard_dups": 11,
+        "ngram_jaccard_dups": 12,
         "embedding_near_dup_lsh": 11,
         "embedding_near_dup": 11,
         "readability_scores": 11,
@@ -255,7 +255,7 @@ def _coverage_order(names: list[str]) -> list[str]:
         "ann_sq8_topk": 11,
         "gravity_flows": 11,
         "mmr_diversified_topk": 11,
-        "prefix_jaccard_pairs": 11,
+        "prefix_jaccard_pairs": 12,
         # r11 batch 3 — values bit-identical, plans changed:
         # incremental_near_dup verifies through the filter_once gate
         # in streaming/incremental_dedup.py; corpus_minhash_similarity
@@ -270,6 +270,18 @@ def _coverage_order(names: list[str]) -> list[str]:
         "bfs_hop_distances": 12,
         "weighted_sssp_dist": 12,
         "kcore_vertices": 12,
+        # r12 set similarity: small corpora run ngram_jaccard_pairs'
+        # exact tier and minhash_lsh_candidates in the driver-side
+        # numpy kernels of operators/_setsim_local.py (bounded shingle
+        # collect, createDataFrame result) — rows identical to the
+        # distributed path, result path changed. Their thirteen
+        # consumers were edited IN PLACE above (11 -> 12, the
+        # single-occurrence invariant): ngram_jaccard_dups,
+        # minhash_near_dup, contrastive_pairs, dedup_keep_best,
+        # corpus_after_dedup, lsh_recall_audit, split_leakage_report,
+        # cross_source_dup_matrix, dedup_cluster_stats,
+        # near_dup_components(_star), dedup_threshold_sweep,
+        # prefix_jaccard_pairs.
     }
 
     seen: dict[str, list[int]] = {n: [] for n in names}

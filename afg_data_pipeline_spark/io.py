@@ -123,18 +123,6 @@ def read_parquet_glob(
     return spark.read.parquet(f"{directory}/*{name_contains}*")
 
 
-def read_csv(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """Header CSV scan with declared schema (operator S2).
-
-    Reference: matriz_movilidad.ipynb cell 4 (nb:50-52) reads three
-    enrollment CSVs with inferred schemas; we declare instead, which
-    also skips Spark's extra inference pass over the file.
-    """
-    return spark.read.csv(path, header=True, schema=schema)
-
-
 def read_jsonl_with_corrupt_capture(
     spark: SparkSession, path: str, schema: T.StructType
 ) -> DataFrame:

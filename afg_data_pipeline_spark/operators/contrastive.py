@@ -64,7 +64,12 @@ def contrastive_pairs(
     # (measured at sf0.1: the band-join+verify stream executed 3x,
     # 4.5s -> 2.x s with the checkpoint). The checkpointed frame is
     # two id columns per row — rule-12 territory, far from the
-    # rule-17 recompute boundary.
+    # rule-17 recompute boundary. eager=False does not make this
+    # call free under AQE: building the checkpointed plan runs every
+    # shuffle stage upstream of it as a job, here in the builder (a
+    # fresh aggregate + join launched 2 jobs; the distributed minhash
+    # candidates behind ``positives`` launch 4). Only the final
+    # stage's result waits for the first action.
     pos = (
         positives.select(
             F.col("id_a").alias("anchor_id"),

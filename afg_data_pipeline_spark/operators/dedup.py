@@ -16,6 +16,13 @@ Scale design notes:
   poor fit for per-row SQL expressions).
 - n-gram Jaccard: exact pairwise verification, restricted to
   candidate groups (same language here; same band in the LSH path).
+- Small corpora skip the Spark pair machinery. Up to
+  ``_setsim_local._LOCAL_MAX_CELLS`` shingle cells, the exact tier of
+  ``ngram_jaccard_pairs`` and ``minhash_lsh_candidates`` collect the
+  shingle arrays once and compute the same rows in exact numpy on the
+  driver (``operators/_setsim_local.py``); the collect also yields
+  the n-gram tier's pair count. Larger or ineligible corpora take the
+  distributed paths below.
 
 md5 is the hash family wherever hash VALUES cross the oracle
 boundary (deterministic, engine-portable so DuckDB reproduces them
@@ -31,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from afg_data_pipeline_spark.functions.tier import announce, gate
+from afg_data_pipeline_spark.operators import _setsim_local
 from afg_data_pipeline_spark.operators.text import shingle_expr, tokens
 
 
@@ -160,6 +168,11 @@ def minhash_lsh_candidates(
     identical docs collide in every band by construction and are
     precisely the buckets the cap drops.
 
+    Corpora up to ``_setsim_local._LOCAL_MAX_CELLS`` shingle cells
+    (without ``max_bucket_size``) get the same rows from the driver
+    kernel (module docstring). The rest of this docstring describes
+    the distributed path that larger corpora take.
+
     The signature table is materialized once via an eager
     localCheckpoint: it feeds four plan branches (both band-join
     sides and both shingle re-joins), and without materialization
@@ -189,6 +202,14 @@ def minhash_lsh_candidates(
         CacheManager's plan substitution, removing in-cache AQE
         from the equation for the four downstream branches.
     """
+    if max_bucket_size is None:
+        cells = _setsim_local.shingle_cells(df, id_col, text_col, shingle_k)
+        if cells is not None:
+            out = _setsim_local.minhash_frame(
+                df.sparkSession, cells, n_hashes, band_size, threshold
+            )
+            if out is not None:
+                return out
     base, long = _minhash_band_table(
         df, id_col, text_col, n_hashes, band_size, shingle_k
     )
@@ -298,20 +319,28 @@ def ngram_jaccard_pairs(
     of group size. Below the budget the output is exactly the full
     pair set (oracle-checkable).
 
-    NOTE the probe is EAGER: the pair-count aggregate runs a Spark
-    job at PLAN-CONSTRUCTION time (calling this function), not at
-    execution — unusual for a lazily-composed library, but the tier
-    decision must be made before the plan exists. Callers building
-    plans they may never execute should know they pay one cheap
-    count job here. The active tier is part of the
+    NOTE the probe is EAGER: it runs a Spark job at
+    PLAN-CONSTRUCTION time (calling this function), not at execution
+    — unusual for a lazily-composed library, but the tier decision
+    must be made before the plan exists. The probe is first the
+    bounded shingle collect of the driver kernel
+    (``_setsim_local.shingle_cells``), whose rows give the pair
+    count; only a corpus it cannot take also runs the pair-count
+    aggregate. Under the budget that corpus goes on to the salted
+    self-join below, and a collected one to the kernel's exact rows.
+    Callers building plans they may never execute should know they
+    pay for these jobs here. The active tier is part of the
     OUTPUT SCHEMA (``tier``: 'exact' | 'lsh_subset'), so the
     subset mode can never be mistaken for the exact contract — an
     oracle run at a scale that crosses the budget red-rows on the
     tier value itself, not on silently missing pairs.
     """
+    cells = _setsim_local.shingle_cells(df, id_col, text_col, n, group_col)
     if gate(
         "NGRAM_JACCARD_MAX_PAIRS",
-        _pair_count(df, F.col(group_col)),
+        _pair_count(df, F.col(group_col))
+        if cells is None
+        else _setsim_local.pair_count(cells),
         20_000_000,
         max_pairs,
         event="ngram_jaccard_pairs: exact candidate pairs exceed "
@@ -361,6 +390,10 @@ def ngram_jaccard_pairs(
                 "jaccard",
                 F.lit("lsh_subset").alias("tier"),
             )
+        )
+    if cells is not None:
+        return _setsim_local.ngram_jaccard_frame(
+            df.sparkSession, cells, group_col, threshold
         )
     side = (
         df.select(

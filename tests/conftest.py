@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import random
 
 import duckdb
 import pytest
@@ -31,6 +32,21 @@ TABLES = [
     "documents",
     "embeddings",
 ]
+
+
+def builder_jobs(spark, build):
+    """Spark jobs launched by ``build()``, counted through a job group
+    (the status tracker sees a job once the listener bus delivers it)."""
+    sc = spark.sparkContext
+    group = f"builder-{random.getrandbits(32)}"
+    sc.setJobGroup(group, "builder jobs")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from afg_data_pipeline_spark.functions.gate import filter_once
+from afg_data_pipeline_spark.operators import _setsim_local
 from afg_data_pipeline_spark.plans import REGISTRY
 from tests.conftest import SF_DIR
 
@@ -143,7 +144,10 @@ class TestGatedRegisteredPlans:
             or "PushedFilters" in ln
         )
 
-    def test_ngram_jaccard_single_intersect(self, spark):
+    def test_ngram_jaccard_single_intersect(self, spark, monkeypatch):
+        # the distributed path's plan (small corpora take the driver
+        # kernel of operators/_setsim_local.py, which has no join)
+        monkeypatch.setattr(_setsim_local, "_LOCAL_MAX_CELLS", 0)
         df = REGISTRY["ngram_jaccard_dups"].fn(spark, SF_DIR)
         plan = plan_of(df)
         assert plan.count("array_intersect") == 1

@@ -15,6 +15,7 @@ from afg_data_pipeline_spark.operators.graph import (
     canonical_per_component,
     connected_components,
 )
+from tests.conftest import builder_jobs
 
 
 @pytest.fixture
@@ -1024,21 +1025,6 @@ class TestLocalKernels:
         assert sorted(kernel) == sorted(dist)
 
 
-def _builder_jobs(spark, build):
-    """Spark jobs launched by ``build()``, counted through a job group
-    (the status tracker sees a job once the listener bus delivers it)."""
-    sc = spark.sparkContext
-    group = f"graph-builder-{random.getrandbits(32)}"
-    sc.setJobGroup(group, "graph builder jobs")
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 class TestBuilderJobs:
     """Pins the gate: pagerank on a 10-node graph is a few collects on
     the kernel path and a per-round job chain without it, so a gate
@@ -1054,7 +1040,7 @@ class TestBuilderJobs:
         return lambda: graph.pagerank(nodes, edges, iterations=10)
 
     def test_kernel_launches_at_most_five_jobs(self, spark):
-        assert _builder_jobs(spark, self._build(spark)) <= 5
+        assert builder_jobs(spark, self._build(spark)) <= 5
 
     def test_distributed_launches_a_job_chain(self, spark, distributed):
-        assert _builder_jobs(spark, self._build(spark)) > 20
+        assert builder_jobs(spark, self._build(spark)) > 20

@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from afg_data_pipeline_spark.io import write_parquet
+from afg_data_pipeline_spark.operators import _setsim_local
 from afg_data_pipeline_spark.plans import REGISTRY
 from tests.conftest import SF_DIR
 
@@ -151,11 +152,16 @@ class TestClassicShapes:
         assert "BroadcastHashJoin" in plan, name
         assert "CartesianProduct" not in plan, name
 
-    def test_ngram_jaccard_join_is_shuffle_not_broadcast(self, spark):
+    def test_ngram_jaccard_join_is_shuffle_not_broadcast(
+        self, spark, monkeypatch
+    ):
         # Round-1 regression: the verifier broadcast the full corpus
         # side, which OOMs past driver broadcast memory at scale.
         # The salted plan must join via shuffle (hash or SMJ), with
-        # no broadcast of the replicated build side.
+        # no broadcast of the replicated build side. Pinned on the
+        # distributed path: this small corpus would take the driver
+        # kernel of operators/_setsim_local.py.
+        monkeypatch.setattr(_setsim_local, "_LOCAL_MAX_CELLS", 0)
         plan = plan_of(REGISTRY["ngram_jaccard_dups"].fn(spark, SF_DIR))
         assert "BroadcastHashJoin" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
@@ -328,9 +334,11 @@ class TestNewLlmOpShapes:
 
 
 class TestRound4PlanShapes:
-    def test_contrastive_bucket_reps_broadcast(self, spark):
+    def test_contrastive_bucket_reps_broadcast(self, spark, monkeypatch):
         # The negative-sampling join must broadcast the tiny
         # bucket-rep table, never shuffle the anchors against it.
+        # Pinned with the positives on the distributed minhash path.
+        monkeypatch.setattr(_setsim_local, "_LOCAL_MAX_CELLS", 0)
         plan = plan_of(REGISTRY["contrastive_pairs"].fn(spark, SF_DIR))
         assert "BroadcastHashJoin" in plan
         assert "CartesianProduct" not in plan

@@ -36,6 +36,7 @@ COSTS = {
     "test_correctness.py": 400,
     "test_streaming.py": 50,
     "test_graph.py": 94,
+    "test_setsim_local.py": 45,
     "test_bpe.py": 35,
     "test_pq.py": 31,
     "test_streaming_ann_index.py": 29,
