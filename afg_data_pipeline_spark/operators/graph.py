@@ -328,19 +328,6 @@ def connected_components_star(
     )
 
 
-def canonical_per_component(
-    members: DataFrame,
-    id_col: str = "vertex",
-    component_col: str = "component",
-) -> DataFrame:
-    """One keeper per component: the minimum id (which, under
-    min-label propagation, is the component label itself)."""
-    return members.groupBy(component_col).agg(
-        F.min(id_col).alias("keep_id"),
-        F.count(F.lit(1)).alias("n_members"),
-    )
-
-
 def radius_edges_grid2d(
     nodes: DataFrame,
     id_col: str,

@@ -11,10 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from afg_data_pipeline_spark.operators import graph
-from afg_data_pipeline_spark.operators.graph import (
-    canonical_per_component,
-    connected_components,
-)
+from afg_data_pipeline_spark.operators.graph import connected_components
 from tests.conftest import builder_jobs
 
 
@@ -89,17 +86,6 @@ class TestConnectedComponents:
             for v in group
         }
         assert _components_of(spark, edges) == want
-
-    def test_canonical_per_component(self, spark):
-        df = spark.createDataFrame(
-            [(1, 2), (2, 3), (7, 8)], "src long, dst long"
-        )
-        comps = connected_components(df)
-        keep = {
-            r["component"]: (r["keep_id"], r["n_members"])
-            for r in canonical_per_component(comps).collect()
-        }
-        assert keep == {1: (1, 3), 7: (7, 2)}
 
 
 class TestStarComponents:

@@ -22,16 +22,21 @@ strict path while failing the driver — this mode reproduces that
 class locally. Run both modes before claiming a query green.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
-       python tools/check_correctness.py --changed-since <sha>
-           [sf_dir]   # sweep only queries whose plan module or
-                      # (transitively) referenced package modules
-                      # changed since <sha> — the pre-commit gate
-                      # at 209 registered queries
+       python tools/check_correctness.py --changed-since <sha> [sf_dir]
+           # sweep only the queries whose static fingerprint
+           # (afg_data_pipeline_spark/plans/_fingerprint.py: the
+           # query's symbol-level dependency closure, oracle SQL
+           # included) differs between <sha> and the working tree
+       python tools/check_correctness.py --refresh-certified
+           # rebuild CERTIFIED.json (each driver round's query
+           # fingerprints, read from git) after a CORRECTNESS_r<N>
+           # round lands; never edit that file by hand
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import math
 import os
 import sys
@@ -110,93 +115,17 @@ def _canon_pandas(pdf):
     ]
 
 
-def _changed_queries(since_sha: str, registry) -> set[str]:
-    """Queries whose plan module, or any package module their
-    function source (transitively) references, changed since
-    ``since_sha``. Over-selects rather than under-selects: module
-    reference = the dotted name appearing anywhere in the source.
-    """
-    import inspect
-    import re as _re
-    import subprocess
-
-    pkg_root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "afg_data_pipeline_spark",
-    )
-    repo = os.path.dirname(pkg_root)
-    diff = subprocess.run(
-        ["git", "diff", "--name-only", since_sha, "--", "afg_data_pipeline_spark"],
-        cwd=repo,
-        capture_output=True,
-        text=True,
-        check=True,
-    ).stdout.split()
-
-    def _dotted(relpath: str) -> str:
-        return (
-            relpath.removesuffix(".py")
-            .removesuffix("/__init__")
-            .replace("/", ".")
-        )
-
-    changed = {_dotted(p) for p in diff if p.endswith(".py")}
-    if not changed:
-        return set()
-
-    # Reverse-closure over intra-package references: a module that
-    # mentions a changed module's dotted name is itself "changed".
-    sources: dict[str, str] = {}
-    for dirpath, _dirs, files in os.walk(pkg_root):
-        for fname in files:
-            if not fname.endswith(".py"):
-                continue
-            full = os.path.join(dirpath, fname)
-            rel = os.path.relpath(full, repo)
-            with open(full) as fh:
-                sources[_dotted(rel)] = fh.read()
-    grew = True
-    while grew:
-        grew = False
-        for mod, src in sources.items():
-            if mod in changed:
-                continue
-            for ch in list(changed):
-                tail = ch.split(".", 1)[1] if "." in ch else ch
-                if _re.search(
-                    r"\b" + _re.escape(tail) + r"\b", src
-                ):
-                    changed.add(mod)
-                    grew = True
-                    break
-
-    out = set()
-    for name, q in registry.items():
-        mod = q.fn.__module__
-        if mod.removeprefix("afg_data_pipeline_spark.") in {
-            c.split(".", 1)[1] if "." in c else c for c in changed
-        } or mod in changed:
-            out.add(name)
-            continue
-        try:
-            src = inspect.getsource(q.fn)
-        except OSError:
-            out.add(name)
-            continue
-        for ch in changed:
-            tail = ch.split(".", 1)[1] if "." in ch else ch
-            # both-sided word boundary: a short tail like 'io'
-            # must not substring-match identifiers ending in it
-            # (ADVICE r7; dots are non-word so 'operators.io'
-            # still matches, which is the intended over-select)
-            if _re.search(r"\b" + _re.escape(tail) + r"\b", src):
-                out.add(name)
-                break
-    return out
-
-
 def main() -> int:
+    from afg_data_pipeline_spark.plans import _fingerprint as fp
+
     argv = sys.argv[1:]
+    if argv == ["--refresh-certified"]:
+        path = os.path.join(fp.ROOT, "CERTIFIED.json")
+        with open(path, "w") as fh:
+            json.dump(fp.certified(), fh, indent=1, sort_keys=True)
+            fh.write("\n")
+        print(f"wrote {path}")
+        return 0
     since_sha = None
     if argv and argv[0] == "--changed-since":
         since_sha = argv[1]
@@ -206,6 +135,16 @@ def main() -> int:
 
     from afg_data_pipeline_spark.plans import REGISTRY
     from afg_data_pipeline_spark.session import get_session
+
+    if since_sha is not None:
+        changed = fp.changed(fp.git_sources(since_sha), fp.tree_sources())
+        print(
+            f"--changed-since {since_sha}: "
+            f"{len(changed)}/{len(REGISTRY)} queries selected"
+        )
+        if not changed:
+            return 0
+        only = changed & only if only else changed
 
     spark = get_session("check-correctness")
     ansi = os.environ.get("AFG_ANSI", "1") != "0"
@@ -221,17 +160,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"'{sf_dir}/{t}.parquet'"
         )
-
-    if since_sha is not None:
-        changed = _changed_queries(since_sha, REGISTRY)
-        print(
-            f"--changed-since {since_sha}: "
-            f"{len(changed)}/{len(REGISTRY)} queries selected"
-        )
-        if not changed:
-            spark.stop()
-            return 0
-        only = changed & only if only else changed
 
     n_pass = n_fail = n_rows_only = 0
     failures: list[str] = []

@@ -37,6 +37,9 @@ COSTS = {
     "test_streaming.py": 50,
     "test_graph.py": 94,
     "test_setsim_local.py": 45,
+    # no Spark: it parses the package source ~17 times, 11 of them
+    # to rebuild CERTIFIED.json from the round trees (~25 s)
+    "test_fingerprint.py": 30,
     "test_bpe.py": 35,
     "test_pq.py": 31,
     "test_streaming_ann_index.py": 29,
