@@ -208,8 +208,9 @@ def build_bm25_index(
     the index incrementally appendable without a second table to
     maintain.
     """
-    import json
     import os
+
+    from afg_data_pipeline_spark.fs import write_json
 
     toks = _doc_tokens(docs, id_col, text_col)
     tf = toks.groupBy("doc_id", "term").agg(
@@ -230,11 +231,11 @@ def build_bm25_index(
         F.count(F.lit(1)).alias("n"),
         F.sum("__dl").alias("t"),
     ).collect()[0]
-    with open(os.path.join(index_dir, "stats.json"), "w") as fh:
-        json.dump(
-            {"n_docs": int(row["n"]), "total_len": int(row["t"])},
-            fh,
-        )
+    write_json(
+        docs.sparkSession,
+        os.path.join(index_dir, "stats.json"),
+        {"n_docs": int(row["n"]), "total_len": int(row["t"])},
+    )
 
 
 def query_bm25_index(
@@ -253,8 +254,9 @@ def query_bm25_index(
     the index bytes and never touches the corpus. Bit-identical to
     bm25_topk on the same corpus (same integer grid, same shared
     scoring tail)."""
-    import json
     import os
+
+    from afg_data_pipeline_spark.fs import read_json
 
     qdf = _query_terms_df(spark, queries)
     # collect-bound: distinct terms of the driver-side query list
@@ -264,8 +266,7 @@ def query_bm25_index(
     buckets = sorted(
         {zlib.crc32(t.encode()) % N_TERM_BUCKETS for t in terms}
     )
-    with open(os.path.join(index_dir, "stats.json")) as fh:
-        st = json.load(fh)
+    st = read_json(spark, os.path.join(index_dir, "stats.json"))
     corpus = spark.createDataFrame(
         [(st["n_docs"], st["total_len"])],
         ["n_docs", "total_len"],

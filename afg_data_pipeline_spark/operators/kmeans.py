@@ -39,13 +39,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from afg_data_pipeline_spark.functions.tier import gate
-
 #: fixed-point grid for coordinates (1e-6 — matches tfidf.QUANT)
 QUANT = 1_000_000
 #: non-negativity shift for floor-division portability; must exceed
 #: max |quantized coordinate| (1e7 covers |x| <= 10)
 OFF = 10_000_000
+#: largest k assigned by literal folds; above it the exact int64
+#: numpy strategy runs (bit-identical, tests monkeypatch this)
+_LITERAL_MAX_K = 64
 
 
 def _dist_expr(centroid: list[int]):
@@ -127,7 +128,7 @@ def kmeans_assign(
         cid: list(row["qarr"]) for cid, row in enumerate(seeds)
     }
 
-    use_numpy = gate("KMEANS_LITERAL_MAX_K", k, 64).over
+    use_numpy = k > _LITERAL_MAX_K
 
     def with_cluster(cents_now: dict[int, list[int]]):
         """(frame + d_<cid> columns + cluster + dist_q) — each
@@ -213,7 +214,7 @@ def _np_iter_partials(base: DataFrame, cents: dict) -> DataFrame:
     the literal when-chain) and emit per-(cluster, dim) partial
     sums/counts. The shuffle carries only k×d partials per batch;
     the driver combines them with the identical floor-division
-    formula. This is the k > AFG_KMEANS_LITERAL_MAX_K strategy:
+    formula. This is the k > _LITERAL_MAX_K strategy:
     the literal-fold projection is interpreted (HOFs are
     CodegenFallback) and its n·k·d cost wall was measured at 152s
     for k=447 over 200k vectors where this path runs the same

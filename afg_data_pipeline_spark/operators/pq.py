@@ -56,6 +56,8 @@ distance sums follow the kmeans contract (grid components with
 
 from __future__ import annotations
 
+import posixpath
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -478,6 +480,78 @@ def ivfpq_topk(
     )
 
 
+def _save_ivfpq_model(
+    corpus: DataFrame,
+    index_dir: str,
+    id_col: str,
+    vec_col: str,
+    m: int,
+    k: int,
+    n_centroids: int,
+    dim: int,
+) -> tuple[DataFrame, list]:
+    """Train the coarse quantizer and the PQ codebooks on ``corpus``
+    and persist them under ``index_dir`` (``centroids`` parquet +
+    ``codebooks.json``, through the Hadoop FileSystem so URI index
+    dirs work). Returns (centroids, codebooks)."""
+    from afg_data_pipeline_spark.fs import write_json
+    from afg_data_pipeline_spark.operators.similarity import (
+        seeded_centroids,
+    )
+
+    cents = seeded_centroids(corpus, id_col, vec_col, n_centroids)
+    cents.write.mode("overwrite").parquet(
+        posixpath.join(index_dir, "centroids")
+    )
+    books = pq_train(
+        corpus, id_col=id_col, vec_col=vec_col, m=m, k=k, dim=dim,
+        iterations=0,
+    )
+    write_json(
+        corpus.sparkSession,
+        posixpath.join(index_dir, "codebooks.json"),
+        {
+            "m": m,
+            "k": k,
+            "dim": dim,
+            "n_centroids": n_centroids,
+            "codebooks": books,
+        },
+    )
+    return cents, books
+
+
+def _load_ivfpq_model(spark, index_dir: str) -> tuple[DataFrame, list]:
+    """(centroids, codebooks) persisted by ``_save_ivfpq_model``."""
+    from afg_data_pipeline_spark.fs import read_json
+
+    meta = read_json(spark, posixpath.join(index_dir, "codebooks.json"))
+    cents = spark.read.parquet(posixpath.join(index_dir, "centroids"))
+    return cents, meta["codebooks"]
+
+
+def _ivfpq_postings(
+    vectors: DataFrame,
+    cents: DataFrame,
+    books: list,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(neighbor_id, codes, centroid_id): each vector's coarse cell
+    (ivf_assign n_probe=1) and its m-byte PQ code."""
+    from afg_data_pipeline_spark.operators.similarity import (
+        ivf_assign,
+    )
+
+    cells = ivf_assign(
+        vectors, cents, id_col, vec_col, n_probe=1
+    ).select(F.col(id_col).alias("id"), "centroid_id")
+    codes = pq_encode(vectors, books, id_col=id_col, vec_col=vec_col)
+    return cells.join(codes, "id").select(
+        F.col("id").alias("neighbor_id"), "codes", "centroid_id"
+    )
+
+
 def build_ivfpq_index(
     corpus: DataFrame,
     index_dir: str,
@@ -506,53 +580,15 @@ def build_ivfpq_index(
     (seeded_centroids, ivf_assign n_probe=1 argmin aggregate,
     pq_train, pq_encode) — query_ivfpq_index reproduces
     ivfpq_topk bit-for-bit (tested)."""
-    import json as _json
-    import os as _os
-
-    from afg_data_pipeline_spark.operators.similarity import (
-        ivf_assign,
-        seeded_centroids,
-    )
-
-    cents = seeded_centroids(corpus, id_col, vec_col, n_centroids)
-    cents.write.mode("overwrite").parquet(
-        _os.path.join(index_dir, "centroids")
-    )
-    books = pq_train(
-        corpus, id_col=id_col, vec_col=vec_col, m=m, k=k, dim=dim,
-        iterations=0,
-    )
-    cells = ivf_assign(
-        corpus, cents, id_col, vec_col, n_probe=1
-    ).select(F.col(id_col).alias("id"), "centroid_id")
-    codes = pq_encode(
-        corpus, books, id_col=id_col, vec_col=vec_col
+    cents, books = _save_ivfpq_model(
+        corpus, index_dir, id_col, vec_col, m, k, n_centroids, dim
     )
     (
-        cells.join(codes, "id")
-        .select(
-            F.col("id").alias("neighbor_id"),
-            "centroid_id",
-            "codes",
-        )
+        _ivfpq_postings(corpus, cents, books, id_col, vec_col)
         .write.mode("overwrite")
         .partitionBy("centroid_id")
-        .parquet(_os.path.join(index_dir, "postings"))
+        .parquet(posixpath.join(index_dir, "postings"))
     )
-    _os.makedirs(index_dir, exist_ok=True)
-    with open(
-        _os.path.join(index_dir, "codebooks.json"), "w"
-    ) as fh:
-        _json.dump(
-            {
-                "m": m,
-                "k": k,
-                "dim": dim,
-                "n_centroids": n_centroids,
-                "codebooks": books,
-            },
-            fh,
-        )
 
 
 def query_ivfpq_index(
@@ -573,21 +609,11 @@ def query_ivfpq_index(
     index-serving contract) and pushed into the postings scan as a
     LITERAL isin predicate, so parquet partition pruning skips
     every unprobed cell's directory before a byte is read."""
-    import json as _json
-    import os as _os
-
     from afg_data_pipeline_spark.operators.similarity import (
         ivf_assign,
     )
 
-    with open(
-        _os.path.join(index_dir, "codebooks.json")
-    ) as fh:
-        meta = _json.load(fh)
-    books = meta["codebooks"]
-    cents = spark.read.parquet(
-        _os.path.join(index_dir, "centroids")
-    )
+    cents, books = _load_ivfpq_model(spark, index_dir)
     q_cells = ivf_assign(
         queries, cents, id_col, vec_col, n_probe=n_probe
     ).select(F.col(id_col).alias("query_id"), "centroid_id")
@@ -597,7 +623,7 @@ def query_ivfpq_index(
         for r in q_cells.select("centroid_id").distinct().collect()
     )
     postings = spark.read.parquet(
-        _os.path.join(index_dir, "postings")
+        posixpath.join(index_dir, "postings")
     ).filter(F.col("centroid_id").isin(probed))
     cand = (
         q_cells.join(postings, "centroid_id")

@@ -36,9 +36,11 @@ from collections.abc import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from afg_data_pipeline_spark.functions.tier import gate
-
 __all__ = ["sharded_cumsum"]
+
+#: largest group (rows) the plain one-shuffle window takes; above it
+#: the sharded scan runs (bit-identical, tests monkeypatch this)
+_PLAIN_MAX_GROUP_ROWS = 8_000_000
 
 
 def sharded_cumsum(
@@ -78,7 +80,7 @@ def sharded_cumsum(
 
     ADAPTIVE STRATEGY: the bounds pass scans every row anyway, so
     it also counts each group. When the LARGEST group is at most
-    ``AFG_CUMSUM_PLAIN_MAX_GROUP_ROWS`` rows (env, default 8M —
+    ``_PLAIN_MAX_GROUP_ROWS`` rows (8M —
     a narrow (key, value) frame that one task sorts in seconds),
     the plain one-shuffle window is used: the sharded decomposition
     exists to break the one-task-per-group ceiling, and below the
@@ -103,11 +105,9 @@ def sharded_cumsum(
         F.max(okey).alias("__max_k"),
         F.count(F.lit(1)).alias("__cnt"),
     ).localCheckpoint(eager=True)
-    if not gate(
-        "CUMSUM_PLAIN_MAX_GROUP_ROWS",
-        bounds.agg(F.max("__cnt")),
-        8_000_000,
-    ).over:
+    if (
+        bounds.agg(F.max("__cnt")).collect()[0][0] or 0
+    ) <= _PLAIN_MAX_GROUP_ROWS:
         w = (
             Window.partitionBy(*parts)
             .orderBy(order_col)

@@ -25,7 +25,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from afg_data_pipeline_spark.functions.gate import pair_join
-from afg_data_pipeline_spark.functions.tier import gate
 
 # Left-to-right double fold: float*float products are exact in
 # double, and the sequential fold order is part of the operator's
@@ -107,6 +106,9 @@ def _hyperplane(seed: int, dim: int) -> list[float]:
 
 
 _SRP_DEC = "decimal(28,18)"
+#: exact_rerank_topk's largest candidate count for the LEAN strategy
+#: (bit-identical to HOISTED; tests monkeypatch this)
+_LEAN_MAX_CAND = 100_000
 
 
 def srp_all_planes(
@@ -711,7 +713,7 @@ def exact_rerank_topk(
     bit-identical output (same fold on the same vector is the same
     double either way):
 
-    * LEAN (n_cand ≤ ``AFG_RERANK_LEAN_MAX_CAND``, default 100k —
+    * LEAN (n_cand ≤ ``_LEAN_MAX_CAND`` = 100k —
       ≈50 MB of broadcast (pair, query-vector) rows at 64 dims):
       the id-pairs broadcast into the vector scan to pick up the
       query vectors, that still-tiny result broadcasts into a
@@ -739,7 +741,7 @@ def exact_rerank_topk(
     cand = candidates.select(
         "query_id", "neighbor_id"
     ).localCheckpoint(eager=True)
-    if not gate("RERANK_LEAN_MAX_CAND", cand.count(), 100_000).over:
+    if cand.count() <= _LEAN_MAX_CAND:
         vecs = vectors.select(
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("v"),

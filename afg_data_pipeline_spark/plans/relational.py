@@ -21,11 +21,6 @@ from afg_data_pipeline_spark.functions.numeric import (
 from afg_data_pipeline_spark.io import read_star_table
 from afg_data_pipeline_spark.plans.registry import register
 
-# The reference filters a 7-element IN-list of diagnoses
-# (atenciones_urgencia.py:13-19); the star-schema analogue filters
-# order priorities.
-_PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM"]
-
 
 @register(
     "flagship_filter_project",

@@ -18,8 +18,8 @@ parquet layout):
   accreted. batch_id second: each micro-batch owns its
   subdirectories, so a DYNAMIC partition overwrite makes replay
   idempotent — a crashed-and-replayed batch REPLACES its own
-  partitions instead of duplicating rows (the streaming/sinks.py
-  recovery recipe).
+  partitions instead of duplicating rows
+  (streaming/sinks.write_owned).
 - Serving is operators/pq.query_ivfpq_index UNCHANGED — it reads
   the postings directory and ignores the extra partition column.
 
@@ -32,11 +32,12 @@ stream's checkpoint has moved past those batches).
 
 from __future__ import annotations
 
-import json
-import os
+import posixpath
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from afg_data_pipeline_spark.streaming.sinks import write_owned
 
 
 def bootstrap_ivfpq_model(
@@ -54,33 +55,11 @@ def bootstrap_ivfpq_model(
     ingest (batch or streaming) goes through
     append_to_ivfpq_index, so bootstrap rows and streamed rows
     take the identical code path."""
-    from afg_data_pipeline_spark.operators.pq import pq_train
-    from afg_data_pipeline_spark.operators.similarity import (
-        seeded_centroids,
-    )
+    from afg_data_pipeline_spark.operators.pq import _save_ivfpq_model
 
-    cents = seeded_centroids(corpus, id_col, vec_col, n_centroids)
-    cents.write.mode("overwrite").parquet(
-        os.path.join(index_dir, "centroids")
+    _save_ivfpq_model(
+        corpus, index_dir, id_col, vec_col, m, k, n_centroids, dim
     )
-    books = pq_train(
-        corpus, id_col=id_col, vec_col=vec_col, m=m, k=k,
-        dim=dim, iterations=0,
-    )
-    os.makedirs(index_dir, exist_ok=True)
-    with open(
-        os.path.join(index_dir, "codebooks.json"), "w"
-    ) as fh:
-        json.dump(
-            {
-                "m": m,
-                "k": k,
-                "dim": dim,
-                "n_centroids": n_centroids,
-                "codebooks": books,
-            },
-            fh,
-        )
 
 
 def append_to_ivfpq_index(
@@ -97,54 +76,29 @@ def append_to_ivfpq_index(
     Foreach-batch ids start at 0: manual backfills/bootstrap
     appends must use NEGATIVE batch ids, or the stream's first
     micro-batch will dynamically overwrite their partitions."""
-    from afg_data_pipeline_spark.operators.pq import pq_encode
-    from afg_data_pipeline_spark.operators.similarity import (
-        ivf_assign,
+    from afg_data_pipeline_spark.operators.pq import (
+        _ivfpq_postings,
+        _load_ivfpq_model,
     )
 
-    spark = batch_df.sparkSession
-    with open(
-        os.path.join(index_dir, "codebooks.json")
-    ) as fh:
-        meta = json.load(fh)
-    cents = spark.read.parquet(
-        os.path.join(index_dir, "centroids")
-    )
-    cells = ivf_assign(
-        batch_df, cents, id_col, vec_col, n_probe=1
-    ).select(F.col(id_col).alias("id"), "centroid_id")
-    codes = pq_encode(
-        batch_df, meta["codebooks"], id_col=id_col,
-        vec_col=vec_col,
-    )
-    (
-        cells.join(codes, "id")
-        .select(
-            F.col("id").alias("neighbor_id"),
-            "codes",
-            "centroid_id",
-            F.lit(int(batch_id)).alias("batch_id"),
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("centroid_id", "batch_id")
-        .parquet(os.path.join(index_dir, "postings"))
+    cents, books = _load_ivfpq_model(batch_df.sparkSession, index_dir)
+    write_owned(
+        _ivfpq_postings(batch_df, cents, books, id_col, vec_col)
+        .withColumn("batch_id", F.lit(int(batch_id))),
+        posixpath.join(index_dir, "postings"),
+        "centroid_id",
     )
 
 
 def ann_index_sink(
-    stream: DataFrame,
     index_dir: str,
-    checkpoint_dir: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ):
-    """foreachBatch writer: every arriving micro-batch becomes
-    servable postings. availableNow so tests and backfills drain
-    the source; a production deployment drops the trigger for
-    continuous ingest."""
+    """foreachBatch function: every arriving micro-batch becomes
+    servable postings; empty batches write nothing."""
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         append_to_ivfpq_index(
@@ -152,9 +106,4 @@ def ann_index_sink(
             id_col=id_col, vec_col=vec_col,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return write_batch

@@ -14,12 +14,10 @@ broadcast joins of the loaded model. Scoring semantics are
 pins this), so the streamed scores are bit-identical to running
 the batch scorer over the same rows.
 
-Idempotence (same-checkpoint recovery, the streaming/sinks.py
-contract): the scores write is a dynamic partition overwrite keyed
-by batch_id — a replayed batch overwrites its own partition
-byte-identically. The model is read-only state; unlike the DSIR
-sink there is no order-dependent store, so replays are trivially
-safe.
+Idempotence: the scores write is streaming/sinks.write_owned, so
+same-checkpoint recovery holds as documented there. The model is
+read-only state; unlike the DSIR sink there is no order-dependent
+store, so replays are trivially safe.
 """
 
 from __future__ import annotations
@@ -29,6 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from afg_data_pipeline_spark.operators.classify import nb_score
+from afg_data_pipeline_spark.streaming.sinks import write_owned
 
 
 def persist_nb_model(
@@ -88,34 +87,6 @@ def nb_scoring_sink(
             token_model,
             class_model,
         ).withColumn("batch_id", F.lit(int(batch_id)))
-        (
-            scored.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(scores_dir)
-        )
+        write_owned(scored, scores_dir)
 
     return write_batch
-
-
-def run_nb_scoring(
-    stream_df: DataFrame,
-    model_dir: str,
-    scores_dir: str,
-    checkpoint_dir: str,
-    tokens_sql: str,
-    **kwargs,
-) -> None:
-    """Drain a document stream through the NB scoring sink
-    (availableNow: process the backlog, then stop)."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            nb_scoring_sink(
-                model_dir, scores_dir, tokens_sql, **kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

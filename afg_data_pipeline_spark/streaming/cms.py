@@ -4,8 +4,8 @@ heavy_hitters_cms, following the drift/DSIR persisted-store
 pattern).
 
 Two tables under ``store_dir``, both partitioned by batch_id so a
-crashed-and-replayed batch REPLACES its own partitions (dynamic
-overwrite — the streaming/sinks.py recovery recipe):
+crashed-and-replayed batch REPLACES its own partitions
+(streaming/sinks.write_owned):
 
 - ``counters``: the batch's (j, pos, c) Count-Min table.
   Counter-matrix addition commutes, so summing the per-batch
@@ -38,6 +38,7 @@ from afg_data_pipeline_spark.operators.cms import (
     cms_build,
     cms_estimate,
 )
+from afg_data_pipeline_spark.streaming.sinks import write_owned
 
 
 def append_cms_batch(
@@ -55,12 +56,7 @@ def append_cms_batch(
     counters = cms_build(
         batch_df.select(key_col), key_col, width, depth
     ).withColumn("batch_id", F.lit(int(batch_id)))
-    (
-        counters.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(os.path.join(store_dir, "counters"))
-    )
+    write_owned(counters, os.path.join(store_dir, "counters"))
     keys = batch_df.select(
         F.col(key_col).cast("string").alias("key")
     )
@@ -72,28 +68,21 @@ def append_cms_batch(
         .select("key")
         .withColumn("batch_id", F.lit(int(batch_id)))
     )
-    (
-        cand.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(os.path.join(store_dir, "candidates"))
-    )
+    write_owned(cand, os.path.join(store_dir, "candidates"))
 
 
 def cms_sink(
-    stream: DataFrame,
     store_dir: str,
-    checkpoint_dir: str,
     key_col: str,
     width: int = 1024,
     depth: int = 4,
     s_num: int = 1,
     s_den: int = 200,
 ):
-    """foreachBatch writer maintaining the store. availableNow for
-    tests/backfills; drop the trigger for continuous ingest."""
+    """foreachBatch function maintaining the store; empty batches
+    write nothing."""
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         append_cms_batch(
@@ -101,12 +90,7 @@ def cms_sink(
             width=width, depth=depth, s_num=s_num, s_den=s_den,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return write_batch
 
 
 def read_merged_counters(

@@ -18,11 +18,10 @@ batches. Batch 0 compares against the smoothing prior alone — the
 uniform distribution — and is reported, not suppressed (a wildly
 non-uniform first feed IS a signal).
 
-Idempotence (same-checkpoint recovery, the streaming/sinks.py
-contract): both writes are dynamic partition overwrites keyed by
-batch_id, and the reference read filters batch_id < current — a
-replayed batch overwrites its own partitions byte-identically and
-never sees its own delta.
+Idempotence: both writes are streaming/sinks.write_owned and the
+reference read is streaming/sinks.prior (batch_id < current), so
+same-checkpoint recovery holds as documented there — a replayed
+batch never sees its own delta.
 
 Scale shape: per batch, one map-side-combinable 10-bin histogram
 of the BATCH; the store read is 10 rows per prior batch with
@@ -38,7 +37,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..fs import store_exists
+from afg_data_pipeline_spark.streaming.sinks import prior, write_owned
 
 
 def _bin_expr(value_col: str, cuts: Sequence[int]):
@@ -85,20 +84,18 @@ def drift_monitor_sink(
         spine = spark.range(n_bins).select(
             F.col("id").cast("int").alias("bin")
         )
-        if store_exists(spark, bins_dir):
-            prior = (
-                spark.read.parquet(bins_dir)
-                .filter(F.col("batch_id") < batch_id)
-                .groupBy("bin")
-                .agg(F.sum("c").cast("bigint").alias("rc"))
-            )
-        else:
-            prior = spine.select(
+        earlier = prior(spark, bins_dir, batch_id)
+        if earlier is None:
+            ref = spine.select(
                 "bin", F.lit(0).cast("bigint").alias("rc")
             ).limit(0)
+        else:
+            ref = earlier.groupBy("bin").agg(
+                F.sum("c").cast("bigint").alias("rc")
+            )
         grid = (
             spine.join(F.broadcast(counts), "bin", "left")
-            .join(F.broadcast(prior), "bin", "left")
+            .join(F.broadcast(ref), "bin", "left")
             .select(
                 "bin",
                 F.coalesce(F.col("c"), F.lit(0)).alias("c"),
@@ -130,47 +127,18 @@ def drift_monitor_sink(
             .cast("bigint")
             .alias("term_q"),
         )
-        (
+        write_owned(
             terms.agg(
                 F.max("n").cast("bigint").alias("n_docs"),
                 (
                     F.sum("term_q").cast("bigint").cast("double")
                     / F.lit(1e12)
                 ).alias("psi"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(psi_dir)
+            ).withColumn("batch_id", F.lit(batch_id)),
+            psi_dir,
         )
-        (
-            counts.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(bins_dir)
+        write_owned(
+            counts.withColumn("batch_id", F.lit(batch_id)), bins_dir
         )
 
     return write_batch
-
-
-def run_drift_monitor(
-    stream_df: DataFrame,
-    store_dir: str,
-    psi_dir: str,
-    checkpoint_dir: str,
-    cuts: Sequence[int],
-    **kwargs,
-) -> None:
-    """Drain a document stream through the drift-monitor sink
-    (availableNow: process the backlog, then stop)."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            drift_monitor_sink(store_dir, psi_dir, cuts, **kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

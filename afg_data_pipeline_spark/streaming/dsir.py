@@ -18,11 +18,10 @@ retrospective scores; this sink gives the online ones. Batch 0
 scores against the Laplace prior alone (all buckets equally likely
 in both distributions → every log-ratio is 0 → every score is 0.0).
 
-Idempotence (same-checkpoint recovery, the streaming/sinks.py
-contract): both writes are dynamic partition overwrites keyed by
-batch_id, and scoring reads ONLY store partitions with
-batch_id < current — a replayed batch overwrites its own partitions
-byte-identically and never sees its own deltas.
+Idempotence: both writes are streaming/sinks.write_owned and
+scoring reads only streaming/sinks.prior (batch_id < current), so
+same-checkpoint recovery holds as documented there — a replayed
+batch never sees its own deltas.
 
 Scale shape: per batch, one gram pass over the BATCH (tiny), a
 16^n_hex-row distribution read with partition pruning on batch_id,
@@ -37,11 +36,11 @@ import posixpath
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from afg_data_pipeline_spark.fs import store_exists
 from afg_data_pipeline_spark.operators.dsir import (
     _bucket_spine,
     _gram_buckets,
 )
+from afg_data_pipeline_spark.streaming.sinks import prior, write_owned
 
 
 def dsir_scoring_sink(
@@ -88,23 +87,19 @@ def dsir_scoring_sink(
             .localCheckpoint(eager=False)
         )
         spine = _bucket_spine(batch_df, n_hex)
-        if store_exists(spark, buckets_dir):
-            prior = (
-                spark.read.parquet(buckets_dir)
-                .filter(F.col("batch_id") < batch_id)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("rc").cast("bigint").alias("rc"),
-                    F.sum("tc").cast("bigint").alias("tc"),
-                )
-            )
-        else:
-            prior = spine.select(
+        earlier = prior(spark, buckets_dir, batch_id)
+        if earlier is None:
+            ref = spine.select(
                 "bucket",
                 F.lit(0).cast("bigint").alias("rc"),
                 F.lit(0).cast("bigint").alias("tc"),
             ).limit(0)
-        dist = spine.join(prior, "bucket", "left").select(
+        else:
+            ref = earlier.groupBy("bucket").agg(
+                F.sum("rc").cast("bigint").alias("rc"),
+                F.sum("tc").cast("bigint").alias("tc"),
+            )
+        dist = spine.join(ref, "bucket", "left").select(
             "bucket",
             F.coalesce(F.col("rc"), F.lit(0)).alias("rc"),
             F.coalesce(F.col("tc"), F.lit(0)).alias("tc"),
@@ -144,7 +139,7 @@ def dsir_scoring_sink(
                 ).alias("sq"),
             )
         )
-        (
+        write_owned(
             batch_df.select(F.col(id_col).alias("id"))
             .join(scored, "id", "left")
             .select(
@@ -157,13 +152,10 @@ def dsir_scoring_sink(
                     / F.lit(1e9)
                 ).alias("score"),
             )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(scores_dir)
+            .withColumn("batch_id", F.lit(batch_id)),
+            scores_dir,
         )
-        (
+        write_owned(
             doc_counts.groupBy("bucket")
             .agg(
                 F.sum("c").cast("bigint").alias("rc"),
@@ -176,34 +168,8 @@ def dsir_scoring_sink(
                 "rc",
                 F.coalesce(F.col("tc"), F.lit(0)).alias("tc"),
             )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(buckets_dir)
+            .withColumn("batch_id", F.lit(batch_id)),
+            buckets_dir,
         )
 
     return write_batch
-
-
-def run_dsir_scoring(
-    stream_df: DataFrame,
-    store_dir: str,
-    scores_dir: str,
-    checkpoint_dir: str,
-    target_cond_sql: str,
-    **kwargs,
-) -> None:
-    """Drain a document stream through the DSIR scoring sink
-    (availableNow: process the backlog, then stop)."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            dsir_scoring_sink(
-                store_dir, scores_dir, target_cond_sql, **kwargs
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

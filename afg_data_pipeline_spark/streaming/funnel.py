@@ -8,10 +8,8 @@ answer to "did the quality mix of the feed just change": a batch
 whose drop profile jumps is visible the moment it lands, not at
 the next offline sweep.
 
-Idempotence (same-checkpoint recovery, the streaming/sinks.py
-contract): the write is a dynamic partition overwrite keyed by
-batch_id — a replayed batch overwrites its own partitions
-byte-identically.
+Idempotence: the write is streaming/sinks.write_owned, so
+same-checkpoint recovery holds as documented there.
 
 Scale shape per batch: one token explode over the BATCH (never
 accumulated state), map-side-combinable metric aggregate, fifteen
@@ -22,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from afg_data_pipeline_spark.streaming.sinks import write_owned
 
 
 def quality_funnel_sink(report_dir: str):
@@ -35,31 +35,9 @@ def quality_funnel_sink(report_dir: str):
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         report = funnel_rollup(funnel_flags(batch_df))
-        (
-            report.withColumn("batch_id", F.lit(batch_id))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(report_dir)
+        write_owned(
+            report.withColumn("batch_id", F.lit(batch_id)).coalesce(1),
+            report_dir,
         )
 
     return write_batch
-
-
-def run_quality_funnel(
-    stream_df: DataFrame,
-    report_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Drain a document stream through the funnel sink
-    (availableNow: process the backlog, then stop)."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            quality_funnel_sink(report_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

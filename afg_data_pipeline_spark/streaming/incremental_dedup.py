@@ -6,11 +6,11 @@ each micro-batch's (id, band_key) and (id, shingles) tables as
 parquet partitioned by batch_id, and every new batch joins its few
 band rows against the store.
 
-Idempotence (same-checkpoint recovery, the streaming/sinks.py
-contract): all writes are dynamic partition overwrites keyed by
-batch_id, and the flag join reads ONLY store partitions with
-batch_id < current — so a replayed batch neither duplicates store
-rows nor flags itself against its own just-written signatures.
+Idempotence: all writes are streaming/sinks.write_owned and the
+flag join reads only streaming/sinks.prior (batch_id < current), so
+same-checkpoint recovery holds as documented there — a replayed
+batch neither duplicates store rows nor flags itself against its
+own just-written signatures.
 
 Scale shape: the store grows linearly in corpus size but the
 per-batch work is (batch bands) ⋈ (store bands) — an equi-join on
@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from afg_data_pipeline_spark.fs import delete_path, store_exists
 from afg_data_pipeline_spark.operators.dedup import _minhash_band_table
+from afg_data_pipeline_spark.streaming.sinks import prior, write_owned
 
 
 def incremental_dedup_sink(
@@ -59,14 +60,9 @@ def incremental_dedup_sink(
         base, long = _minhash_band_table(
             batch_df, id_col, text_col, n_hashes, band_size, shingle_k
         )
-        have_store = store_exists(spark, bands_dir)
-        if have_store:
-            prior_bands = spark.read.parquet(bands_dir).filter(
-                F.col("batch_id") < batch_id
-            )
-            prior_sh = spark.read.parquet(shingles_dir).filter(
-                F.col("batch_id") < batch_id
-            )
+        prior_bands = prior(spark, bands_dir, batch_id)
+        if prior_bands is not None:
+            prior_sh = prior(spark, shingles_dir, batch_id)
             pairs = (
                 long.select(
                     F.col(id_col).alias("new_id"), "band_key"
@@ -123,7 +119,7 @@ def incremental_dedup_sink(
                     ).cast("double")
                 )
 
-            (
+            write_owned(
                 filter_once(
                     flagged,
                     inter,
@@ -135,54 +131,21 @@ def incremental_dedup_sink(
                     "dup_of",
                     jac_of(F.col("__i")).alias("jaccard"),
                 )
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(flags_dir)
+                .withColumn("batch_id", F.lit(batch_id)),
+                flags_dir,
             )
-        (
-            long.select(
-                F.col(id_col).alias("id"), "band_key"
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(bands_dir)
+        write_owned(
+            long.select(F.col(id_col).alias("id"), "band_key")
+            .withColumn("batch_id", F.lit(batch_id)),
+            bands_dir,
         )
-        (
-            base.select(
-                F.col(id_col).alias("id"), "shingles"
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(shingles_dir)
+        write_owned(
+            base.select(F.col(id_col).alias("id"), "shingles")
+            .withColumn("batch_id", F.lit(batch_id)),
+            shingles_dir,
         )
 
     return write_batch
-
-
-def run_incremental_dedup(
-    stream_df: DataFrame,
-    store_dir: str,
-    flags_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-) -> None:
-    """Drain a document stream through the incremental-dedup sink
-    (availableNow: process the backlog, then stop)."""
-    q = (
-        stream_df.writeStream.foreachBatch(
-            incremental_dedup_sink(store_dir, flags_dir, **kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def purge_ids_from_store(
@@ -254,12 +217,7 @@ def purge_ids_from_store(
             for r in keep.select("batch_id").distinct().collect()
         }
         if kept_batches:
-            (
-                keep.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
+            write_owned(keep, path)
         for empty in set(affected) - kept_batches:
             delete_path(
                 spark, posixpath.join(path, f"batch_id={empty}")

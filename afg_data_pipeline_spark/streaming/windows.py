@@ -173,38 +173,23 @@ def dedup_first_event(
 
 
 def run_to_memory_sink(
-    df: DataFrame, query_name: str, spark=None
+    df: DataFrame, query_name: str, output_mode: str
 ) -> DataFrame:
     """Execute a streaming DF with availableNow into a memory sink
-    and return the materialized result (test/dev harness).
+    in ``output_mode`` ("complete" for aggregations, "append" for
+    dedup/row streams) and return the materialized result
+    (test/dev harness).
 
     availableNow processes the entire backlog in bounded
     micro-batches then stops — the deterministic way to drive a
     stream in tests and backfills.
     """
-    q = (
+    (
         df.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode("complete")
+        .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
+        .awaitTermination()
     )
-    q.awaitTermination()
-    session = spark or df.sparkSession
-    return session.table(query_name)
-
-
-def run_append_to_memory_sink(
-    df: DataFrame, query_name: str, spark=None
-) -> DataFrame:
-    """availableNow + append mode (for dedup/row streams)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    session = spark or df.sparkSession
-    return session.table(query_name)
+    return df.sparkSession.table(query_name)

@@ -107,3 +107,23 @@ class TestPersistedIndex:
         plan = served._jdf.queryExecution().executedPlan().toString()
         assert "tbucket" in plan and "PartitionFilters: [" in plan
         assert "tbucket#" in plan.split("PartitionFilters")[1][:200]
+
+    def test_file_uri_index_round_trip(self, spark, tmp_path):
+        """Addressed as a ``file://`` URI, build writes stats.json
+        into the index dir (through the Hadoop FileSystem, not a
+        driver-local open()) and serving reads it back."""
+        from afg_data_pipeline_spark.operators.bm25 import (
+            build_bm25_index,
+            query_bm25_index,
+        )
+
+        docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
+        idx = "file://" + str(tmp_path / "bm25idx")
+        build_bm25_index(docs, idx)
+        assert (tmp_path / "bm25idx" / "stats.json").is_file()
+        queries = [("q1", "apple banana"), ("q2", "durian")]
+        served = query_bm25_index(spark, idx, queries, k=10)
+        oneshot = bm25_topk(docs, queries, k=10)
+        assert sorted(map(tuple, served.collect())) == sorted(
+            map(tuple, oneshot.collect())
+        )

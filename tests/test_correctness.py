@@ -205,6 +205,52 @@ def test_one_fixpoint_loop():
     assert errors == []
 
 
+def test_one_batch_store():
+    """The store layout has one home. ``"partitionOverwriteMode"``,
+    ``foreachBatch(`` and the ``availableNow`` trigger appear only in
+    streaming/sinks.py (write_owned / drain), streaming/windows.py
+    (the memory-sink harness) and io.py (write_parquet). And no
+    ``open(`` / ``os.makedirs`` call sits outside fs.py, so store
+    paths and index metadata go through the Hadoop FileSystem;
+    sources/ (local input readers) and plans/_fingerprint.py (reads
+    the package's own source) are exempt."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "afg_data_pipeline_spark"
+    layout_home = {"streaming/sinks.py", "streaming/windows.py", "io.py"}
+    errors = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        local_files_ok = rel in (
+            "fs.py",
+            "plans/_fingerprint.py",
+        ) or rel.startswith("sources/")
+        for node in ast.walk(ast.parse(path.read_text())):
+            where = f"{rel}:{getattr(node, 'lineno', '?')}"
+            if rel not in layout_home:
+                if (
+                    isinstance(node, ast.Constant)
+                    and node.value == "partitionOverwriteMode"
+                ):
+                    errors.append(f"{where}: dynamic overwrite")
+                if isinstance(node, ast.Call) and (
+                    ast.unparse(node.func).endswith(".foreachBatch")
+                ):
+                    errors.append(f"{where}: foreachBatch")
+                if isinstance(node, ast.Call) and any(
+                    kw.arg == "availableNow" for kw in node.keywords
+                ):
+                    errors.append(f"{where}: availableNow trigger")
+            if local_files_ok or not isinstance(node, ast.Call):
+                continue
+            func = ast.unparse(node.func)
+            if func == "open" or func.endswith("makedirs"):
+                errors.append(f"{where}: {func}( on a local path")
+    assert errors == []
+
+
 def test_coverage_order_leads_with_never_checked():
     """queries() lists every registered name once, and a name with no
     CORRECTNESS_r*.json row (never driver-checked) sorts ahead of

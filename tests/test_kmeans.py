@@ -4,6 +4,7 @@ arithmetic independently of DuckDB) plus clustering-sanity checks."""
 
 from __future__ import annotations
 
+from afg_data_pipeline_spark.operators import kmeans, similarity
 from afg_data_pipeline_spark.operators.kmeans import (
     OFF,
     QUANT,
@@ -112,7 +113,7 @@ class TestKmeansAssign:
             kmeans_assign(df, k=4, iterations=1, dim=8)
 
     def test_numpy_strategy_bit_identical(self, spark, monkeypatch):
-        """The k > AFG_KMEANS_LITERAL_MAX_K strategy (exact int64
+        """The k > _LITERAL_MAX_K strategy (exact int64
         numpy assignment in mapInPandas) must reproduce the
         literal-fold path bit-for-bit — same distances, same
         smallest-cid tie-break, same centroid evolution — at every
@@ -122,14 +123,14 @@ class TestKmeansAssign:
             vecs, "vec_id long, embedding array<double>"
         )
         for k in (3, 4, 7):
-            monkeypatch.setenv("AFG_KMEANS_LITERAL_MAX_K", "999")
+            monkeypatch.setattr(kmeans, "_LITERAL_MAX_K", 999)
             literal = {
                 r.id: (r.cluster, r.dist_q)
                 for r in kmeans_assign(
                     df, k=k, iterations=3, dim=8
                 ).collect()
             }
-            monkeypatch.setenv("AFG_KMEANS_LITERAL_MAX_K", "0")
+            monkeypatch.setattr(kmeans, "_LITERAL_MAX_K", 0)
             vectorized = {
                 r.id: (r.cluster, r.dist_q)
                 for r in kmeans_assign(
@@ -376,14 +377,12 @@ class TestFunnelRerank:
         )
         queries = df.filter("vec_id < 5")
         cand = binary_hamming_topk(queries, df, k=5, dim=8)
-        monkeypatch.setenv(
-            "AFG_RERANK_LEAN_MAX_CAND", str(10**9)
-        )
+        monkeypatch.setattr(similarity, "_LEAN_MAX_CAND", 10**9)
         lean = sorted(
             tuple(r)
             for r in exact_rerank_topk(cand, df, k=3).collect()
         )
-        monkeypatch.setenv("AFG_RERANK_LEAN_MAX_CAND", "0")
+        monkeypatch.setattr(similarity, "_LEAN_MAX_CAND", 0)
         hoisted = sorted(
             tuple(r)
             for r in exact_rerank_topk(cand, df, k=3).collect()
@@ -458,7 +457,7 @@ class TestNumpyPathMultiBatch:
         df = spark.createDataFrame(
             vecs, "vec_id long, embedding array<double>"
         ).coalesce(1)
-        monkeypatch.setenv("AFG_KMEANS_LITERAL_MAX_K", "999")
+        monkeypatch.setattr(kmeans, "_LITERAL_MAX_K", 999)
         literal = {
             r.id: (r.cluster, r.dist_q)
             for r in kmeans_assign(
@@ -471,7 +470,7 @@ class TestNumpyPathMultiBatch:
         spark.conf.set(
             "spark.sql.execution.arrow.maxRecordsPerBatch", "7"
         )
-        monkeypatch.setenv("AFG_KMEANS_LITERAL_MAX_K", "0")
+        monkeypatch.setattr(kmeans, "_LITERAL_MAX_K", 0)
         try:
             vectorized = {
                 r.id: (r.cluster, r.dist_q)

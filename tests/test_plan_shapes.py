@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from afg_data_pipeline_spark.io import write_parquet
-from afg_data_pipeline_spark.operators import _setsim_local
+from afg_data_pipeline_spark.operators import _setsim_local, prefixsum
 from afg_data_pipeline_spark.plans import REGISTRY
 from tests.conftest import SF_DIR
 
@@ -299,7 +299,7 @@ class TestNewLlmOpShapes:
         # tiny test sf exercises the at-scale plan shape.
         import re
 
-        monkeypatch.setenv("AFG_CUMSUM_PLAIN_MAX_GROUP_ROWS", "0")
+        monkeypatch.setattr(prefixsum, "_PLAIN_MAX_GROUP_ROWS", 0)
         df = REGISTRY["pack_token_stream"].fn(spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
         win_lines = [

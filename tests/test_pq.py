@@ -372,3 +372,37 @@ class TestPersistedIndex:
         # strict subset at least once across seeds; assert the IN
         # list is present (literal pruning, not a runtime filter)
         assert "IN" in m_.group(1) or "in" in m_.group(1), plan
+
+    def test_file_uri_index_round_trip(self, spark, tmp_path):
+        """Addressed as a ``file://`` URI, codebooks.json lands in
+        the index dir beside centroids and postings (not in a
+        CWD-relative ``file:`` directory) and serving from the URI
+        equals serving from the plain path."""
+        from afg_data_pipeline_spark.io import read_star_table
+        from afg_data_pipeline_spark.operators.pq import (
+            build_ivfpq_index,
+            query_ivfpq_index,
+        )
+
+        emb = read_star_table(
+            spark, "embeddings", "/root/testdata/sf0.001"
+        )
+        queries = emb.filter("vec_id < 8")
+        plain = str(tmp_path / "plain")
+        uri = "file://" + str(tmp_path / "uri")
+        for idx in (plain, uri):
+            build_ivfpq_index(
+                emb, idx, m=8, k=16, n_centroids=16, dim=64
+            )
+        assert (tmp_path / "uri" / "codebooks.json").is_file()
+        got, want = (
+            sorted(
+                tuple(r)
+                for r in query_ivfpq_index(
+                    spark, idx, queries, k=5, n_probe=2
+                ).collect()
+            )
+            for idx in (uri, plain)
+        )
+        assert len(want) == 8 * 5
+        assert got == want

@@ -8,7 +8,10 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import Window
 
+from afg_data_pipeline_spark.operators import prefixsum
 from afg_data_pipeline_spark.operators.prefixsum import sharded_cumsum
+
+_PLAIN_MAX_GROUP_ROWS = prefixsum._PLAIN_MAX_GROUP_ROWS
 
 
 def _plain_cumsum(df, value_col, order_col, partition_cols):
@@ -50,7 +53,7 @@ def _force_sharded(monkeypatch):
     with the adaptive threshold at its 8M default, the tiny test
     groups would all take the plain-window path and the tests
     would compare plain against plain."""
-    monkeypatch.setenv("AFG_CUMSUM_PLAIN_MAX_GROUP_ROWS", "0")
+    monkeypatch.setattr(prefixsum, "_PLAIN_MAX_GROUP_ROWS", 0)
 
 
 class TestShardedCumsum:
@@ -113,8 +116,8 @@ class TestShardedCumsum:
         # Default threshold (8M rows/group): small groups take the
         # one-shuffle plain window — no __shard machinery in the
         # plan — and the values are identical either way.
-        monkeypatch.delenv(
-            "AFG_CUMSUM_PLAIN_MAX_GROUP_ROWS", raising=False
+        monkeypatch.setattr(
+            prefixsum, "_PLAIN_MAX_GROUP_ROWS", _PLAIN_MAX_GROUP_ROWS
         )
         got = sharded_cumsum(frame, "v", "k", ["g"], n_shards=8)
         plan = got._jdf.queryExecution().executedPlan().toString()
@@ -127,13 +130,13 @@ class TestShardedCumsum:
         # Largest group in the fixture is 900 rows: cap 900 -> plain,
         # cap 899 -> sharded; both bit-identical.
         want = _rows(_plain_cumsum(frame, "v", "k", ["g"]))
-        monkeypatch.setenv("AFG_CUMSUM_PLAIN_MAX_GROUP_ROWS", "900")
+        monkeypatch.setattr(prefixsum, "_PLAIN_MAX_GROUP_ROWS", 900)
         plain = sharded_cumsum(frame, "v", "k", ["g"], n_shards=8)
         assert "__shard" not in (
             plain._jdf.queryExecution().executedPlan().toString()
         )
         assert _rows(plain) == want
-        monkeypatch.setenv("AFG_CUMSUM_PLAIN_MAX_GROUP_ROWS", "899")
+        monkeypatch.setattr(prefixsum, "_PLAIN_MAX_GROUP_ROWS", 899)
         sharded = sharded_cumsum(frame, "v", "k", ["g"], n_shards=8)
         assert "__shard" in (
             sharded._jdf.queryExecution().executedPlan().toString()

@@ -17,7 +17,6 @@ from afg_data_pipeline_spark.io import read_star_table
 from afg_data_pipeline_spark.streaming.windows import (
     dedup_within_watermark,
     read_events_stream,
-    run_append_to_memory_sink,
     run_to_memory_sink,
     session_window_agg,
     tumbling_window_agg,
@@ -55,7 +54,7 @@ class TestStreamBatchParity:
         got = run_to_memory_sink(
             tumbling_window_agg(stream, "1 hour", ["event_type"]),
             "t_tumble",
-            spark,
+            "complete",
         )
         want = tumbling_window_agg(
             _batch(spark, events_dir), "1 hour", ["event_type"]
@@ -71,7 +70,7 @@ class TestStreamBatchParity:
         got = run_to_memory_sink(
             session_window_agg(stream, "30 minutes", ["user_id"]),
             "t_session",
-            spark,
+            "complete",
         )
         want = session_window_agg(
             _batch(spark, events_dir), "30 minutes", ["user_id"]
@@ -92,13 +91,13 @@ class TestStreamStreamJoin:
         stream = read_events_stream(
             spark, events_dir, schemas.EVENTS, max_files_per_trigger=2
         )
-        got = run_append_to_memory_sink(
+        got = run_to_memory_sink(
             attribution_join(
                 stream.filter(F.col("event_type") == "view"),
                 stream.filter(F.col("event_type") == "click"),
             ),
             "t_attr_join",
-            spark,
+            "append",
         )
         b = _batch(spark, events_dir)
         want = attribution_join(
@@ -123,7 +122,7 @@ class TestStreamStaticJoin:
         stream = read_events_stream(
             spark, events_dir, schemas.EVENTS, max_files_per_trigger=2
         )
-        got = run_append_to_memory_sink(
+        got = run_to_memory_sink(
             enrich_with_dimension(
                 stream.select("event_id", "user_id", "value"),
                 cust,
@@ -132,7 +131,7 @@ class TestStreamStaticJoin:
                 ["c_mktsegment"],
             ),
             "t_enrich",
-            spark,
+            "append",
         )
         b = _batch(spark, events_dir)
         want = enrich_with_dimension(
@@ -180,12 +179,12 @@ class TestStreamingGeofence:
         stream = read_events_stream(
             spark, events_dir, schemas.EVENTS, max_files_per_trigger=2
         )
-        got = run_append_to_memory_sink(
+        got = run_to_memory_sink(
             geofence_enrich(
                 pts(stream), _PIP_POLYGONS, id_col="event_id"
             ).select("event_id", "user_id", "event_type", "poly_id"),
             "t_geofence",
-            spark,
+            "append",
         )
         want = geofence_enrich(
             pts(_batch(spark, events_dir)),
@@ -213,7 +212,7 @@ class TestWatermark:
                 stream, "1 hour", "2 hours", ["event_type"]
             ),
             "t_wm",
-            spark,
+            "complete",
         )
         n_stream = sum(r.n_events for r in got.collect())
         n_batch = _batch(spark, events_dir).count()
@@ -232,10 +231,10 @@ class TestStreamingDedup:
         stream = read_events_stream(
             spark, dup_dir, schemas.EVENTS, max_files_per_trigger=8
         )
-        got = run_append_to_memory_sink(
+        got = run_to_memory_sink(
             dedup_within_watermark(stream, ["event_id"], "2 hours"),
             "t_dedup",
-            spark,
+            "append",
         )
         assert got.count() == ev.count()
 
@@ -261,12 +260,12 @@ class TestStreamingDedup:
             spark, ordered_dir, schemas.EVENTS,
             max_files_per_trigger=1,
         )
-        got = run_append_to_memory_sink(
+        got = run_to_memory_sink(
             dedup_within_watermark(
                 stream, ["user_id", "event_type"], "100 days"
             ),
             "t_dedup_twin",
-            spark,
+            "append",
         ).select("user_id", "event_type", "ts", "event_id")
         want = dedup_first_event(
             ev, ["user_id", "event_type"], "ts", "event_id"
@@ -297,7 +296,8 @@ class TestForeachBatchSink:
         import pyspark.sql.functions as F
 
         from afg_data_pipeline_spark.streaming.sinks import (
-            run_foreach_batch,
+            drain,
+            idempotent_parquet_sink,
         )
 
         src = tmp_path / "src"
@@ -312,7 +312,7 @@ class TestForeachBatchSink:
             .option("maxFilesPerTrigger", 2)
             .parquet(str(src))
         )
-        run_foreach_batch(stream, str(out), str(ckpt))
+        drain(stream, idempotent_parquet_sink(str(out)), str(ckpt))
         first = sorted(
             (r.id, r.v)
             for r in spark.read.parquet(str(out)).collect()
@@ -344,7 +344,7 @@ class TestForeachBatchSink:
             crc = entries[-1].parent / f".{entries[-1].name}.crc"
             if crc.exists():
                 crc.unlink()
-        run_foreach_batch(stream, str(out), str(ckpt2))
+        drain(stream, idempotent_parquet_sink(str(out)), str(ckpt2))
         second = sorted(
             (r.id, r.v)
             for r in spark.read.parquet(str(out)).collect()
@@ -380,7 +380,7 @@ class TestStreamingNearDup:
             with_simhash,
         )
         from afg_data_pipeline_spark.streaming.windows import (
-            run_append_to_memory_sink,
+            run_to_memory_sink,
         )
 
         base = "the quick brown fox jumps over the lazy dog"
@@ -416,10 +416,10 @@ class TestStreamingNearDup:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        got = run_append_to_memory_sink(
+        got = run_to_memory_sink(
             near_dup_within_watermark(stream),
             "t_near_dup_stream",
-            spark,
+            "append",
         )
         got_rows = got.collect()
         batch_sigs = {
@@ -452,8 +452,9 @@ class TestIncrementalDedupSink:
         import shutil
 
         from afg_data_pipeline_spark.streaming.incremental_dedup import (
-            run_incremental_dedup,
+            incremental_dedup_sink,
         )
+        from afg_data_pipeline_spark.streaming.sinks import drain
 
         import glob
         import os
@@ -500,8 +501,10 @@ class TestIncrementalDedupSink:
                 .parquet(str(src))
             )
 
-        run_incremental_dedup(
-            stream(), store, flags, str(ckpt), threshold=0.5
+        drain(
+            stream(),
+            incremental_dedup_sink(store, flags, threshold=0.5),
+            str(ckpt),
         )
         got = [
             (r.new_id, r.dup_of, r.jaccard)
@@ -533,8 +536,10 @@ class TestIncrementalDedupSink:
             crc = entries[-1].parent / f".{entries[-1].name}.crc"
             if crc.exists():
                 crc.unlink()
-        run_incremental_dedup(
-            stream(), store, flags, str(ckpt2), threshold=0.5
+        drain(
+            stream(),
+            incremental_dedup_sink(store, flags, threshold=0.5),
+            str(ckpt2),
         )
         again = [
             (r.new_id, r.dup_of, r.jaccard)
@@ -562,8 +567,9 @@ class TestIncrementalDedupSink:
         import os
 
         from afg_data_pipeline_spark.streaming.incremental_dedup import (
-            run_incremental_dedup,
+            incremental_dedup_sink,
         )
+        from afg_data_pipeline_spark.streaming.sinks import drain
 
         base = (
             "the quick brown fox jumps over the lazy dog and runs "
@@ -594,9 +600,10 @@ class TestIncrementalDedupSink:
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        run_incremental_dedup(
-            stream, store_uri, flags, str(tmp_path / "ckpt"),
-            threshold=0.5,
+        drain(
+            stream,
+            incremental_dedup_sink(store_uri, flags, threshold=0.5),
+            str(tmp_path / "ckpt"),
         )
         got = [
             (r.new_id, r.dup_of)
@@ -769,13 +776,13 @@ class TestStreamStreamOuterJoin:
             schemas.EVENTS,
             max_files_per_trigger=2,
         )
-        got = run_append_to_memory_sink(
+        got = run_to_memory_sink(
             attribution_join_outer(
                 stream.filter(F.col("event_type") == "view"),
                 stream.filter(F.col("event_type") == "click"),
             ),
             "t_attr_outer",
-            spark,
+            "append",
         )
         # real rows only: the sentinels themselves stay buffered
         # (nothing ever advances the watermark past THEM)

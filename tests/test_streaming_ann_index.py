@@ -17,6 +17,7 @@ from afg_data_pipeline_spark.streaming.ann_index import (
     append_to_ivfpq_index,
     bootstrap_ivfpq_model,
 )
+from afg_data_pipeline_spark.streaming.sinks import drain
 from tests.conftest import SF_DIR
 
 EMB_SCHEMA = (
@@ -67,10 +68,7 @@ class TestStreamingAnnIndex:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = ann_index_sink(
-            stream, sdir, str(tmp_path / "ckpt")
-        )
-        q.awaitTermination()
+        drain(stream, ann_index_sink(sdir), str(tmp_path / "ckpt"))
         got = _serve(spark, sdir)
         want = _serve(spark, bdir)
         assert len(want) > 0
@@ -113,3 +111,22 @@ class TestStreamingAnnIndex:
         assert cells  # top-level pruning key survives
         inner = os.listdir(d + "/postings/" + cells[0])
         assert any(e == "batch_id=7" for e in inner)
+
+    def test_file_uri_index_round_trip(
+        self, spark, split_corpus, tmp_path
+    ):
+        """Bootstrap + append addressed as a ``file://`` URI: the
+        frozen model's codebooks.json lands in the index dir (not a
+        CWD-relative ``file:`` directory), append reads it back, and
+        serving equals the plain-path index."""
+        boot, late = split_corpus
+        plain = str(tmp_path / "plain")
+        uri = "file://" + str(tmp_path / "uri")
+        for d in (plain, uri):
+            bootstrap_ivfpq_model(boot, d)
+            append_to_ivfpq_index(boot, d, batch_id=-1)
+            append_to_ivfpq_index(late, d, batch_id=0)
+        assert (tmp_path / "uri" / "codebooks.json").is_file()
+        want = _serve(spark, plain)
+        assert len(want) > 0
+        assert _serve(spark, uri) == want

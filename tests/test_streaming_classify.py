@@ -57,8 +57,9 @@ class TestStreamingNb:
 
     def _run_stream(self, spark, tmp_path, ckpt="ckpt"):
         from afg_data_pipeline_spark.streaming.classify import (
-            run_nb_scoring,
+            nb_scoring_sink,
         )
+        from afg_data_pipeline_spark.streaming.sinks import drain
 
         src = tmp_path / "src"
         os.makedirs(str(src), exist_ok=True)
@@ -74,12 +75,14 @@ class TestStreamingNb:
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        run_nb_scoring(
+        drain(
             stream,
-            str(tmp_path / "model"),
-            str(tmp_path / "scores"),
+            nb_scoring_sink(
+                str(tmp_path / "model"),
+                str(tmp_path / "scores"),
+                TOKENS_SQL,
+            ),
             str(tmp_path / ckpt),
-            TOKENS_SQL,
         )
 
     def test_stream_matches_batch_scorer(self, spark, tmp_path):

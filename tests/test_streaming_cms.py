@@ -16,6 +16,7 @@ from afg_data_pipeline_spark.streaming.cms import (
     heavy_hitters_from_store,
     read_merged_counters,
 )
+from afg_data_pipeline_spark.streaming.sinks import drain
 from tests.conftest import SF_DIR
 
 W, D = 256, 4
@@ -49,11 +50,14 @@ class TestStreamingCms:
             .option("maxFilesPerTrigger", 1)
             .parquet(token_stream_dir)
         )
-        q = cms_sink(
-            stream, store, str(tmp_path / "ckpt"), "tok",
-            width=W, depth=D, s_num=S_NUM, s_den=S_DEN,
+        drain(
+            stream,
+            cms_sink(
+                store, "tok",
+                width=W, depth=D, s_num=S_NUM, s_den=S_DEN,
+            ),
+            str(tmp_path / "ckpt"),
         )
-        q.awaitTermination()
         merged = read_merged_counters(spark, store)
         full = spark.read.parquet(token_stream_dir)
         batch = cms_build(full, "tok", width=W, depth=D)

@@ -50,8 +50,9 @@ def _write_batch_file(spark, src, tmp_path, fname, rows, mtime):
 class TestStreamingDrift:
     def _run(self, spark, tmp_path, ckpt_name="ckpt"):
         from afg_data_pipeline_spark.streaming.drift import (
-            run_drift_monitor,
+            drift_monitor_sink,
         )
+        from afg_data_pipeline_spark.streaming.sinks import drain
 
         src = tmp_path / "src"
         if not src.exists():
@@ -69,12 +70,12 @@ class TestStreamingDrift:
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        run_drift_monitor(
+        drain(
             stream,
-            str(tmp_path / "store"),
-            str(tmp_path / "psi"),
+            drift_monitor_sink(
+                str(tmp_path / "store"), str(tmp_path / "psi"), CUTS
+            ),
             str(tmp_path / ckpt_name),
-            CUTS,
         )
 
     def _psi_rows(self, spark, tmp_path):
@@ -131,8 +132,9 @@ class TestStreamingDrift:
         scheme — batch 1's PSI must be computed against batch 0's
         histogram, not the uniform prior."""
         from afg_data_pipeline_spark.streaming.drift import (
-            run_drift_monitor,
+            drift_monitor_sink,
         )
+        from afg_data_pipeline_spark.streaming.sinks import drain
 
         src = tmp_path / "src"
         src.mkdir()
@@ -147,12 +149,14 @@ class TestStreamingDrift:
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        run_drift_monitor(
+        drain(
             stream,
-            "file://" + str(tmp_path / "store"),
-            str(tmp_path / "psi"),
+            drift_monitor_sink(
+                "file://" + str(tmp_path / "store"),
+                str(tmp_path / "psi"),
+                CUTS,
+            ),
             str(tmp_path / "ckpt"),
-            CUTS,
         )
         got = self._psi_rows(spark, tmp_path)
         b1_vals = [v for _, v in BATCH1]

@@ -35,8 +35,9 @@ def _write_batch_file(spark, src, tmp_path, fname, rows, mtime):
 class TestStreamingFunnel:
     def _run(self, spark, tmp_path):
         from afg_data_pipeline_spark.streaming.funnel import (
-            run_quality_funnel,
+            quality_funnel_sink,
         )
+        from afg_data_pipeline_spark.streaming.sinks import drain
 
         src = tmp_path / "src"
         if not src.exists():
@@ -54,9 +55,9 @@ class TestStreamingFunnel:
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        run_quality_funnel(
+        drain(
             stream,
-            str(tmp_path / "report"),
+            quality_funnel_sink(str(tmp_path / "report")),
             str(tmp_path / "ckpt"),
         )
 
