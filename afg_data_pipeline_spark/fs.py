@@ -19,6 +19,10 @@ IVF-PQ ``codebooks.json``): a Python ``open()`` on a ``file://``
 URI raises, and a scheme-less ``open()`` of an ``hdfs://`` path
 writes a stray local directory.  ``write_json`` / ``read_json``
 route them through the same FileSystem as the tables.
+
+``parquet_footer_schema`` reads a parquet file's footer through the
+same FileSystem, so ``io.read_star_table`` can hand Spark the schema
+instead of paying its inference job.
 """
 
 from __future__ import annotations
@@ -26,6 +30,7 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 
 def _resolve(spark: SparkSession, path: str):
@@ -75,3 +80,38 @@ def read_json(spark: SparkSession, path: str):
         return json.loads(bytes(src.readAllBytes()).decode("utf-8"))
     finally:
         src.close()
+
+
+def parquet_footer_schema(spark: SparkSession, path: str):
+    """The Spark schema of the single parquet file at ``path``, read
+    from its footer on the driver, or None when ``path`` is not a file
+    (a part-file directory, or nothing). The conversion is Spark's
+    own: the footer's Spark schema when a Spark writer stored one,
+    else ``ParquetToSparkSchemaConverter`` under the session's SQL
+    conf, so the result equals what ``spark.read.parquet`` infers,
+    without the inference job."""
+    fs, p = _resolve(spark, path)
+    if not fs.exists(p):
+        return None
+    status = fs.getFileStatus(p)
+    if not status.isFile():
+        return None
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+            status, conf
+        )
+    )
+    try:
+        footer = jvm.org.apache.parquet.hadoop.Footer(p, reader.getFooter())
+    finally:
+        reader.close()
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        footer,
+        parquet.ParquetToSparkSchemaConverter(
+            spark._jsparkSession.sessionState().conf()
+        ),
+    )
+    return StructType.fromJson(json.loads(schema.json()))

@@ -1,10 +1,11 @@
 """Declared-schema readers and sinks.
 
 Upgrades the reference's inference-based scans (SURVEY.md §2.1
-S1-S5) to schema-validated Spark reads. At scale: passing an explicit
-schema skips the file-listing/inference job, and select-pruning plus
-filter pushdown reach the parquet scan (ReadSchema / PushedFilters in
-`.explain("formatted")`).
+S1-S5) to schema-validated Spark reads. ``read_star_table`` reads a
+single-file table's footer on the driver and passes it as the
+schema, which skips Spark's schema-inference job, and select-pruning
+plus filter pushdown reach the parquet scan (ReadSchema /
+PushedFilters in `.explain("formatted")`).
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from afg_data_pipeline_spark import schemas
+from afg_data_pipeline_spark import fs, schemas
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -68,11 +69,20 @@ def read_star_table(
     (names + types) rather than passed to the reader: parquet is
     self-describing, and a silent mismatch is exactly the fragility
     the reference suffers from (SURVEY.md §1).
+
+    A single-file table's footer schema is read on the driver
+    (``fs.parquet_footer_schema``, ~40 ms) and handed to the reader,
+    so the read launches no job; Spark's inference costs a job and
+    ~100 ms of CPU per call. A part-file directory keeps inference:
+    Spark picks the file to read and discovers the partitions.
     """
     if name not in schemas.STAR:
         raise KeyError(f"unknown star table {name!r}")
     ensure_session_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    footer = fs.parquet_footer_schema(spark, path)
+    reader = spark.read if footer is None else spark.read.schema(footer)
+    df = reader.parquet(path)
     declared = schemas.STAR[name]
     actual = {f.name: f.dataType for f in df.schema.fields}
     projected = []

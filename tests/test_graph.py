@@ -17,10 +17,12 @@ from tests.conftest import builder_jobs
 
 @pytest.fixture
 def distributed(monkeypatch):
-    """Route pagerank, bfs / weighted sssp and k-core through the
-    distributed path: every fixture below holds at least one edge or
-    node, so a bound of 0 sends them all past the driver kernels."""
+    """Route the radius graph, pagerank, bfs / weighted sssp and k-core
+    through the distributed path: every fixture below holds at least
+    one point, edge or node, so bounds of 0 send them all past the
+    driver kernels."""
     monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(graph, "_LOCAL_MAX_POINTS", 0)
 
 
 def _components_of(spark, edges):
@@ -808,6 +810,11 @@ class TestIterate:
 
 
 @pytest.mark.usefixtures("distributed")
+class TestRadiusEdgesDistributed(TestRadiusEdges):
+    pass
+
+
+@pytest.mark.usefixtures("distributed")
 class TestPagerankDistributed(TestPagerank):
     pass
 
@@ -866,6 +873,20 @@ _OPS = {
 }
 
 
+def _kernel_calls(monkeypatch):
+    """A list that grows by one per ``_local_frame`` call, which only
+    the kernels make."""
+    calls = []
+    real = graph._local_frame
+
+    def spy(*args):
+        calls.append(1)
+        return real(*args)
+
+    monkeypatch.setattr(graph, "_local_frame", spy)
+    return calls
+
+
 class TestLocalKernels:
     """The driver kernels against the distributed path: same rows,
     same schema, and each path is the one that really ran (spied on
@@ -877,17 +898,6 @@ class TestLocalKernels:
             spark.createDataFrame([(v,) for v in nodes], "id long"),
             spark.createDataFrame(edges, "src long, dst long, wt long"),
         )
-
-    def _spy(self, monkeypatch):
-        calls = []
-        real = graph._local_frame
-
-        def spy(*args):
-            calls.append(1)
-            return real(*args)
-
-        monkeypatch.setattr(graph, "_local_frame", spy)
-        return calls
 
     def _got(self, df):
         return sorted(df.collect()), df.schema.simpleString()
@@ -907,7 +917,7 @@ class TestLocalKernels:
         self, spark, monkeypatch, op, edges, it
     ):
         nodes, e = self._frames(spark, edges)
-        calls = self._spy(monkeypatch)
+        calls = _kernel_calls(monkeypatch)
         kernel = self._got(_OPS[op](nodes, e, it))
         assert calls == [1]
         # -1, not 0: an empty edge list must leave the kernel too
@@ -917,7 +927,7 @@ class TestLocalKernels:
         assert kernel == dist
 
     def _takes_distributed(self, monkeypatch, build):
-        calls = self._spy(monkeypatch)
+        calls = _kernel_calls(monkeypatch)
         rows = build().collect()
         assert calls == []
         return rows
@@ -1001,7 +1011,7 @@ class TestLocalKernels:
         # kcore's symmetrized list holds 2 rows per input edge
         edges = _random_graph(6)
         nodes, e = self._frames(spark, edges)
-        calls = self._spy(monkeypatch)
+        calls = _kernel_calls(monkeypatch)
         monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 2 * len(edges))
         kernel = _OPS["kcore"](nodes, e, 10).collect()
         assert calls == [1]
@@ -1009,6 +1019,155 @@ class TestLocalKernels:
         dist = _OPS["kcore"](nodes, e, 10).collect()
         assert calls == [1]
         assert sorted(kernel) == sorted(dist)
+
+
+def _points(spark, pts, schema="id long, x double, y double"):
+    return spark.createDataFrame(pts, schema)
+
+
+def _pseudorandom_points(seed, n=150, lo=-30.0, hi=30.0):
+    rng = random.Random(seed)
+    return [(i, rng.uniform(lo, hi), rng.uniform(lo, hi)) for i in range(n)]
+
+
+# exact cell edges (multiples of the radius, negative ones included),
+# pairs at distance exactly r = 1 and 5 (3-4-5), coincident points
+_EDGE_POINTS = [
+    (1, -2.0, -1.0), (2, -1.0, -1.0), (3, 0.0, 0.0), (4, 1.0, 0.0),
+    (5, 0.0, -1.0), (6, -3.0, 4.0), (7, 0.0, 0.0), (8, -0.0, 1.0),
+    (9, 3.0, 4.0), (10, -4.0, -3.0), (11, 2.0, 2.0), (12, -7.5, 0.5),
+]
+
+
+class TestLocalRadiusEdges:
+    """The radius-graph kernel against the distributed grid join: the
+    same rows, bit for bit (``dist`` included), and the same schema;
+    inputs the kernel does not take run the distributed path."""
+
+    def _run(self, df, radius):
+        out = graph.radius_edges_grid2d(df, "id", "x", "y", radius)
+        return sorted(out.collect()), out.schema
+
+    def _distributed(self, monkeypatch, df, radius):
+        # -1, not 0: an empty input must leave the kernel too
+        monkeypatch.setattr(graph, "_LOCAL_MAX_POINTS", -1)
+        return self._run(df, radius)
+
+    @pytest.mark.parametrize(
+        "pts,schema,radius",
+        [
+            (_pseudorandom_points(1), None, 4.0),
+            (_pseudorandom_points(2), None, 9.5),
+            (_pseudorandom_points(3, lo=-1e6, hi=-9e5), None, 2e4),
+            (_EDGE_POINTS, None, 1.0),
+            (_EDGE_POINTS, None, 5.0),
+            (_EDGE_POINTS, None, 0.0),
+            (_EDGE_POINTS, None, -1.0),
+            (
+                [(i, int(x), int(y)) for i, x, y in _EDGE_POINTS],
+                "id int not null, x int not null, y long",
+                5,
+            ),
+            ([], None, 3.0),
+        ],
+        ids=[
+            "random-r4", "random-r9.5", "far-negative", "cell-edges-r1",
+            "exact-r5", "r0", "r-negative", "int-not-null", "empty",
+        ],
+    )
+    def test_kernel_equals_distributed(
+        self, spark, monkeypatch, pts, schema, radius
+    ):
+        df = _points(spark, pts, *([schema] if schema else []))
+        calls = _kernel_calls(monkeypatch)
+        kernel = self._run(df, radius)
+        assert calls == [1]
+        assert kernel == self._distributed(monkeypatch, df, radius)
+
+    @pytest.mark.parametrize(
+        "pts,schema,radius",
+        [
+            # at its twin's place: dropDuplicates keeps either one
+            (_EDGE_POINTS + [(3, 0.0, 0.0)], None, 5.0),
+            (_EDGE_POINTS + [(None, 0.5, 0.5)], None, 5.0),
+            (_EDGE_POINTS + [(20, None, 0.5)], None, 5.0),
+            (_EDGE_POINTS + [(20, float("nan"), 0.5)], None, 5.0),
+            (_EDGE_POINTS + [(20, 0.5, float("inf"))], None, 5.0),
+            (_EDGE_POINTS + [(20, float("-inf"), 0.5)], None, 5.0),
+            (_EDGE_POINTS + [(20, 2.0**60, 0.5)], None, 5.0),
+            (
+                [(str(i), x, y) for i, x, y in _EDGE_POINTS],
+                "id string, x double, y double",
+                5.0,
+            ),
+            (_EDGE_POINTS, None, float("inf")),
+        ],
+        ids=[
+            "duplicate-id", "null-id", "null-x", "nan-x", "inf-y",
+            "minus-inf-x", "cell-past-2^53", "string-id", "inf-radius",
+        ],
+    )
+    def test_fallback_runs_distributed(
+        self, spark, monkeypatch, pts, schema, radius
+    ):
+        df = _points(spark, pts, *([schema] if schema else []))
+        calls = _kernel_calls(monkeypatch)
+        got = self._run(df, radius)
+        assert calls == []
+        assert got == self._distributed(monkeypatch, df, radius)
+
+    def test_candidates_over_the_bound_run_distributed(
+        self, spark, monkeypatch
+    ):
+        # 5 points in one cell, alone in their 9-cell block, and one far
+        # away: 5 * 5 + 1 * 1 join rows
+        pts = [(i, 0.1 * i, 0.1) for i in range(5)] + [(9, 50.0, 50.0)]
+        df = _points(spark, pts)
+        calls = _kernel_calls(monkeypatch)
+        monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 26)
+        kernel = self._run(df, 1.0)
+        assert calls == [1]
+        monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 25)
+        assert self._run(df, 1.0) == kernel
+        assert calls == [1]
+
+    def test_point_bound_is_inclusive(self, spark, monkeypatch):
+        df = _points(spark, _EDGE_POINTS)
+        calls = _kernel_calls(monkeypatch)
+        monkeypatch.setattr(graph, "_LOCAL_MAX_POINTS", len(_EDGE_POINTS))
+        kernel = self._run(df, 5.0)
+        assert calls == [1]
+        monkeypatch.setattr(
+            graph, "_LOCAL_MAX_POINTS", len(_EDGE_POINTS) - 1
+        )
+        assert self._run(df, 5.0) == kernel
+        assert calls == [1]
+
+
+class TestRadiusPlanShape:
+    """Pins the radius-graph gate. The distributed frame is lazy, so
+    its builder launches no more jobs than the kernel's collect; the
+    executed plan shows which path ran instead: a local scan on the
+    kernel path, the grid join's exchanges without it."""
+
+    def _plan(self, spark):
+        df = _points(spark, [(i, float(i), float(i)) for i in range(10)])
+        return (
+            graph.radius_edges_grid2d(df, "id", "x", "y", 2.0)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+
+    def test_kernel_plan_is_a_local_scan(self, spark):
+        plan = self._plan(spark)
+        assert plan.startswith("LocalTableScan")
+        assert "Exchange" not in plan
+
+    def test_distributed_plan_holds_the_grid_join(self, spark, distributed):
+        plan = self._plan(spark)
+        assert "LocalTableScan" not in plan.splitlines()[0]
+        assert "Exchange" in plan
 
 
 class TestBuilderJobs:

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from afg_data_pipeline_spark.io import write_parquet
-from afg_data_pipeline_spark.operators import _setsim_local, prefixsum
+from afg_data_pipeline_spark.operators import _setsim_local, graph, prefixsum
 from afg_data_pipeline_spark.plans import REGISTRY
 from tests.conftest import SF_DIR
 
@@ -280,7 +280,9 @@ class TestNewLlmOpShapes:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
-    def test_adjacency_graph_no_cross_join(self, spark):
+    def test_adjacency_graph_no_cross_join(self, spark, monkeypatch):
+        # the grid join's plan: sf0.001 suppliers fit the driver kernel
+        monkeypatch.setattr(graph, "_LOCAL_MAX_POINTS", 0)
         plan = plan_of(
             REGISTRY["spatial_adjacency_graph"].fn(spark, SF_DIR)
         )
