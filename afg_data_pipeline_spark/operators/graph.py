@@ -22,9 +22,10 @@ Shared discipline of the iterative operators:
   collect the list once through ``_local_columns`` and, given
   non-null integer ids, run every round in exact int64 numpy with the
   same integer formulas; the result comes back through
-  ``createDataFrame``. Larger graphs take the distributed ``_iterate``
+  ``_local_frame``. Larger graphs take the distributed ``_iterate``
   path without collecting anything, and so do ineligible small ones;
-  both paths give the same rows and schema.
+  both paths give the same rows and schema, and the kernels derive
+  that schema from the input fields instead of analysing a plan.
 - Small point sets build their radius graph on the driver, one step
   upstream of those kernels. ``radius_edges_grid2d`` collects up to
   ``_LOCAL_MAX_POINTS`` (id, x, y) rows once and, given unique
@@ -33,6 +34,16 @@ Shared discipline of the iterative operators:
   (``_radius_edges_local``). That skips building the grid-join plan
   and the shuffle jobs of the checkpoint that consumes it. The
   kernels run in the driver process, never in a UDF.
+- The handoff: a frame ``_local_frame`` built keeps the numpy columns
+  it was made from, so pagerank (symmetrized), bfs and k-core take
+  the radius kernel's edge arrays as they are (``_symmetric``): no
+  union, checkpoint or edge collect runs between the two kernels.
+  Any transform of that frame (``select``, ``filter``, ...) returns a
+  new object without them, so the handoff only sees the exact rows.
+  ``_undirected`` runs only off the handoff: for an edge list that
+  carries nothing, or once a kernel refuses the carried one (its
+  rounds then run distributed over a checkpoint, never over a
+  re-shipped local relation).
 
 Each round is a handful of equi-joins and aggregates that all
 shuffle on vertex id, so AQE reuses the partitioning; nothing sorts
@@ -40,6 +51,8 @@ globally.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -159,10 +172,53 @@ def _local_columns(df, *cols):
 
 def _local_frame(spark, fields, *cols):
     """The kernels' result: ``cols`` under ``fields``, the distributed
-    path's output fields."""
-    return spark.createDataFrame(
-        pd.DataFrame({f.name: c for f, c in zip(fields, cols)}),
-        StructType(fields),
+    path's output fields. The frame keeps ``cols`` (referenced, not
+    copied) for ``_symmetric``'s handoff."""
+    held = {f.name: c for f, c in zip(fields, cols)}
+    df = spark.createDataFrame(pd.DataFrame(held), StructType(fields))
+    df._kernel_columns = held
+    return df
+
+
+def _symmetric(edges, src, dst, *carry):
+    """Both directions of every edge, for a driver kernel and for the
+    distributed path should it refuse: ``(rows, columns, sym, end)``.
+    ``columns()`` returns the (s, d, *carry) int64 arrays, or None when
+    ``_local_columns`` refuses them; ``end`` is the symmetrized id
+    field, as Spark's union derives it (the endpoints' type, nullable
+    when either is).
+
+    An uncarried edge list goes through ``_undirected``: ``sym`` is
+    its checkpointed frame and ``rows`` the count its job observed.
+    An edge list that ``_local_frame`` built with integer ``src`` /
+    ``dst`` columns of one type hands its arrays over instead:
+    ``rows`` is twice its length, ``columns()`` concatenates both
+    directions without Spark, and ``sym`` is None, so a kernel that
+    refuses it leaves the caller to run ``_undirected``. The columns
+    are read through ``vars``: ``DataFrame.__getattr__`` would analyse
+    the schema of every frame that carries none."""
+    held = vars(edges).get("_kernel_columns", {})
+    if not carry and src in held and dst in held:
+        fa, fb = edges.schema[src], edges.schema[dst]
+        if isinstance(fa.dataType, IntegralType) and (
+            fa.dataType == fb.dataType
+        ):
+            a, b = held[src], held[dst]
+            return (
+                2 * len(a),
+                lambda: [
+                    np.concatenate([a, b]).astype(np.int64, copy=False),
+                    np.concatenate([b, a]).astype(np.int64, copy=False),
+                ],
+                None,
+                StructField("s", fa.dataType, fa.nullable or fb.nullable),
+            )
+    sym, rows = _undirected(edges, src, dst, *carry)
+    return (
+        rows,
+        lambda: _local_columns(sym, *sym.columns),
+        sym,
+        sym.schema["s"],
     )
 
 
@@ -381,7 +437,14 @@ def radius_edges_grid2d(
     arithmetic only — coordinates ride along, no media/payload
     columns), build side stays in its own cell, and the pair space
     is a shuffle equi-join on cell id. A pair is discovered from
-    both endpoints' probes; ``dropDuplicates`` collapses it.
+    both endpoints' probes; a per-pair ``min(dist)`` aggregate
+    collapses it.
+
+    Duplicate ids: an id held by several rows is one vertex at each of
+    its points. A pair (id_a, id_b) is an edge when any two of their
+    points lie within ``radius``, and its ``dist`` is the smallest such
+    distance, whatever the partitioning (an id never pairs with
+    itself).
 
     Scale notes: the 9x explode is pre-repartitioned (AQE cannot
     see row expansion in input shuffle bytes — CLAUDE.md rule 3);
@@ -451,8 +514,8 @@ def radius_edges_grid2d(
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn("dist", dist)
         .filter(F.col("dist") <= F.lit(float(radius)))
-        .select("id_a", "id_b", "dist")
-        .dropDuplicates(["id_a", "id_b"])
+        .groupBy("id_a", "id_b")
+        .agg(F.min("dist").alias("dist"))
     )
 
 
@@ -474,8 +537,8 @@ def _radius_edges_local(pts, radius):
     operations and ``np.sqrt`` is correctly rounded, so every ``dist``
     is bit-identical and ``dist <= radius`` keeps the same pairs (the
     weighted-sssp query's ``round(dist * 100)`` weights rely on that).
-    With unique ids each pair meets once, so ``dropDuplicates`` has
-    nothing to drop. The candidate count, Σ over cells of population
+    With unique ids each pair meets once, so the per-pair ``min`` has
+    nothing to fold. The candidate count, Σ over cells of population
     × the population of its 9 probe cells (the join's rows), is known
     before any pair exists, which bounds the kernel's memory.
 
@@ -606,19 +669,25 @@ def pagerank(
     # UNDIRECTED — each input edge contributes both directions,
     # matching the radius-graph use case where (id_a, id_b) is a
     # canonicalized undirected pair. Pass False for a genuinely
-    # directed graph (src -> dst only). Either way the edge list and
-    # degree table are materialized ONCE: they feed every iteration.
+    # directed graph (src -> dst only). The kernel takes a carried
+    # edge list's arrays without Spark (the module docstring's
+    # handoff). Otherwise, or once the kernel refuses, the edge list
+    # and degree table are materialized ONCE: they feed every
+    # iteration.
     if symmetrize:
-        dedges, rows = _undirected(edges, src, dst)
+        rows, columns, dedges, _ = _symmetric(edges, src, dst)
     else:
         dedges, rows = _checkpoint(
             edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         )
+        columns = partial(_local_columns, dedges, "s", "d")
     ranks = _pagerank_local(
-        nodes, dedges, rows, id_col, iterations, scale
+        nodes, rows, columns, id_col, iterations, scale
     )
     if ranks is not None:
         return _ranked(ranks, scale)
+    if dedges is None:
+        dedges, _ = _undirected(edges, src, dst)
     n = nodes.count()
     if n == 0:
         raise ValueError("pagerank over an empty node set")
@@ -686,12 +755,13 @@ def _ranked(ranks, scale):
     )
 
 
-def _pagerank_local(nodes, dedges, rows, id_col, iterations, scale):
+def _pagerank_local(nodes, rows, columns, id_col, iterations, scale):
     """pagerank's rounds in int64 numpy: the (vertex, rank) frame, or
-    None when the ``rows`` edges are over the bound, the node ids are
-    empty, null or duplicated, or ``85 · scale`` reaches 2^63. The
-    node ids are collected and checked before the edges, so no
-    fallback pays for an edge collect.
+    None when the ``rows`` directed edges are over the bound, the node
+    ids are empty, null or duplicated, ``85 · scale`` reaches 2^63, or
+    ``columns()`` (the (s, d) arrays) refuses. The node ids are
+    collected and checked before the edges, so no fallback pays for
+    an edge collect.
 
     The formulas are the docstring's, term for term; ``//`` on
     non-negative int64 is Spark's ``div``. int64 is exact under the
@@ -714,7 +784,7 @@ def _pagerank_local(nodes, dedges, rows, id_col, iterations, scale):
     vs = _local_columns(vertex, "vertex")
     if vs is None or not len(vs[0]) or len(np.unique(vs[0])) < len(vs[0]):
         return None
-    es = _local_columns(dedges, "s", "d")
+    es = columns()
     if es is None:
         return None
     (v,), (s, d) = vs, es
@@ -740,9 +810,11 @@ def _pagerank_local(nodes, dedges, rows, id_col, iterations, scale):
         contrib = np.zeros(n, dtype=np.int64)
         np.add.at(contrib, ud, (85 * r[us]) // den)
         r = teleport + dm // n + contrib
+    # the distributed rank is its non-null starting literal until a
+    # round's ``div`` makes it nullable
     return _local_frame(
         nodes.sparkSession,
-        [vertex.schema[0], StructField("rank", LongType())],
+        [vertex.schema[0], StructField("rank", LongType(), iterations > 0)],
         v,
         r,
     )
@@ -1074,7 +1146,7 @@ def _min_plus(
     """
     carry = [F.col(wt).cast("bigint").alias("w")] if wt else []
     inc = F.col("w") if wt else F.lit(1)
-    sym, rows = _undirected(edges, src, dst, *carry)
+    rows, columns, sym, end = _symmetric(edges, src, dst, *carry)
     dist0 = nodes.select(
         F.col(id_col).alias("vertex"),
         F.when(source_cond, F.lit(0).cast("bigint")).alias("dist"),
@@ -1112,22 +1184,39 @@ def _min_plus(
             ),
         )
 
-    local = _min_plus_local(sym, rows, dist0, max_iter, bool(carry))
+    local = _min_plus_local(dist0, rows, columns, max_iter)
     if local is not None:
-        # the distributed output's fields, analysed but not run
-        shape = result(step(dist0) if max_iter > 0 else dist0)
-        return _local_frame(
-            nodes.sparkSession, shape.schema.fields, *local
-        )
+        # the distributed output's fields: ``vertex`` is the union of
+        # the node and the edge ids (the node ids alone when no round
+        # runs), ``out`` the coalesced distance
+        ids = [dist0.schema["vertex"], *([end] if max_iter > 0 else [])]
+        if all(f.dataType == ids[0].dataType for f in ids):
+            fields = [
+                StructField(
+                    "vertex",
+                    ids[0].dataType,
+                    any(f.nullable for f in ids),
+                ),
+                StructField(out, LongType(), False),
+            ]
+        else:
+            # the union widens differing id types: analysed, not run
+            if sym is None:
+                sym, _ = _undirected(edges, src, dst, *carry)
+            fields = result(step(dist0)).schema.fields
+        return _local_frame(nodes.sparkSession, fields, *local)
+    if sym is None:
+        sym, _ = _undirected(edges, src, dst, *carry)
     return result(
         _iterate(dist0.localCheckpoint(), step, max_iter, probe=probe)
     )
 
 
-def _min_plus_local(sym, rows, dist0, max_iter, weighted):
+def _min_plus_local(dist0, rows, columns, max_iter):
     """_min_plus's rounds in int64 numpy: (vertex ids, distances with
     -1 for unreached), or None when the ``rows`` edges are over the
-    bound, the node ids are null or duplicated, or ``max|w| ·
+    bound, the node ids are null or duplicated, ``columns()`` (the
+    (s, d[, w]) arrays; unit weights without w) refuses, or ``max|w| ·
     (max_iter + 1)`` reaches 2^63 (a distance after t rounds is at
     most t·max|w| in magnitude, so under that guard int64 never wraps
     and no distance meets the int64-max "unreached" sentinel; above
@@ -1150,11 +1239,11 @@ def _min_plus_local(sym, rows, dist0, max_iter, weighted):
     if vs is None or len(np.unique(vs[0])) < len(vs[0]):
         return None
     v, seed = vs
-    es = _local_columns(sym, "s", "d", *(["w"] if weighted else []))
+    es = columns()
     if es is None:
         return None
     s, d = es[:2]
-    w = es[2] if weighted else np.ones(len(s), dtype=np.int64)
+    w = es[2] if len(es) > 2 else np.ones(len(s), dtype=np.int64)
     big = max(int(w.max()), -int(w.min())) if len(w) else 0
     if big * (max_iter + 1) >= 1 << 63:
         return None
@@ -1312,17 +1401,17 @@ def kcore_membership(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    sym, rows = _undirected(edges, src, dst)
-
-    def result(live):
-        return live.groupBy(F.col("s").alias("vertex")).agg(
-            F.count(F.lit(1)).alias("degree")
-        ).filter(F.col("degree") >= k)
-
-    local = _kcore_local(sym, rows, k, max_iter)
+    rows, columns, sym, end = _symmetric(edges, src, dst)
+    local = _kcore_local(rows, columns, k, max_iter)
     if local is not None:
-        fields = result(sym).schema.fields
-        return _local_frame(sym.sparkSession, fields, *local)
+        # the distributed output's fields: the symmetrized id, counted
+        fields = [
+            StructField("vertex", end.dataType, end.nullable),
+            StructField("degree", LongType(), False),
+        ]
+        return _local_frame(edges.sparkSession, fields, *local)
+    if sym is None:
+        sym, _ = _undirected(edges, src, dst)
 
     def step(live):
         deg = live.groupBy(F.col("s").alias("vertex")).agg(
@@ -1340,21 +1429,25 @@ def kcore_membership(
             )
         )
 
-    return result(_iterate(sym, step, max_iter, probe=DataFrame.count))
+    live = _iterate(sym, step, max_iter, probe=DataFrame.count)
+    return live.groupBy(F.col("s").alias("vertex")).agg(
+        F.count(F.lit(1)).alias("degree")
+    ).filter(F.col("degree") >= k)
 
 
-def _kcore_local(sym, rows, k, max_iter):
+def _kcore_local(rows, columns, k, max_iter):
     """kcore_membership's peel in numpy over a live-edge mask: (vertex
     ids, within-core degrees), or None when the ``rows`` edges are over
-    the bound. A round keeps the edges whose endpoints both have live
-    degree >= k (``bincount`` over the live sources; the edge list is
-    symmetric, so that is the degree). It stops early once a round
-    removes nothing, which equals the full unroll because peeling only
+    the bound or ``columns()`` (the (s, d) arrays) refuses. A round
+    keeps the edges whose endpoints both have live degree >= k
+    (``bincount`` over the live sources; the edge list is symmetric,
+    so that is the degree). It stops early once a round removes
+    nothing, which equals the full unroll because peeling only
     removes. Self-loops and duplicate edges count toward the degree as
     in Spark's ``count``."""
     if rows > _LOCAL_MAX_EDGES:
         return None
-    es = _local_columns(sym, "s", "d")
+    es = columns()
     if es is None:
         return None
     ids, si = np.unique(es[0], return_inverse=True)

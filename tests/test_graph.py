@@ -5,6 +5,7 @@ oracle-less — this is its correctness pin)."""
 from __future__ import annotations
 
 import hashlib
+import math
 import random
 
 import pytest
@@ -887,6 +888,11 @@ def _kernel_calls(monkeypatch):
     return calls
 
 
+def _got(df):
+    """Rows and schema (field nullability included) of ``df``."""
+    return sorted(df.collect()), df.schema
+
+
 class TestLocalKernels:
     """The driver kernels against the distributed path: same rows,
     same schema, and each path is the one that really ran (spied on
@@ -898,9 +904,6 @@ class TestLocalKernels:
             spark.createDataFrame([(v,) for v in nodes], "id long"),
             spark.createDataFrame(edges, "src long, dst long, wt long"),
         )
-
-    def _got(self, df):
-        return sorted(df.collect()), df.schema.simpleString()
 
     @pytest.mark.parametrize("op", sorted(_OPS))
     @pytest.mark.parametrize(
@@ -918,11 +921,11 @@ class TestLocalKernels:
     ):
         nodes, e = self._frames(spark, edges)
         calls = _kernel_calls(monkeypatch)
-        kernel = self._got(_OPS[op](nodes, e, it))
+        kernel = _got(_OPS[op](nodes, e, it))
         assert calls == [1]
         # -1, not 0: an empty edge list must leave the kernel too
         monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", -1)
-        dist = self._got(_OPS[op](nodes, e, it))
+        dist = _got(_OPS[op](nodes, e, it))
         assert calls == [1]
         assert kernel == dist
 
@@ -1087,8 +1090,10 @@ class TestLocalRadiusEdges:
     @pytest.mark.parametrize(
         "pts,schema,radius",
         [
-            # at its twin's place: dropDuplicates keeps either one
+            # at its twin's place, and at a second point: each pair
+            # keeps its smallest dist
             (_EDGE_POINTS + [(3, 0.0, 0.0)], None, 5.0),
+            (_EDGE_POINTS + [(3, 0.5, 0.5)], None, 5.0),
             (_EDGE_POINTS + [(None, 0.5, 0.5)], None, 5.0),
             (_EDGE_POINTS + [(20, None, 0.5)], None, 5.0),
             (_EDGE_POINTS + [(20, float("nan"), 0.5)], None, 5.0),
@@ -1103,7 +1108,8 @@ class TestLocalRadiusEdges:
             (_EDGE_POINTS, None, float("inf")),
         ],
         ids=[
-            "duplicate-id", "null-id", "null-x", "nan-x", "inf-y",
+            "duplicate-id", "duplicate-id-moved", "null-id", "null-x",
+            "nan-x", "inf-y",
             "minus-inf-x", "cell-past-2^53", "string-id", "inf-radius",
         ],
     )
@@ -1130,6 +1136,36 @@ class TestLocalRadiusEdges:
         monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 25)
         assert self._run(df, 1.0) == kernel
         assert calls == [1]
+
+    def test_duplicate_id_ignores_the_partitioning(
+        self, spark, monkeypatch
+    ):
+        # id 3 sits at (0, 0) and at (0.5, 0.5): each of its pairs keeps
+        # the smaller of its two distances, whichever shuffle delivers
+        pts = _EDGE_POINTS + [(3, 0.5, 0.5)]
+        df = _points(spark, pts)
+        monkeypatch.setattr(graph, "_LOCAL_MAX_POINTS", -1)
+        runs = []
+        conf = "spark.sql.shuffle.partitions"
+        prev = spark.conf.get(conf)
+        for n in (1, 7):
+            spark.conf.set(conf, n)
+            try:
+                runs.append(self._run(df, 5.0))
+            finally:
+                spark.conf.set(conf, prev)
+        assert runs[0] == runs[1]
+        best = {}
+        for i, (ida, xa, ya) in enumerate(pts):
+            for idb, xb, yb in pts[i + 1 :]:
+                ex, ey = xa - xb, ya - yb
+                d = math.sqrt(ex * ex + ey * ey)
+                key = tuple(sorted((ida, idb)))
+                if ida != idb and d <= 5.0:
+                    best[key] = min(d, best.get(key, d))
+        assert [tuple(r) for r in runs[0][0]] == sorted(
+            (a, b, d) for (a, b), d in best.items()
+        )
 
     def test_point_bound_is_inclusive(self, spark, monkeypatch):
         df = _points(spark, _EDGE_POINTS)
@@ -1189,3 +1225,126 @@ class TestBuilderJobs:
 
     def test_distributed_launches_a_job_chain(self, spark, distributed):
         assert builder_jobs(spark, self._build(spark)) > 20
+
+
+_HANDOFF_OPS = {
+    "pagerank": lambda nodes, edges: graph.pagerank(
+        nodes, edges, src="id_a", dst="id_b", iterations=10
+    ),
+    "bfs": lambda nodes, edges: graph.bfs_hop_distances(
+        nodes, edges, F.col("id") % 7 == 0, max_iter=10
+    ),
+    "kcore": lambda nodes, edges: graph.kcore_membership(
+        edges, k=2, max_iter=10
+    ),
+}
+
+
+class TestHandoff:
+    """The radius kernel's edge frame hands its arrays to pagerank, bfs
+    and k-core. Against the same edges behind a ``select("*")``, which
+    carries nothing and goes through ``_undirected``, the rows and the
+    schema (nullability included) are equal, and the carried frame
+    runs ``_undirected`` only once a kernel refuses it."""
+
+    def _undirected_calls(self, monkeypatch):
+        calls = []
+        real = graph._undirected
+
+        def spy(*args, **kw):
+            calls.append(1)
+            return real(*args, **kw)
+
+        monkeypatch.setattr(graph, "_undirected", spy)
+        return calls
+
+    def _inputs(self, spark, pts, id_type, radius):
+        df = _points(spark, pts, f"id {id_type}, x double, y double")
+        edges = graph.radius_edges_grid2d(df, "id", "x", "y", radius)
+        assert "_kernel_columns" in vars(edges)
+        return df.select("id"), edges
+
+    def _compare(self, monkeypatch, op, nodes, edges):
+        """The carried result and the ``_undirected`` calls it made."""
+        calls = self._undirected_calls(monkeypatch)
+        carried = _got(_HANDOFF_OPS[op](nodes, edges))
+        ran = len(calls)
+        plain = _got(_HANDOFF_OPS[op](nodes, edges.select("*")))
+        assert len(calls) == ran + 1
+        assert carried == plain
+        return carried, ran
+
+    @pytest.mark.parametrize("op", sorted(_HANDOFF_OPS))
+    @pytest.mark.parametrize("id_type", ["int", "long", "long not null"])
+    @pytest.mark.parametrize(
+        "pts,radius",
+        [
+            (_pseudorandom_points(1), 4.0),
+            (_pseudorandom_points(2), 9.5),
+            (_EDGE_POINTS, 5.0),
+            ([(i, 10.0 * i, 0.0) for i in range(6)], 1.0),
+        ],
+        ids=["random-r4", "random-r9.5", "edge-points-r5", "no-edges"],
+    )
+    def test_carried_equals_uncarried(
+        self, spark, monkeypatch, op, id_type, pts, radius
+    ):
+        nodes, edges = self._inputs(spark, pts, id_type, radius)
+        kernels = _kernel_calls(monkeypatch)
+        _, ran = self._compare(monkeypatch, op, nodes, edges)
+        assert ran == 0
+        assert kernels == [1, 1]
+
+    @pytest.mark.parametrize("op", ["bfs", "pagerank"])
+    def test_duplicate_node_ids_run_distributed(
+        self, spark, monkeypatch, op
+    ):
+        nodes, edges = self._inputs(
+            spark, _pseudorandom_points(1), "long", 4.0
+        )
+        nodes = nodes.unionByName(nodes.filter(F.col("id") < 3))
+        kernels = _kernel_calls(monkeypatch)
+        # the refused carried edges reach _iterate checkpointed
+        _, ran = self._compare(monkeypatch, op, nodes, edges)
+        assert ran == 1
+        assert kernels == []
+
+    @pytest.mark.parametrize("op", sorted(_HANDOFF_OPS))
+    @pytest.mark.parametrize("id_type", ["int", "long not null"])
+    def test_edge_bound_one_below_runs_distributed(
+        self, spark, monkeypatch, op, id_type
+    ):
+        nodes, edges = self._inputs(spark, _EDGE_POINTS, id_type, 5.0)
+        kernel = _got(_HANDOFF_OPS[op](nodes, edges))
+        monkeypatch.setattr(
+            graph, "_LOCAL_MAX_EDGES", 2 * edges.count() - 1
+        )
+        kernels = _kernel_calls(monkeypatch)
+        dist, ran = self._compare(monkeypatch, op, nodes, edges)
+        assert ran == 1
+        assert kernels == []
+        # the kernels' derived fields are the distributed plan's
+        assert dist == kernel
+
+
+class TestHandoffJobs:
+    """Pins the handoff on the registered radius-graph builders: the
+    point collect, plus the vertex collect where the operator has a
+    node set, and nothing between the two kernels. A transform that
+    drops the carried edges adds the checkpoint and the edge collect,
+    and turns this red."""
+
+    @pytest.mark.parametrize(
+        "name,jobs",
+        [
+            ("pagerank_centrality", 2),
+            ("bfs_hop_distances", 2),
+            ("kcore_vertices", 1),
+        ],
+    )
+    def test_builder_jobs(self, spark, name, jobs):
+        from afg_data_pipeline_spark.plans import REGISTRY
+        from tests.conftest import SF_DIR
+
+        build = REGISTRY[name].fn
+        assert builder_jobs(spark, lambda: build(spark, SF_DIR)) == jobs
