@@ -30,8 +30,9 @@ Inputs the kernels do not model keep the distributed path: an empty
 corpus, a null id, text, group or shingle, an empty shingle array, a
 duplicate id, an id or group that is neither integral nor string, and
 any corpus over the bound. The result comes back through
-``createDataFrame`` with the distributed path's fields; both paths
-give the same rows.
+``_local_frame.make`` with the distributed path's fields, carrying its
+numpy columns (the minhash pairs feed ``contrastive_pairs``' kernel);
+both paths give the same rows.
 """
 
 from __future__ import annotations
@@ -40,7 +41,6 @@ import hashlib
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -50,9 +50,9 @@ from pyspark.sql.types import (
     IntegralType,
     StringType,
     StructField,
-    StructType,
 )
 
+from afg_data_pipeline_spark.operators import _local_frame
 from afg_data_pipeline_spark.operators.text import shingle_expr, tokens
 
 #: Shingle cells (one per distinct shingle of a document) up to which
@@ -211,13 +211,6 @@ def _jaccard(inter, size_a, size_b):
     return inter.astype(np.float64) / union.astype(np.float64)
 
 
-def _frame(spark, fields, cols):
-    return spark.createDataFrame(
-        pd.DataFrame({f.name: c for f, c in zip(fields, cols)}),
-        StructType(fields),
-    )
-
-
 def _renamed(field, name):
     return StructField(name, field.dataType, field.nullable)
 
@@ -275,7 +268,7 @@ def ngram_jaccard_frame(
             r0 = r1
     a, b, j = (np.concatenate(x) for x in (a_parts, b_parts, j_parts))
     id_f, g_f = cells.fields
-    return _frame(
+    return _local_frame.make(
         spark,
         [
             _renamed(g_f, group_col),
@@ -373,7 +366,7 @@ def minhash_frame(
         keep = jac >= float(threshold)
         a, b, jac = a[keep], b[keep], jac[keep]
     (id_f,) = cells.fields
-    return _frame(
+    return _local_frame.make(
         spark,
         [
             _renamed(id_f, "doc_id_a"),

@@ -22,10 +22,11 @@ Shared discipline of the iterative operators:
   collect the list once through ``_local_columns`` and, given
   non-null integer ids, run every round in exact int64 numpy with the
   same integer formulas; the result comes back through
-  ``_local_frame``. Larger graphs take the distributed ``_iterate``
-  path without collecting anything, and so do ineligible small ones;
-  both paths give the same rows and schema, and the kernels derive
-  that schema from the input fields instead of analysing a plan.
+  ``_local_frame.make``. Larger graphs take the distributed
+  ``_iterate`` path without collecting anything, and so do ineligible
+  small ones; both paths give the same rows and schema, and the
+  kernels derive that schema from the input fields instead of
+  analysing a plan.
 - Small point sets build their radius graph on the driver, one step
   upstream of those kernels. ``radius_edges_grid2d`` collects up to
   ``_LOCAL_MAX_POINTS`` (id, x, y) rows once and, given unique
@@ -34,12 +35,10 @@ Shared discipline of the iterative operators:
   (``_radius_edges_local``). That skips building the grid-join plan
   and the shuffle jobs of the checkpoint that consumes it. The
   kernels run in the driver process, never in a UDF.
-- The handoff: a frame ``_local_frame`` built keeps the numpy columns
-  it was made from, so pagerank (symmetrized), bfs and k-core take
-  the radius kernel's edge arrays as they are (``_symmetric``): no
-  union, checkpoint or edge collect runs between the two kernels.
-  Any transform of that frame (``select``, ``filter``, ...) returns a
-  new object without them, so the handoff only sees the exact rows.
+- The handoff: the radius kernel's edge frame carries its numpy
+  columns (``_local_frame``), so pagerank (symmetrized), bfs and
+  k-core take them as they are (``_symmetric``): no union,
+  checkpoint or edge collect runs between the two kernels.
   ``_undirected`` runs only off the handoff: for an edge list that
   carries nothing, or once a kernel refuses the carried one (its
   rounds then run distributed over a checkpoint, never over a
@@ -55,7 +54,6 @@ from __future__ import annotations
 from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -63,8 +61,9 @@ from pyspark.sql.types import (
     IntegralType,
     LongType,
     StructField,
-    StructType,
 )
+
+from afg_data_pipeline_spark.operators import _local_frame
 
 #: Symmetrized edge rows (two per input edge) up to which pagerank,
 #: bfs / weighted sssp and k-core iterate on the driver. A constant,
@@ -170,16 +169,6 @@ def _local_columns(df, *cols):
     ]
 
 
-def _local_frame(spark, fields, *cols):
-    """The kernels' result: ``cols`` under ``fields``, the distributed
-    path's output fields. The frame keeps ``cols`` (referenced, not
-    copied) for ``_symmetric``'s handoff."""
-    held = {f.name: c for f, c in zip(fields, cols)}
-    df = spark.createDataFrame(pd.DataFrame(held), StructType(fields))
-    df._kernel_columns = held
-    return df
-
-
 def _symmetric(edges, src, dst, *carry):
     """Both directions of every edge, for a driver kernel and for the
     distributed path should it refuse: ``(rows, columns, sym, end)``.
@@ -190,14 +179,12 @@ def _symmetric(edges, src, dst, *carry):
 
     An uncarried edge list goes through ``_undirected``: ``sym`` is
     its checkpointed frame and ``rows`` the count its job observed.
-    An edge list that ``_local_frame`` built with integer ``src`` /
-    ``dst`` columns of one type hands its arrays over instead:
-    ``rows`` is twice its length, ``columns()`` concatenates both
-    directions without Spark, and ``sym`` is None, so a kernel that
-    refuses it leaves the caller to run ``_undirected``. The columns
-    are read through ``vars``: ``DataFrame.__getattr__`` would analyse
-    the schema of every frame that carries none."""
-    held = vars(edges).get("_kernel_columns", {})
+    An edge list that carries integer ``src`` / ``dst`` columns of one
+    type (``_local_frame``) hands its arrays over instead: ``rows`` is
+    twice its length, ``columns()`` concatenates both directions
+    without Spark, and ``sym`` is None, so a kernel that refuses it
+    leaves the caller to run ``_undirected``."""
+    held = _local_frame.columns(edges)
     if not carry and src in held and dst in held:
         fa, fb = edges.schema[src], edges.schema[dst]
         if isinstance(fa.dataType, IntegralType) and (
@@ -600,16 +587,14 @@ def _radius_edges_local(pts, radius):
     dist = np.sqrt(ex * ex + ey * ey)
     keep = dist <= radius
     pa, pb, dist = pa[keep], pb[keep], dist[keep]
-    return _local_frame(
+    return _local_frame.make(
         pts.sparkSession,
         [
             StructField("id_a", fid.dataType, fid.nullable),
             StructField("id_b", fid.dataType, fid.nullable),
             StructField("dist", DoubleType()),
         ],
-        ids[pa],
-        ids[pb],
-        dist,
+        [ids[pa], ids[pb], dist],
     )
 
 
@@ -812,11 +797,10 @@ def _pagerank_local(nodes, rows, columns, id_col, iterations, scale):
         r = teleport + dm // n + contrib
     # the distributed rank is its non-null starting literal until a
     # round's ``div`` makes it nullable
-    return _local_frame(
+    return _local_frame.make(
         nodes.sparkSession,
         [vertex.schema[0], StructField("rank", LongType(), iterations > 0)],
-        v,
-        r,
+        [v, r],
     )
 
 
@@ -1204,7 +1188,7 @@ def _min_plus(
             if sym is None:
                 sym, _ = _undirected(edges, src, dst, *carry)
             fields = result(step(dist0)).schema.fields
-        return _local_frame(nodes.sparkSession, fields, *local)
+        return _local_frame.make(nodes.sparkSession, fields, local)
     if sym is None:
         sym, _ = _undirected(edges, src, dst, *carry)
     return result(
@@ -1409,7 +1393,7 @@ def kcore_membership(
             StructField("vertex", end.dataType, end.nullable),
             StructField("degree", LongType(), False),
         ]
-        return _local_frame(edges.sparkSession, fields, *local)
+        return _local_frame.make(edges.sparkSession, fields, local)
     if sym is None:
         sym, _ = _undirected(edges, src, dst)
 

@@ -923,7 +923,10 @@ def contrastive_pairs_q(
     operators/contrastive.contrastive_pairs: bucket reps are a tiny
     map-side-combined aggregate broadcast to the anchors; collision
     and already-positive probes are anti-joined away, never
-    silently resampled."""
+    silently resampled. The minhash frame is passed unrenamed: from
+    the driver minhash kernel it carries its pair columns, and the
+    negatives are mined on the driver too (a rename would drop
+    them)."""
     from afg_data_pipeline_spark.operators.contrastive import (
         contrastive_pairs,
     )
@@ -932,14 +935,14 @@ def contrastive_pairs_q(
     )
 
     docs = read_star_table(spark, "documents", sf_dir)
-    positives = minhash_lsh_candidates(
-        docs, threshold=0.5
-    ).select(
-        F.col("doc_id_a").alias("id_a"),
-        F.col("doc_id_b").alias("id_b"),
-    )
+    positives = minhash_lsh_candidates(docs, threshold=0.5)
     return contrastive_pairs(
-        docs, positives, n_negatives=3, n_buckets=64
+        docs,
+        positives,
+        n_negatives=3,
+        n_buckets=64,
+        src="doc_id_a",
+        dst="doc_id_b",
     )
 
 

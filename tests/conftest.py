@@ -49,6 +49,23 @@ def builder_jobs(spark, build):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def kernel_frames(monkeypatch):
+    """A list that grows by one per ``_local_frame.make`` call: one per
+    frame a driver kernel returns, which the distributed paths never
+    build."""
+    from afg_data_pipeline_spark.operators import _local_frame
+
+    calls = []
+    real = _local_frame.make
+
+    def spy(*args):
+        calls.append(1)
+        return real(*args)
+
+    monkeypatch.setattr(_local_frame, "make", spy)
+    return calls
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_session("afg-tests", shuffle_partitions=8)

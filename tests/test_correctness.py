@@ -251,6 +251,34 @@ def test_one_batch_store():
     assert errors == []
 
 
+def test_one_kernel_carrier():
+    """The numpy columns a driver kernel's frame carries to the next
+    kernel have one home: ``_kernel_columns`` is written and read only
+    in operators/_local_frame.py (``make`` / ``columns``), so every
+    consumer reads them through ``vars`` and no second copy of the
+    frame builder appears."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    pkg = root / "afg_data_pipeline_spark"
+    errors = []
+    for path in [*sorted(pkg.rglob("*.py")), *sorted(root.glob("tools/*.py"))]:
+        rel = path.relative_to(root).as_posix()
+        if rel == "afg_data_pipeline_spark/operators/_local_frame.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "_kernel_columns"
+            ) or (
+                isinstance(node, ast.Constant)
+                and node.value == "_kernel_columns"
+            ):
+                errors.append(f"{rel}:{node.lineno}")
+    assert errors == []
+
+
 def test_coverage_order_leads_with_never_checked():
     """queries() lists every registered name once, and a name with no
     CORRECTNESS_r*.json row (never driver-checked) sorts ahead of

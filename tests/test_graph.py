@@ -11,9 +11,9 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from afg_data_pipeline_spark.operators import graph
+from afg_data_pipeline_spark.operators import _local_frame, graph
 from afg_data_pipeline_spark.operators.graph import connected_components
-from tests.conftest import builder_jobs
+from tests.conftest import builder_jobs, kernel_frames
 
 
 @pytest.fixture
@@ -874,20 +874,6 @@ _OPS = {
 }
 
 
-def _kernel_calls(monkeypatch):
-    """A list that grows by one per ``_local_frame`` call, which only
-    the kernels make."""
-    calls = []
-    real = graph._local_frame
-
-    def spy(*args):
-        calls.append(1)
-        return real(*args)
-
-    monkeypatch.setattr(graph, "_local_frame", spy)
-    return calls
-
-
 def _got(df):
     """Rows and schema (field nullability included) of ``df``."""
     return sorted(df.collect()), df.schema
@@ -896,8 +882,8 @@ def _got(df):
 class TestLocalKernels:
     """The driver kernels against the distributed path: same rows,
     same schema, and each path is the one that really ran (spied on
-    ``_local_frame``, which only the kernels call). Nodes 20 and 21 are
-    isolated."""
+    ``_local_frame.make``, which only the kernels call). Nodes 20 and
+    21 are isolated."""
 
     def _frames(self, spark, edges, nodes=(*range(12), 20, 21)):
         return (
@@ -920,7 +906,7 @@ class TestLocalKernels:
         self, spark, monkeypatch, op, edges, it
     ):
         nodes, e = self._frames(spark, edges)
-        calls = _kernel_calls(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         kernel = _got(_OPS[op](nodes, e, it))
         assert calls == [1]
         # -1, not 0: an empty edge list must leave the kernel too
@@ -930,7 +916,7 @@ class TestLocalKernels:
         assert kernel == dist
 
     def _takes_distributed(self, monkeypatch, build):
-        calls = _kernel_calls(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         rows = build().collect()
         assert calls == []
         return rows
@@ -1014,7 +1000,7 @@ class TestLocalKernels:
         # kcore's symmetrized list holds 2 rows per input edge
         edges = _random_graph(6)
         nodes, e = self._frames(spark, edges)
-        calls = _kernel_calls(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 2 * len(edges))
         kernel = _OPS["kcore"](nodes, e, 10).collect()
         assert calls == [1]
@@ -1082,7 +1068,7 @@ class TestLocalRadiusEdges:
         self, spark, monkeypatch, pts, schema, radius
     ):
         df = _points(spark, pts, *([schema] if schema else []))
-        calls = _kernel_calls(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         kernel = self._run(df, radius)
         assert calls == [1]
         assert kernel == self._distributed(monkeypatch, df, radius)
@@ -1117,7 +1103,7 @@ class TestLocalRadiusEdges:
         self, spark, monkeypatch, pts, schema, radius
     ):
         df = _points(spark, pts, *([schema] if schema else []))
-        calls = _kernel_calls(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         got = self._run(df, radius)
         assert calls == []
         assert got == self._distributed(monkeypatch, df, radius)
@@ -1129,7 +1115,7 @@ class TestLocalRadiusEdges:
         # away: 5 * 5 + 1 * 1 join rows
         pts = [(i, 0.1 * i, 0.1) for i in range(5)] + [(9, 50.0, 50.0)]
         df = _points(spark, pts)
-        calls = _kernel_calls(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         monkeypatch.setattr(graph, "_LOCAL_MAX_EDGES", 26)
         kernel = self._run(df, 1.0)
         assert calls == [1]
@@ -1169,7 +1155,7 @@ class TestLocalRadiusEdges:
 
     def test_point_bound_is_inclusive(self, spark, monkeypatch):
         df = _points(spark, _EDGE_POINTS)
-        calls = _kernel_calls(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         monkeypatch.setattr(graph, "_LOCAL_MAX_POINTS", len(_EDGE_POINTS))
         kernel = self._run(df, 5.0)
         assert calls == [1]
@@ -1261,7 +1247,7 @@ class TestHandoff:
     def _inputs(self, spark, pts, id_type, radius):
         df = _points(spark, pts, f"id {id_type}, x double, y double")
         edges = graph.radius_edges_grid2d(df, "id", "x", "y", radius)
-        assert "_kernel_columns" in vars(edges)
+        assert _local_frame.columns(edges)
         return df.select("id"), edges
 
     def _compare(self, monkeypatch, op, nodes, edges):
@@ -1290,7 +1276,7 @@ class TestHandoff:
         self, spark, monkeypatch, op, id_type, pts, radius
     ):
         nodes, edges = self._inputs(spark, pts, id_type, radius)
-        kernels = _kernel_calls(monkeypatch)
+        kernels = kernel_frames(monkeypatch)
         _, ran = self._compare(monkeypatch, op, nodes, edges)
         assert ran == 0
         assert kernels == [1, 1]
@@ -1303,7 +1289,7 @@ class TestHandoff:
             spark, _pseudorandom_points(1), "long", 4.0
         )
         nodes = nodes.unionByName(nodes.filter(F.col("id") < 3))
-        kernels = _kernel_calls(monkeypatch)
+        kernels = kernel_frames(monkeypatch)
         # the refused carried edges reach _iterate checkpointed
         _, ran = self._compare(monkeypatch, op, nodes, edges)
         assert ran == 1
@@ -1319,7 +1305,7 @@ class TestHandoff:
         monkeypatch.setattr(
             graph, "_LOCAL_MAX_EDGES", 2 * edges.count() - 1
         )
-        kernels = _kernel_calls(monkeypatch)
+        kernels = kernel_frames(monkeypatch)
         dist, ran = self._compare(monkeypatch, op, nodes, edges)
         assert ran == 1
         assert kernels == []

@@ -9,6 +9,11 @@ detection.
 
 from __future__ import annotations
 
+import hashlib
+import random
+from collections import Counter
+
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -29,6 +34,7 @@ from afg_data_pipeline_spark.operators.similarity import (
     brute_force_topk,
     lsh_bucketed_topk,
 )
+from tests.conftest import kernel_frames
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -1028,6 +1034,47 @@ class TestCrossCorpusNearDup:
         assert not any(n == 100 for (n, _d) in got)
 
 
+def _contrastive_reference(doc_ids, pairs, m, n_buckets):
+    """contrastive_pairs' rows by brute force: the md5 bucket of every
+    doc id, each bucket's min id as its rep, ``m`` probes per distinct
+    anchor, then collisions and positives dropped."""
+    from afg_data_pipeline_spark.operators.contrastive import STRIDE
+
+    reps = {}
+    for d in doc_ids:
+        b = int(hashlib.md5(str(d).encode()).hexdigest()[:2], 16)
+        reps[b % n_buckets] = min(reps.get(b % n_buckets, d), d)
+    pos = [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs]
+    probed = {
+        (a, reps[(a + i * STRIDE) % n_buckets])
+        for a, _ in pos
+        for i in range(1, m + 1)
+        if (a + i * STRIDE) % n_buckets in reps
+    }
+    negs = {(a, r) for a, r in probed if r != a and (a, r) not in pos}
+    rows = [(a, b, "pos") for a, b in pos]
+    return sorted(rows + [(a, r, "neg") for a, r in negs]), probed
+
+
+def _carried(spark, pairs, id_type=T.LongType(), nullable=True):
+    """(id_a, id_b) positives as a driver kernel returns them: carrying
+    their columns."""
+    from afg_data_pipeline_spark.operators import _local_frame
+
+    dtype = object if isinstance(id_type, T.StringType) else np.int64
+    return _local_frame.make(
+        spark,
+        [
+            T.StructField("id_a", id_type, nullable),
+            T.StructField("id_b", id_type, nullable),
+        ],
+        [
+            np.array([a for a, _ in pairs], dtype=dtype),
+            np.array([b for _, b in pairs], dtype=dtype),
+        ],
+    )
+
+
 class TestContrastivePairs:
     def test_structure_and_determinism(self, spark):
         from afg_data_pipeline_spark.operators.contrastive import (
@@ -1038,35 +1085,236 @@ class TestContrastivePairs:
             [(i, f"text {i}") for i in range(40)],
             "doc_id long, text string",
         )
-        positives = spark.createDataFrame(
-            [(1, 5), (2, 9)], "id_a long, id_b long"
+        pairs = [(1, 5), (2, 9)]
+        want, _ = _contrastive_reference(range(40), pairs, 3, 16)
+        # the distributed plan, then the driver kernel
+        for positives in (
+            spark.createDataFrame(pairs, "id_a long, id_b long"),
+            _carried(spark, pairs),
+        ):
+
+            def run():
+                return sorted(
+                    (r.anchor_id, r.partner_id, r.label)
+                    for r in contrastive_pairs(
+                        docs, positives, n_negatives=3, n_buckets=16
+                    ).collect()
+                )
+
+            got = run()
+            assert got == run()  # deterministic across plan reruns
+            assert got == want
+            pos = {(a, p) for a, p, l in got if l == "pos"}
+            # both directions of each positive pair
+            assert pos == {(1, 5), (5, 1), (2, 9), (9, 2)}
+            negs = [(a, p) for a, p, l in got if l == "neg"]
+            assert negs
+            anchors = {a for a, _ in pos}
+            for a, p in negs:
+                assert a in anchors
+                assert (a, p) not in pos
+                assert p != a
+            # at most n_negatives per anchor
+            cnt = Counter(a for a, _ in negs)
+            assert all(v <= 3 for v in cnt.values())
+
+
+def _near_dup_docs(spark, id_type, seed=1, n=40):
+    """Seeded documents on a 6-word vocabulary, so minhash finds many
+    candidate pairs; ids are sparse."""
+    rng = random.Random(seed)
+    words = "a b c d e f".split()
+    rows = [
+        (i, " ".join(rng.choice(words) for _ in range(rng.randrange(3, 9))))
+        for i in rng.sample(range(1000), n)
+    ]
+    return spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+
+
+class TestContrastiveKernel:
+    """The driver kernel against the distributed plan: a carried
+    positives frame against the same rows behind a ``select("*")``,
+    which carries nothing. Rows and schema (nullability included) are
+    equal, and the kernel runs exactly when it models the input."""
+
+    def _compare(self, monkeypatch, docs, positives, **kw):
+        """The carried result's rows, and how many kernel frames it
+        built."""
+        from afg_data_pipeline_spark.operators.contrastive import (
+            contrastive_pairs,
         )
 
-        def run():
-            return sorted(
-                (r.anchor_id, r.partner_id, r.label)
-                for r in contrastive_pairs(
-                    docs, positives, n_negatives=3, n_buckets=16
-                ).collect()
-            )
+        calls = kernel_frames(monkeypatch)
+        df = contrastive_pairs(docs, positives, **kw)
+        carried = sorted(df.collect()), df.schema
+        ran = len(calls)
+        df = contrastive_pairs(docs, positives.select("*"), **kw)
+        assert len(calls) == ran
+        assert carried == (sorted(df.collect()), df.schema)
+        return carried[0], ran
 
-        got = run()
-        assert got == run()  # deterministic across plan reruns
-        pos = {(a, p) for a, p, l in got if l == "pos"}
-        # both directions of each positive pair
-        assert pos == {(1, 5), (5, 1), (2, 9), (9, 2)}
-        negs = [(a, p) for a, p, l in got if l == "neg"]
-        assert negs
-        anchors = {a for a, _ in pos}
-        for a, p in negs:
-            assert a in anchors
-            assert (a, p) not in pos
-            assert p != a
-        # at most n_negatives per anchor
-        from collections import Counter
+    def test_sf0001_corpus(self, spark, monkeypatch):
+        from afg_data_pipeline_spark.io import read_star_table
+        from tests.conftest import SF_DIR
 
-        cnt = Counter(a for a, _ in negs)
-        assert all(v <= 3 for v in cnt.values())
+        docs = read_star_table(spark, "documents", SF_DIR)
+        positives = minhash_lsh_candidates(docs, threshold=0.5)
+        rows, ran = self._compare(
+            monkeypatch, docs, positives, src="doc_id_a", dst="doc_id_b"
+        )
+        assert ran == 1
+        assert {r.label for r in rows} == {"pos", "neg"}
+
+    @pytest.mark.parametrize("id_type", ["int", "long", "long not null"])
+    def test_id_types(self, spark, monkeypatch, id_type):
+        docs = _near_dup_docs(spark, id_type)
+        positives = minhash_lsh_candidates(docs)
+        pairs = [tuple(r) for r in positives.select("*").collect()]
+        kw = dict(src="doc_id_a", dst="doc_id_b", n_buckets=8)
+        rows, ran = self._compare(monkeypatch, docs, positives, **kw)
+        assert ran == 1
+        ids = [r.doc_id for r in docs.collect()]
+        want, _ = _contrastive_reference(
+            ids, [(a, b) for a, b, _ in pairs], 3, 8
+        )
+        assert pairs
+        assert rows == want
+
+    @pytest.mark.parametrize(
+        "pairs,n_docs",
+        [
+            ([], 40),
+            # anchors 16 and 25 probe themselves, and 16 probes 25
+            ([(16, 25)], 40),
+            # 64 buckets over 10 docs: most probes find no rep
+            ([(1, 5), (2, 9), (3, 7)], 10),
+            # a duplicated positive keeps its multiplicity
+            ([(1, 5), (1, 5), (2, 9)], 40),
+            # no bucket has a rep
+            ([(1, 5)], 0),
+        ],
+        ids=[
+            "no-positives",
+            "self-and-positive-reps",
+            "empty-buckets",
+            "duplicated-positives",
+            "no-docs",
+        ],
+    )
+    def test_edge_cases(self, spark, monkeypatch, pairs, n_docs):
+        n_buckets = 16 if n_docs == 40 else 64
+        docs = spark.createDataFrame(
+            [(i,) for i in range(n_docs)], "doc_id long"
+        )
+        rows, ran = self._compare(
+            monkeypatch, docs, _carried(spark, pairs), n_buckets=n_buckets
+        )
+        assert ran == 1
+        want, probed = _contrastive_reference(
+            range(n_docs), pairs, 3, n_buckets
+        )
+        assert rows == want
+        if pairs == [(16, 25)]:
+            assert {(16, 16), (25, 25), (16, 25)} <= probed
+        if n_docs == 10:
+            assert len({r for _, r in probed}) < 10
+
+    @pytest.mark.parametrize(
+        "case",
+        [
+            "null-doc-id",
+            "string-ids",
+            "mismatched-id-types",
+            "zero-buckets",
+            "zero-negatives",
+            "doc-bound-one-below",
+        ],
+    )
+    def test_fallbacks(self, spark, monkeypatch, case):
+        from afg_data_pipeline_spark.operators import contrastive
+
+        ids = list(range(40))
+        pairs, kw = [(1, 5), (2, 9)], {"n_buckets": 16}
+        doc_type, pos_type = "long", T.LongType()
+        if case == "null-doc-id":
+            ids[7] = None
+        elif case == "string-ids":
+            ids = [str(i) for i in ids]
+            pairs = [(str(a), str(b)) for a, b in pairs]
+            doc_type, pos_type = "string", T.StringType()
+        elif case == "mismatched-id-types":
+            doc_type = "int"
+        elif case == "zero-buckets":
+            kw["n_buckets"] = 0
+        elif case == "zero-negatives":
+            kw["n_negatives"] = 0
+        else:
+            monkeypatch.setattr(contrastive, "_LOCAL_MAX_DOCS", 39)
+        docs = spark.createDataFrame(
+            [(i,) for i in ids], f"doc_id {doc_type}"
+        )
+        positives = _carried(spark, pairs, pos_type)
+        _, ran = self._compare(monkeypatch, docs, positives, **kw)
+        assert ran == 0
+
+    @pytest.mark.parametrize(
+        "id_type,top", [("int", (1 << 31) - 1), ("long", (1 << 63) - 1)]
+    )
+    def test_probe_overflow_keeps_distributed_plan(
+        self, spark, monkeypatch, id_type, top
+    ):
+        from afg_data_pipeline_spark.operators.contrastive import (
+            STRIDE,
+            contrastive_pairs,
+        )
+
+        fits = top - 3 * STRIDE  # the last probe lands on the max
+        docs = spark.createDataFrame(
+            [(i,) for i in [*range(20), fits, fits + 1]],
+            f"doc_id {id_type}",
+        )
+        t = T.IntegerType() if id_type == "int" else T.LongType()
+        _, ran = self._compare(
+            monkeypatch, docs, _carried(spark, [(0, fits)], t)
+        )
+        assert ran == 1
+        over = _carried(spark, [(0, fits + 1)], t)
+        _, ran = self._compare(monkeypatch, docs, over)
+        assert ran == 0  # wraps without ANSI, on both paths
+        old = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        try:
+            calls = kernel_frames(monkeypatch)
+            for positives in (over, over.select("*")):
+                with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+                    contrastive_pairs(docs, positives).collect()
+            assert calls == []
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", old)
+
+
+class TestContrastiveJobs:
+    """Pins the registered query on the kernels: the minhash shingle
+    collect and the corpus id collect are its only builder jobs, and
+    its executed plan is a local scan. Renaming the minhash frame
+    before contrastive_pairs drops the carried columns and turns this
+    red (the distributed plan's checkpoint runs its shuffles)."""
+
+    def test_builder_jobs(self, spark):
+        from afg_data_pipeline_spark.plans import REGISTRY
+        from tests.conftest import SF_DIR, builder_jobs
+
+        build = REGISTRY["contrastive_pairs"].fn
+        assert builder_jobs(spark, lambda: build(spark, SF_DIR)) == 2
+
+    def test_plan_is_one_local_scan(self, spark):
+        from afg_data_pipeline_spark.plans import REGISTRY
+        from tests.conftest import SF_DIR
+
+        df = REGISTRY["contrastive_pairs"].fn(spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.startswith("LocalTableScan"), plan
+        assert "Exchange" not in plan
 
 
 class TestDedupKeepBest:

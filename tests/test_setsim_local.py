@@ -15,7 +15,7 @@ from afg_data_pipeline_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from afg_data_pipeline_spark.plans import REGISTRY
-from tests.conftest import SF_DIR, builder_jobs
+from tests.conftest import SF_DIR, builder_jobs, kernel_frames
 
 WORDS = "a b c d e f g h".split()
 
@@ -70,24 +70,13 @@ def distributed(monkeypatch):
 
 
 class TestSetSimKernels:
-    def _spy(self, monkeypatch):
-        calls = []
-        real = local._frame
-
-        def spy(*args):
-            calls.append(1)
-            return real(*args)
-
-        monkeypatch.setattr(local, "_frame", spy)
-        return calls
-
     def _got(self, df):
         return sorted(df.collect()), df.schema.simpleString()
 
     def _both(self, monkeypatch, build):
         """(kernel result, distributed result), asserting the path each
         one took."""
-        calls = self._spy(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         kernel = self._got(build())
         assert calls == [1]
         with monkeypatch.context() as m:
@@ -141,7 +130,7 @@ class TestSetSimKernels:
         monkeypatch.setattr(local, "_LOCAL_MAX_CELLS", 4 * 66 - 1)
         rows = [(i, "x y z", "en") for i in range(12)]
         df = _frame(spark, rows)
-        calls = self._spy(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         assert len(minhash_lsh_candidates(df).collect()) == 66
         assert calls == []
         monkeypatch.setattr(local, "_LOCAL_MAX_CELLS", 4 * 66)
@@ -149,7 +138,7 @@ class TestSetSimKernels:
         assert calls == [1]
 
     def _takes_distributed(self, monkeypatch, build):
-        calls = self._spy(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         rows = build().collect()
         assert calls == []
         return rows
@@ -224,7 +213,7 @@ class TestSetSimKernels:
         df = _frame(spark, rows)
         cells = local.shingle_cells(df, "doc_id", "text", 2)
         total = int(cells.off[-1])
-        calls = self._spy(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         monkeypatch.setattr(local, "_LOCAL_MAX_CELLS", total)
         kernel = sorted(minhash_lsh_candidates(df).collect())
         assert calls == [1]
@@ -237,7 +226,7 @@ class TestSetSimKernels:
         self, spark, monkeypatch, caplog
     ):
         df = _frame(spark, _corpus(12))
-        calls = self._spy(monkeypatch)
+        calls = kernel_frames(monkeypatch)
         out = ngram_jaccard_pairs(
             df, "lang", threshold=0.5, max_pairs=5
         ).collect()

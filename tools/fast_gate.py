@@ -57,7 +57,8 @@ COSTS = {
     "test_jdbc_roundtrip.py": 12,
     "test_bm25.py": 10,
     "test_graph_hits.py": 9,
-    "test_llm_ops.py": 30,
+    # the contrastive kernel-vs-distributed tests add ~25 s
+    "test_llm_ops.py": 55,
     "test_corpus_ops.py": 25,
     "test_reference_semantics.py": 20,
     "test_codecs.py": 15,
