@@ -31,8 +31,9 @@ corpus, a null id, text, group or shingle, an empty shingle array, a
 duplicate id, an id or group that is neither integral nor string, and
 any corpus over the bound. The result comes back through
 ``_local_frame.make`` with the distributed path's fields, carrying its
-numpy columns (the minhash pairs feed ``contrastive_pairs``' kernel);
-both paths give the same rows.
+numpy columns; the minhash pairs also carry the corpus ids they were
+computed from, and feed ``contrastive_pairs``' kernel. Both paths give
+the same rows.
 """
 
 from __future__ import annotations
@@ -92,6 +93,7 @@ class Cells(NamedTuple):
     code: np.ndarray  # index into ``shingles``
     shingles: pa.Array  # distinct shingle strings
     fields: list  # id and group fields of the input
+    source: tuple  # (frame, id column) the cells were collected from
 
 
 def shingle_cells(
@@ -158,6 +160,7 @@ def shingle_cells(
         code[np.lexsort((code, doc))].astype(np.int64),
         shingles.dictionary,
         fields,
+        (df, id_col),
     )
 
 
@@ -374,4 +377,5 @@ def minhash_frame(
             StructField("jaccard", DoubleType()),
         ],
         [cells.ids[a], cells.ids[b], jac],
+        read=(*cells.source, cells.ids),
     )

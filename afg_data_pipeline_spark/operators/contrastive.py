@@ -19,13 +19,13 @@ anchor) are dropped and reported per-anchor rather than silently
 resampled (resampling would need data-dependent iteration; the
 drop rate is ~(1 + deg)/B per probe, negligible for B >> m).
 
-Positives that carry the minhash kernel's numpy columns
-(``_local_frame``: ``minhash_lsh_candidates`` below
-``_setsim_local._LOCAL_MAX_CELLS``) are mined on the driver
-(``_local_pairs``): one bounded collect of the corpus ids, then the
-same buckets, reps, probes and anti-join in exact int64 numpy, so no
-union, checkpoint, aggregate or join runs. Any input it does not model
-keeps the distributed plan below.
+Positives that the minhash kernel computed from ``docs``
+(``minhash_lsh_candidates`` below ``_setsim_local._LOCAL_MAX_CELLS``)
+carry its numpy pair columns and the corpus ids it read
+(``_local_frame``), and are mined on the driver (``_local_pairs``):
+the same buckets, reps, probes and anti-join in exact int64 numpy, so
+no Spark job, union, checkpoint, aggregate or join runs. Any input it
+does not model keeps the distributed plan below.
 """
 
 from __future__ import annotations
@@ -58,55 +58,35 @@ _BUCKET_SQL = (
     "substr(md5(cast({col} as string)), 2, 1)) - 1, {b})"
 )
 
-#: Corpus ids up to which carried positives are mined on the driver.
-#: A constant, not a budget: one value is in use and both paths return
-#: the same rows (tests monkeypatch it). It matches the minhash
-#: kernel's cell bound, so a corpus whose positives come carried from
-#: that kernel (at least one cell per document) always fits. Kernel vs
-#: distributed, plan build plus a noop write, best of 3, wall / engine
-#: CPU (driver + JVM) seconds, local[2] on a 4-vCPU host, random long
-#: ids from parquet with ids/8 positive pairs: 2^10 ids 0.20 / 0.69 vs
-#: 0.71 / 2.41; 2^14 0.23 / 0.65 vs 0.55 / 1.79; 2^17 0.67 / 0.91 vs
-#: 0.84 / 2.36; 2^18 1.26 / 1.57 vs 0.93 / 2.11. The kernel used less
-#: CPU at every size; it lost wall time only at the bound, where its
-#: single-threaded driver work (md5 per id: 0.18 s) outweighs the two
-#: task threads of the distributed plan.
-_LOCAL_MAX_DOCS = 1 << 18
-
 _INT_MAX = (1 << 31) - 1
 _LONG_MAX = (1 << 63) - 1
 
 
-def _local_pairs(docs, positives, id_col, src, dst, m, n_buckets):
-    """contrastive_pairs' rows from the carried ``src`` / ``dst``
-    columns of ``positives`` and one collect of the corpus ids, or None
-    for an input the distributed plan must keep: uncarried positives,
-    ``m`` or ``n_buckets`` below 1, ids that are not integral or not of
-    one type, a null or more than ``_LOCAL_MAX_DOCS`` corpus ids, or a
-    probe that overflows Spark's result type (int, long for long ids;
-    under ANSI the distributed plan raises)."""
+def _local_pairs(docs, positives, id_col, m, n_buckets):
+    """contrastive_pairs' rows from the carried pair columns of
+    ``positives`` and the corpus ids the kernel that made them read, or
+    None for an input the distributed plan must keep: positives not
+    carried from a kernel that read every ``id_col`` of ``docs``, ``m``
+    or ``n_buckets`` below 1, ids that are not integral, or a probe
+    that overflows Spark's result type (int, long for long ids; under
+    ANSI the distributed plan raises)."""
     held = _local_frame.columns(positives)
-    if src not in held or dst not in held or min(m, n_buckets) < 1:
+    cand = _local_frame.ids_read(positives, docs, id_col)
+    if cand is None or min(m, n_buckets) < 1:
         return None
-    fa, fb = positives.schema[src], positives.schema[dst]
-    ids = docs.select(id_col)
+    fa, fb = positives.schema["doc_id_a"], positives.schema["doc_id_b"]
     t = fa.dataType
-    if not isinstance(t, IntegralType) or not (
-        t == fb.dataType == ids.schema[0].dataType
-    ):
+    if not isinstance(t, IntegralType):
         return None
-    a = np.asarray(held[src], dtype=np.int64)
-    b = np.asarray(held[dst], dtype=np.int64)
+    a = np.asarray(held["doc_id_a"], dtype=np.int64)
+    b = np.asarray(held["doc_id_b"], dtype=np.int64)
     anchor, partner = np.concatenate([a, b]), np.concatenate([b, a])
     anchors = np.unique(anchor)
     top = int(anchors[-1]) if len(anchors) else 0
     limit = _LONG_MAX if isinstance(t, LongType) else _INT_MAX
     if m * STRIDE > _INT_MAX or top + m * STRIDE > limit:
         return None
-    col = ids.limit(_LOCAL_MAX_DOCS + 1).toArrow().column(0)
-    if len(col) > _LOCAL_MAX_DOCS or col.null_count:
-        return None
-    cand = np.unique(col.to_numpy().astype(np.int64))
+    cand = np.asarray(cand, dtype=np.int64)
     # the first digest byte is the two hex digits _BUCKET_SQL decodes
     byte = [hashlib.md5(b"%d" % c).digest()[0] for c in cand.tolist()]
     # per occupied bucket, its min id; the join drops empty buckets
@@ -156,8 +136,6 @@ def contrastive_pairs(
     id_col: str = "doc_id",
     n_negatives: int = 3,
     n_buckets: int = 64,
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
     """(anchor_id, partner_id, label) rows: every (a, b) positive
     pair contributes both directions as label='pos' (anchor a with
@@ -165,13 +143,12 @@ def contrastive_pairs(
     anchor gets up to ``n_negatives`` label='neg' partners via
     bucket probing.
 
-    ``positives``: (``src``, ``dst``) near-dup pairs (src < dst), e.g.
-    minhash_lsh_candidates thresholded. Passed on as that operator
-    returned it, a driver kernel's frame takes ``_local_pairs``.
+    ``positives``: (doc_id_a, doc_id_b) near-dup pairs
+    (doc_id_a < doc_id_b), as minhash_lsh_candidates (thresholded)
+    returns them for ``docs``. Passed on unchanged, the driver minhash
+    kernel's frame takes ``_local_pairs``.
     """
-    local = _local_pairs(
-        docs, positives, id_col, src, dst, n_negatives, n_buckets
-    )
+    local = _local_pairs(docs, positives, id_col, n_negatives, n_buckets)
     if local is not None:
         return local
     # Distributed path. ``pos`` feeds THREE plan branches (the
@@ -191,13 +168,13 @@ def contrastive_pairs(
     # stage's result waits for the first action.
     pos = (
         positives.select(
-            F.col(src).alias("anchor_id"),
-            F.col(dst).alias("partner_id"),
+            F.col("doc_id_a").alias("anchor_id"),
+            F.col("doc_id_b").alias("partner_id"),
         )
         .unionByName(
             positives.select(
-                F.col(dst).alias("anchor_id"),
-                F.col(src).alias("partner_id"),
+                F.col("doc_id_b").alias("anchor_id"),
+                F.col("doc_id_a").alias("partner_id"),
             )
         )
         .localCheckpoint(eager=False)

@@ -924,9 +924,9 @@ def contrastive_pairs_q(
     map-side-combined aggregate broadcast to the anchors; collision
     and already-positive probes are anti-joined away, never
     silently resampled. The minhash frame is passed unrenamed: from
-    the driver minhash kernel it carries its pair columns, and the
-    negatives are mined on the driver too (a rename would drop
-    them)."""
+    the driver minhash kernel it carries its pair columns and the
+    corpus ids it read, and the negatives are mined on the driver
+    too with no further job (a rename would drop them)."""
     from afg_data_pipeline_spark.operators.contrastive import (
         contrastive_pairs,
     )
@@ -937,12 +937,7 @@ def contrastive_pairs_q(
     docs = read_star_table(spark, "documents", sf_dir)
     positives = minhash_lsh_candidates(docs, threshold=0.5)
     return contrastive_pairs(
-        docs,
-        positives,
-        n_negatives=3,
-        n_buckets=64,
-        src="doc_id_a",
-        dst="doc_id_b",
+        docs, positives, n_negatives=3, n_buckets=64
     )
 
 

@@ -58,9 +58,9 @@ def kernel_frames(monkeypatch):
     calls = []
     real = _local_frame.make
 
-    def spy(*args):
+    def spy(*args, **kw):
         calls.append(1)
-        return real(*args)
+        return real(*args, **kw)
 
     monkeypatch.setattr(_local_frame, "make", spy)
     return calls

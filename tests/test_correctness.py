@@ -254,9 +254,9 @@ def test_one_batch_store():
 def test_one_kernel_carrier():
     """The numpy columns a driver kernel's frame carries to the next
     kernel have one home: ``_kernel_columns`` is written and read only
-    in operators/_local_frame.py (``make`` / ``columns``), so every
-    consumer reads them through ``vars`` and no second copy of the
-    frame builder appears."""
+    in operators/_local_frame.py (``make`` / ``columns`` /
+    ``ids_read``), so every consumer reads them through ``vars`` and
+    no second copy of the frame builder appears."""
     import ast
     import pathlib
 

@@ -1056,22 +1056,24 @@ def _contrastive_reference(doc_ids, pairs, m, n_buckets):
     return sorted(rows + [(a, r, "neg") for a, r in negs]), probed
 
 
-def _carried(spark, pairs, id_type=T.LongType(), nullable=True):
-    """(id_a, id_b) positives as a driver kernel returns them: carrying
-    their columns."""
+def _carried(spark, docs, pairs, id_type=T.LongType(), nullable=True):
+    """(doc_id_a, doc_id_b) positives as the minhash kernel returns them
+    for ``docs``: carrying their columns and every doc_id it read."""
     from afg_data_pipeline_spark.operators import _local_frame
 
     dtype = object if isinstance(id_type, T.StringType) else np.int64
+    ids = [r.doc_id for r in docs.collect()]
     return _local_frame.make(
         spark,
         [
-            T.StructField("id_a", id_type, nullable),
-            T.StructField("id_b", id_type, nullable),
+            T.StructField("doc_id_a", id_type, nullable),
+            T.StructField("doc_id_b", id_type, nullable),
         ],
         [
             np.array([a for a, _ in pairs], dtype=dtype),
             np.array([b for _, b in pairs], dtype=dtype),
         ],
+        read=(docs, "doc_id", np.array(ids, dtype=dtype)),
     )
 
 
@@ -1089,8 +1091,8 @@ class TestContrastivePairs:
         want, _ = _contrastive_reference(range(40), pairs, 3, 16)
         # the distributed plan, then the driver kernel
         for positives in (
-            spark.createDataFrame(pairs, "id_a long, id_b long"),
-            _carried(spark, pairs),
+            spark.createDataFrame(pairs, "doc_id_a long, doc_id_b long"),
+            _carried(spark, docs, pairs),
         ):
 
             def run():
@@ -1159,9 +1161,7 @@ class TestContrastiveKernel:
 
         docs = read_star_table(spark, "documents", SF_DIR)
         positives = minhash_lsh_candidates(docs, threshold=0.5)
-        rows, ran = self._compare(
-            monkeypatch, docs, positives, src="doc_id_a", dst="doc_id_b"
-        )
+        rows, ran = self._compare(monkeypatch, docs, positives)
         assert ran == 1
         assert {r.label for r in rows} == {"pos", "neg"}
 
@@ -1170,8 +1170,7 @@ class TestContrastiveKernel:
         docs = _near_dup_docs(spark, id_type)
         positives = minhash_lsh_candidates(docs)
         pairs = [tuple(r) for r in positives.select("*").collect()]
-        kw = dict(src="doc_id_a", dst="doc_id_b", n_buckets=8)
-        rows, ran = self._compare(monkeypatch, docs, positives, **kw)
+        rows, ran = self._compare(monkeypatch, docs, positives, n_buckets=8)
         assert ran == 1
         ids = [r.doc_id for r in docs.collect()]
         want, _ = _contrastive_reference(
@@ -1207,7 +1206,10 @@ class TestContrastiveKernel:
             [(i,) for i in range(n_docs)], "doc_id long"
         )
         rows, ran = self._compare(
-            monkeypatch, docs, _carried(spark, pairs), n_buckets=n_buckets
+            monkeypatch,
+            docs,
+            _carried(spark, docs, pairs),
+            n_buckets=n_buckets,
         )
         assert ran == 1
         want, probed = _contrastive_reference(
@@ -1224,36 +1226,38 @@ class TestContrastiveKernel:
         [
             "null-doc-id",
             "string-ids",
-            "mismatched-id-types",
+            "other-docs",
             "zero-buckets",
             "zero-negatives",
-            "doc-bound-one-below",
         ],
     )
     def test_fallbacks(self, spark, monkeypatch, case):
-        from afg_data_pipeline_spark.operators import contrastive
-
         ids = list(range(40))
         pairs, kw = [(1, 5), (2, 9)], {"n_buckets": 16}
         doc_type, pos_type = "long", T.LongType()
-        if case == "null-doc-id":
-            ids[7] = None
-        elif case == "string-ids":
+        if case == "string-ids":
             ids = [str(i) for i in ids]
             pairs = [(str(a), str(b)) for a, b in pairs]
             doc_type, pos_type = "string", T.StringType()
-        elif case == "mismatched-id-types":
-            doc_type = "int"
         elif case == "zero-buckets":
             kw["n_buckets"] = 0
         elif case == "zero-negatives":
             kw["n_negatives"] = 0
-        else:
-            monkeypatch.setattr(contrastive, "_LOCAL_MAX_DOCS", 39)
         docs = spark.createDataFrame(
             [(i,) for i in ids], f"doc_id {doc_type}"
         )
-        positives = _carried(spark, pairs, pos_type)
+        positives = _carried(spark, docs, pairs, pos_type)
+        if case == "null-doc-id":
+            # the minhash kernel refuses the corpus: nothing is carried
+            docs = _near_dup_docs(spark, "long").union(
+                spark.createDataFrame(
+                    [(None, "a b c")], "doc_id long, text string"
+                )
+            )
+            positives = minhash_lsh_candidates(docs)
+        elif case == "other-docs":
+            # the same ids in a frame the minhash kernel did not read
+            docs = spark.createDataFrame([(i,) for i in ids], "doc_id int")
         _, ran = self._compare(monkeypatch, docs, positives, **kw)
         assert ran == 0
 
@@ -1275,10 +1279,10 @@ class TestContrastiveKernel:
         )
         t = T.IntegerType() if id_type == "int" else T.LongType()
         _, ran = self._compare(
-            monkeypatch, docs, _carried(spark, [(0, fits)], t)
+            monkeypatch, docs, _carried(spark, docs, [(0, fits)], t)
         )
         assert ran == 1
-        over = _carried(spark, [(0, fits + 1)], t)
+        over = _carried(spark, docs, [(0, fits + 1)], t)
         _, ran = self._compare(monkeypatch, docs, over)
         assert ran == 0  # wraps without ANSI, on both paths
         old = spark.conf.get("spark.sql.ansi.enabled")
@@ -1295,8 +1299,8 @@ class TestContrastiveKernel:
 
 class TestContrastiveJobs:
     """Pins the registered query on the kernels: the minhash shingle
-    collect and the corpus id collect are its only builder jobs, and
-    its executed plan is a local scan. Renaming the minhash frame
+    collect is its only builder job (contrastive_pairs reuses the ids
+    it read), and its executed plan is a local scan. Renaming the minhash frame
     before contrastive_pairs drops the carried columns and turns this
     red (the distributed plan's checkpoint runs its shuffles)."""
 
@@ -1305,7 +1309,7 @@ class TestContrastiveJobs:
         from tests.conftest import SF_DIR, builder_jobs
 
         build = REGISTRY["contrastive_pairs"].fn
-        assert builder_jobs(spark, lambda: build(spark, SF_DIR)) == 2
+        assert builder_jobs(spark, lambda: build(spark, SF_DIR)) == 1
 
     def test_plan_is_one_local_scan(self, spark):
         from afg_data_pipeline_spark.plans import REGISTRY
